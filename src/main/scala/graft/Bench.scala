@@ -50,9 +50,18 @@ object Bench {
     spark.catalog.clearCache()
     // Dev-only subset filter (comma-separated names); unset → full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A query that throws is recorded as failed — never timed as if it
+    // had run — kept out of `total`, listed in the output line, and
+    // makes the run exit non-zero.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def timeOne(name: String,
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // drop any frames a query persisted so later queries aren't timed
       // under another query's cache pressure (outside the timed span)
@@ -65,7 +74,7 @@ object Bench {
     // meaningless (same bytecode swung 0.6s <-> 8.9s with run position).
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => (name, fn, timeOne(fn)) }
+      .map { case (name, fn) => (name, fn, timeOne(name, fn)) }
     // Steady-state min-of-2 for EVERY query: same-code full-suite totals
     // measured 97-125 s across runs when most queries were single-shot —
     // the scheduling/GC noise that swamped round-over-round deltas lives
@@ -77,8 +86,8 @@ object Bench {
     // The second pass roughly doubles bench wall-clock; that is the
     // price of a usable instrument (SCALE.md's A/Bs already pay it).
     val results = firstPass.map { case (name, fn, t1) =>
-      name -> math.min(t1, timeOne(fn))
-    }.toMap
+      name -> math.min(t1, timeOne(name, fn))
+    }.toMap.removedAll(failed)
     // The driver records only the LAST 2000 chars of output and parses the
     // JSON line out of that window; the runner's sbt may print a
     // "[success] Total time" trailer (~75 chars) after our line inside
@@ -99,6 +108,7 @@ object Bench {
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val sfName = new java.io.File(sfDir).getName
+    val failedJson = failed.map(k => s"\"$k\"").mkString("[", ",", "]")
     def line(cut: Double, dec: Int): String = {
       val slow = results.toSeq.filter(_._2 >= cut).sortBy(-_._2)
       val fastN = results.size - slow.size
@@ -107,6 +117,7 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(dec)(total)},"unit":"sec","queries":$qs,""" +
         s""""fast_n":$fastN,"fast_sec":${fmt(dec)(fastSec)},""" +
+        s""""failed":$failedJson,""" +
         s""""load_start":${fmt(2)(loadStart)},"load_end":${fmt(2)(loadAvg())},""" +
         s""""note":"queries under ${fmt(2)(cut)}s each rolled into fast_n/fast_sec","sf":"$sfName"}"""
     }
@@ -115,5 +126,6 @@ object Bench {
       .find(_.length <= 1900).getOrElse(line(2.0, 1))
     println(out)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

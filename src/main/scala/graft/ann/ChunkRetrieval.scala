@@ -546,9 +546,7 @@ object ChunkRetrieval {
     chunkDedupFrom(chunksFrom(ww, factor), factor, threshold)
   }
 
-  /** [[chunkDedup]] over an already-built chunk frame — the entry
-    * [[survivorChunks]] uses so the serve gates share ONE chunk build
-    * (and one factor probe) with the dedup hiding under them. */
+  /** [[chunkDedup]] over an already-built chunk frame and its factor. */
   private def chunkDedupFrom(ch: DataFrame, factor: Long,
                              threshold: Double): DataFrame = {
     val cc = chunkCells(ch)
@@ -812,11 +810,16 @@ object ChunkRetrieval {
     // AQE coalesces the (small-bytes) checkpointed embed shuffle to ONE
     // partition, which would run the ~sampleTarget² brute-force cosines
     // on a single core (measured: a 7.9 s one-task stage at sf0.1). An
-    // explicit repartition of the ~2000-row sample is respected by AQE
-    // and spreads the quadratic loop across the executor cores; the
-    // downstream aggregate is commutative, so values are unaffected.
+    // explicit repartition of the sample is respected by AQE and spreads
+    // the quadratic loop across the executor cores: one partition per
+    // expected sample row (n / mod), capped at the session's shuffle
+    // parallelism. The downstream aggregate is commutative, so values
+    // are unaffected.
+    val nPart = math.max(1L, math.min(
+      documents.sparkSession.sessionState.conf.numShufflePartitions.toLong,
+      n / mod)).toInt
     val feat = base.filter(pmod(hv, lit(mod)) === 0)
-      .repartition(32)
+      .repartition(nPart)
       .select(col("chunk_id"), col("p"), col("nsq"),
         array((0 until mpBandCount).map(k =>
           cellAt("pw", k * outDims, bits)): _*).as("bands"))
@@ -917,27 +920,10 @@ object ChunkRetrieval {
       .orderBy("probe_id")
   }
 
-  /** The chunk frame minus semantically dominated chunks. Chunks with
-    * no embedding (all tokens cancelled, nsq = 0) cannot be scored for
-    * duplication and pass through — only a DOMINATED verdict removes a
-    * chunk. */
-  private def survivorChunks(ww: DataFrame, factor: Long,
-                             threshold: Double): DataFrame = {
-    val ch = chunksFrom(ww, factor)
-    // retrieveFrom reads its chunk frame four times (vec-arm embeddings,
-    // chunk-df, tf, corpus stats); each read would otherwise re-run the
-    // ENTIRE dedup chain hiding under this anti-join. The dominated-id
-    // frame is the small side of the verdict (dup rate × corpus), so
-    // pinning it makes the anti-join the only repeated work — and gives
-    // AQE accurate stats to pick a broadcast anti-join when it fits
-    // (at 100 TB a huge dup set correctly falls back to shuffle).
-    val dominated = chunkDedupFrom(ch, factor, threshold)
-      .filter(!col("keep")).select(col("chunk_id"))
-      .localCheckpoint(false)
-    ch.join(dominated, Seq("chunk_id"), "left_anti")
-  }
-
-  /** [[survivorChunks]] AND the survivors' embedding frame — the serve
+  /** The chunk frame minus semantically dominated chunks AND the
+    * survivors' embedding frame. Chunks with no embedding (all tokens
+    * cancelled, nsq = 0) cannot be scored for duplication and pass
+    * through — only a DOMINATED verdict removes a chunk. The serve
     * entries' seam: the dedup chain under the survivor verdict already
     * embedded EVERY chunk (the chunkCells pinned base), so re-embedding
     * the survivor chunks from their words for the vector arm paid the
@@ -1173,9 +1159,8 @@ object ChunkRetrieval {
                        arm: Int = 50, rrfK: Int = 60): DataFrame = {
     val ww = wordsFrame(documents)
     val factor = factorFrom(ww)
-    // pinned parts: saveLarge evaluates each part TWICE (content stamp,
-    // then the write) and the four parts share one chunking — without
-    // the boundary this gate re-ran the raw-text lineage eight times
+    // pinned parts: the four parts share one chunking — without the
+    // boundary each part's saveLarge would re-run the raw-text lineage
     val (ce, postings, dfAll, stats) = pinnedIndexParts(chunksFrom(ww, factor))
     val tmp = java.nio.file.Files.createTempDirectory("graft-index-parts")
     // a shutdown hook that WALKS the tree, not File.deleteOnExit:
@@ -1241,17 +1226,8 @@ object ChunkRetrieval {
     c.join(d, Seq("probe_id"), "full_outer").orderBy("probe_id")
   }
 
-  // dev-probe seams (graft.tools.Probe): the private stages, unchanged
-  private[graft] def probeHeap(scored: DataFrame, k: Int): DataFrame =
-    Ann.topkPerProbe(scored, k)
-  private[graft] def probeVecArm(docs: DataFrame): DataFrame = {
-    val f = chunkFactorFor(docs); vecArm(chunks(docs, f), docs, 10, 50, f)
-  }
-  private[graft] def probeLexArm(docs: DataFrame): DataFrame =
-    lexArm(chunks(docs, chunkFactorFor(docs)), docs, 10, 8, 50)
-  private[graft] def probeFused(docs: DataFrame): DataFrame = {
-    val f = chunkFactorFor(docs); fused(chunks(docs, f), docs, 10, 8, 50, 60, f)
-  }
+  // test seams (Round14/15/16Spec): private stages of the chunk
+  // pipelines, exposed for plan-shape and pair-set assertions
   private[graft] def probeVecArmCell(docs: DataFrame): DataFrame = {
     val f = chunkFactorFor(docs)
     vecArmCellFromCe(chunkEmbeds(chunks(docs, f)), docs, 10, 50, f, 2)
@@ -1264,10 +1240,6 @@ object ChunkRetrieval {
   }
   private[graft] def probeDominated(docs: DataFrame): DataFrame =
     chunkDedup(docs).filter(!col("keep")).select(col("chunk_id"))
-  private[graft] def probeSurvivors(docs: DataFrame): DataFrame = {
-    val ww = wordsFrame(docs)
-    survivorChunks(ww, factorFrom(ww), 0.95)
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_chunk_retrieval" -> ((s, d) => chunkRetrieval(Tables.documents(s, d))),

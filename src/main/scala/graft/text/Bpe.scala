@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,18 +23,21 @@ import graft.functions.Fns._
   * stream is the whitespace word sequence, and document boundaries are
   * the only hard fences, exactly like the bigram devices).
   *
+  * [[mergeRounds]] is the ONE merge-round kernel of both BPE grains:
+  * this word grain (weight 1, merges join with ' ') and
+  * [[SubwordBpe]]'s character grain (weight = word count, merges
+  * concatenate) are calls to it with different state, weight and
+  * joiner, and [[foldSql]] is the one merge fold every training round,
+  * replay, apply mart and streaming twin runs.
+  *
   * Scale design (100 TB):
-  *   - State is (doc_id, toks array), re-checkpointed per round. Each
-  *     round's ONLY shuffle is the pair count — hash partial-aggregated
-  *     map-side, so the exchange moves at most partitions × realized-pair
-  *     -vocab rows, never the token stream.
-  *   - The winning pair is a ONE-ROW broadcast; the merge itself is a
-  *     row-local array fold (no shuffle), with an `array_contains` quick
-  *     reject so documents not containing the pair skip the O(len) fold.
-  *   - The merge fold `last(acc) == a && next == b → replace last` is
-  *     exactly greedy leftmost non-overlapping BPE: the merged token
-  *     "a b" is strictly longer than `a`, so a fresh merge can never
-  *     chain into the next position within the same round.
+  *   - State is (key, symbol array), re-checkpointed per round. Each
+  *     round's ONLY shuffle is the weighted pair count — hash
+  *     partial-aggregated map-side, so the exchange moves at most
+  *     partitions × realized-pair-vocab rows, never the token stream.
+  *   - The round's selected pairs become a ONE-ROW broadcast merge
+  *     artifact; the merge itself is a row-local string replace (no
+  *     shuffle).
   *   - A fixed round count keeps the job graph static; per-round plans
   *     stay O(1) because state lineage is cut at each checkpoint. On a
   *     real cluster the localCheckpoints become reliable checkpoints to
@@ -43,22 +46,24 @@ import graft.functions.Fns._
   *     trainers amortize it by training on a sampled shard (compose with
   *     q_hash_sample) and applying corpus-wide via [[bpeApply]].
   *
-  * Oracle: the same `rounds` merge rounds unrolled as chained CTEs (the
-  * q_pagerank device) over a separator-framed string form of the token
-  * stream, where one `replace(s, SEP||a||SEP||SEP||b||SEP,
-  * SEP||a||' '||b||SEP)` (SEP = chr(1)) performs the identical greedy
-  * leftmost non-overlapping merge: both engines' `replace` scans left to
-  * right and never rescans replaced output, the pattern consumes one
-  * frame char from each boundary and the replacement restores it, so
-  * disjoint consecutive occurrences stay matchable. U+0001 cannot appear
-  * in a token of this corpus (spec-asserted) and merged tokens only ever
-  * add ' '; BpeSpec pins the fold form == the string form on real data.
+  * Merge device (both engines): a separator-framed string form of the
+  * token stream, where one `replace(s, SEP||a||SEP||SEP||b||SEP,
+  * SEP||a||joiner||b||SEP)` (SEP = chr(1)) performs the greedy leftmost
+  * non-overlapping merge: both engines' `replace` scans left to right
+  * and never rescans replaced output, the pattern consumes one frame
+  * char from each boundary and the replacement restores it, so disjoint
+  * consecutive occurrences stay matchable. U+0001 cannot appear in a
+  * token of this corpus (spec-asserted); BpeSpec and BpeKernelSpec pin
+  * the string form == a reference greedy array fold. The oracle runs
+  * the same `rounds` merge rounds unrolled as chained CTEs (the
+  * q_pagerank device).
   */
 object Bpe {
 
   /** Token separator of the canonical string form (oracle + tok_hash):
     * never produced by normText's single-space word stream. */
   private val SEP = "\u0001"
+  private val SEP2 = SEP + SEP
 
   /** (doc_id, toks): the normalized word stream as BPE's round-0 state.
     * NULL and whitespace-only texts drop (they have no tokens; keeping
@@ -69,34 +74,96 @@ object Bpe {
       .filter(col("norm") =!= "")
       .select(col("doc_id"), col("words").as("toks"))
 
-  /** One greedy leftmost non-overlapping merge of (ma, mb) → "ma mb"
-    * applied to `toks` — the ORACLE's separator-framed string-replace
-    * device run on the Spark side too: frame the token array with
-    * chr(1)||chr(1) between tokens and at both ends, replace
-    * SEP·a·SEP·SEP·b·SEP with SEP·a·' '·b·SEP (the pattern eats one
-    * frame char per side and the replacement restores it, so adjacent
-    * disjoint occurrences stay matchable), split back. Both engines'
-    * replace scans left-to-right without rescanning its own output —
-    * exactly the greedy fold's semantics (BpeSpec pins fold == replace
-    * on crafted chains). The earlier array `aggregate(...)` fold built
-    * the accumulator with per-element `concat` — O(n²) per document per
-    * round, interpreted (HOFs are CodegenFallback) — where `replace` /
-    * `split` are codegen'd O(n) string scans. A NULL pair
-    * (empty-corpus round) is the identity. */
-  private val SEP2 = SEP + SEP
-  private def framedSql(src: String): String =
-    s"concat('$SEP2', concat_ws('$SEP2', $src), '$SEP2')"
-  private def unframeSql(src: String): String =
-    s"filter(split($src, '$SEP2'), x -> x <> '')"
-  private val mergeFold =
-    s"""IF(ma IS NULL, toks,
-        ${unframeSql(s"""replace(${framedSql("toks")},
-           concat('$SEP', ma, '$SEP2', mb, '$SEP'),
-           concat('$SEP', ma, ' ', mb, '$SEP'))""")})"""
+  /** The merge fold: replay the one-row artifact `ms` (see
+    * [[mergeArtifact]]) in its rank order over the symbol-array SQL
+    * expression `syms` — frame the array with chr(1)||chr(1) between
+    * symbols and at both ends, run one `replace` per merge (see the
+    * object doc), split back once at the end. `replace` and `split` are
+    * O(n) string scans; an empty artifact is the identity. */
+  private[text] def foldSql(syms: String, joiner: String): String =
+    s"""filter(split(aggregate(ms,
+         concat('$SEP2', concat_ws('$SEP2', $syms), '$SEP2'), (acc, m) ->
+         replace(acc, concat('$SEP', m.tok_a, '$SEP2', m.tok_b, '$SEP'),
+                 concat('$SEP', m.tok_a, '$joiner', m.tok_b, '$SEP'))),
+         '$SEP2'), x -> x <> '')"""
 
-  /** The training loop; returns (merge table, final token state). The
-    * final state stays checkpointed — [[bpeTrain]] releases it, BpeSpec
-    * reads it to pin apply == train. */
+  /** A merge table as ONE row `ms`: its (round[, batch_rank], tok_a,
+    * tok_b) structs sorted, i.e. in application order. The artifact is
+    * `rounds × cap` long by construction, so it broadcasts at any corpus
+    * size; a table without `batch_rank` is one merge per round. */
+  private[text] def mergeArtifact(merges: DataFrame): DataFrame = {
+    val rank = Seq("round", "batch_rank").filter(merges.columns.contains)
+    merges.agg(array_sort(collect_list(
+      struct((rank :+ "tok_a" :+ "tok_b").map(col): _*))).as("ms"))
+  }
+
+  /** The merge-round kernel of both grains; returns (merge table, final
+    * state). Per round: the `weight`-ed count of adjacent `symbols`
+    * pairs, then up to `cap` pairs ranked by (count desc, a, b) that no
+    * token-sharing rival beats (locally maximal, hence pairwise
+    * token-disjoint: two overlapping survivors would each have to beat
+    * the other), folded into the state in rank order by [[foldSql]].
+    * The global top pair always survives and ranks first, so at
+    * `cap` = 1 it is the whole selection and the rival self-join is
+    * skipped — one eager checkpoint per round. At `cap` > 1 merges per
+    * driver round-trip go from 1 to cap, with every count of a batch
+    * measured at round start (the standard batched-BPE approximation).
+    * Table: (round, batch_rank, tok_a, tok_b, merged, pair_n), pair_n
+    * the pair's weighted count at merge time. The final state stays
+    * checkpointed — callers release or read it (the specs pin
+    * apply == train on it). */
+  private[graft] def mergeRounds(state0: DataFrame, symbols: String,
+                                 weight: Column, joiner: String,
+                                 rounds: Int, cap: Int): (DataFrame, DataFrame) = {
+    var state = state0.localCheckpoint(false)
+    val held = scala.collection.mutable.ArrayBuffer(state)
+    var merges = Vector.empty[DataFrame]
+    for (r <- 1 to rounds) {
+      val pairs = state.filter(size(col(symbols)) >= 2)
+        .select(weight.as("w"), explode(expr(s"transform(sequence(0, size($symbols) - 2)," +
+          s" i -> struct($symbols[i] AS a, $symbols[i+1] AS b))")).as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("w")).as("cnt"))
+      val cands = if (cap == 1) pairs else {
+        // explode each pair to its tokens and equi-join on the shared
+        // token; a pair any overlapping rival outranks is out
+        val counted = pairs.localCheckpoint(false)
+        held += counted
+        val toks = counted.select(col("a"), col("b"),
+          struct((-col("cnt")).as("c"), col("a"), col("b")).as("k"),
+          explode(array(col("a"), col("b"))).as("t"))
+        val beaten = toks.join(toks.select(col("t"), col("k").as("qk")), Seq("t"))
+          .filter(col("qk") < col("k")).select(col("a"), col("b")).distinct()
+        counted.join(beaten, Seq("a", "b"), "left_anti")
+      }
+      // the round's merge artifact, checkpointed eagerly: runs this
+      // round's pair count once and cuts the lineage so the table union
+      // never recounts. The structs sort by (-count, a, b), which is the
+      // batch's rank order; an exhausted round is one row with an empty
+      // batch, which folds as the identity.
+      val art = cands.orderBy(col("cnt").desc, col("a"), col("b")).limit(cap)
+        .agg(array_sort(collect_list(struct((-col("cnt")).as("neg_n"),
+          col("a").as("tok_a"), col("b").as("tok_b")))).as("ms"))
+        .localCheckpoint()
+      held += art
+      merges :+= art.select(posexplode(col("ms")))
+        .select(lit(r).as("round"), (col("pos") + 1).as("batch_rank"),
+          col("col.tok_a"), col("col.tok_b"),
+          concat(col("col.tok_a"), lit(joiner), col("col.tok_b")).as("merged"),
+          (-col("col.neg_n")).as("pair_n"))
+      state = state.crossJoin(broadcast(art))
+        .withColumn(symbols, expr(foldSql(symbols, joiner)))
+        .drop("ms")
+        .localCheckpoint(false)
+      held += state
+    }
+    val table = merges.reduce(_.unionByName(_))
+      .orderBy("round", "batch_rank").localCheckpoint()
+    held.dropRight(1).foreach(_.unpersist())
+    (table, state)
+  }
+
+  /** Word-grain training; returns (merge table, final token state). */
   private[graft] def trainWithState(documents: DataFrame,
                                     rounds: Int): (DataFrame, DataFrame) = {
     // The round-0 checkpoint inherits the SCAN's split count (3 tasks at
@@ -114,39 +181,9 @@ object Bpe {
     val nPart = math.max(1, math.min(
       documents.sparkSession.sessionState.conf.numShufflePartitions,
       ts.rdd.getNumPartitions * 2))
-    var state = ts.repartition(nPart, col("doc_id")).localCheckpoint(false)
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    intermediates += state
-    var merges = Vector.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val pairs = state.filter(size(col("toks")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(0, size(toks) - 2), i -> struct(toks[i] AS a, toks[i+1] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("n"))
-      // TakeOrderedAndProject keeps one candidate per partition; the
-      // eager 1-row checkpoint runs this round's pair-count job and cuts
-      // the lineage so the union below never recounts.
-      val top = pairs.orderBy(col("n").desc, col("a"), col("b")).limit(1)
-        .localCheckpoint()
-      intermediates += top
-      merges :+= top.select(lit(r).as("round"), col("a").as("tok_a"),
-        col("b").as("tok_b"),
-        concat(col("a"), lit(" "), col("b")).as("merged"),
-        col("n").as("pair_n"))
-      // LEFT join on TRUE (not crossJoin): an exhausted corpus yields an
-      // EMPTY top and the state must pass through unchanged, not vanish.
-      state = state
-        .join(broadcast(top.select(col("a").as("ma"), col("b").as("mb"))),
-          lit(true), "left")
-        .withColumn("toks", expr(mergeFold))
-        .select(col("doc_id"), col("toks"))
-        .localCheckpoint(false)
-      intermediates += state
-    }
-    val table = merges.reduce(_.unionByName(_)).orderBy("round").localCheckpoint()
-    intermediates.dropRight(1).foreach(_.unpersist())
-    (table, state)
+    val (table, state) = mergeRounds(ts.repartition(nPart, col("doc_id")),
+      "toks", lit(1L), " ", rounds, cap = 1)
+    (table.drop("batch_rank"), state)
   }
 
   /** The learned merge table: one row per round —
@@ -161,34 +198,18 @@ object Bpe {
   }
 
   /** Row-local application of a learned merge table: (doc_id, toks)
-    * after replaying every merge in rank order. The table collapses to
-    * ONE broadcast row of structs (the artifact never grows with the
-    * corpus — it is `rounds` long by construction), and each document
-    * folds through the ranked merges locally: zero shuffles beyond the
-    * broadcast. Replaying rank-ordered merges from round 0 reproduces
-    * the training-time state exactly (each round's state is one full
-    * greedy application ahead of the previous — the classical BPE
-    * train/apply identity, spec-pinned). */
-  /** The rank-ordered replay fold over the broadcast merge artifact —
-    * row-local, so it runs identically over a batch corpus and a
-    * document STREAM (stateless; the artifact is stream-static). The
-    * replay folds over the separator-FRAMED string (one codegen'd
-    * `replace` per merge — the [[mergeFold]] device), splitting back to
-    * tokens once at the end instead of rebuilding an array per merge. */
-  private val applyFold = unframeSql(
-    s"""aggregate(ms, ${framedSql("toks")}, (acc, m) ->
-         replace(acc, concat('$SEP', m.tok_a, '$SEP2', m.tok_b, '$SEP'),
-                 concat('$SEP', m.tok_a, ' ', m.tok_b, '$SEP')))""")
-
-  private def mergeArtifact(merges: DataFrame): DataFrame =
-    merges.agg(array_sort(collect_list(
-      struct(col("round"), col("tok_a"), col("tok_b")))).as("ms"))
-
+    * after replaying every merge in rank order over the broadcast
+    * artifact — zero shuffles beyond the broadcast, and stateless, so
+    * it runs identically over a batch corpus and a document STREAM (the
+    * artifact is stream-static). Replaying rank-ordered merges from
+    * round 0 reproduces the training-time state exactly (each round's
+    * state is one full greedy application ahead of the previous — the
+    * classical BPE train/apply identity, spec-pinned). */
   private[graft] def applyTokens(documents: DataFrame,
                                  merges: DataFrame): DataFrame =
     tokenState(documents)
       .crossJoin(broadcast(mergeArtifact(merges)))
-      .withColumn("toks", expr(applyFold))
+      .withColumn("toks", expr(foldSql("toks", " ")))
       .select(col("doc_id"), col("toks"))
 
   /** One-pass apply mart (the [[bpeApply]] columns computed without the
@@ -199,7 +220,7 @@ object Bpe {
                                merges: DataFrame): DataFrame =
     tokenState(documents)
       .crossJoin(broadcast(mergeArtifact(merges)))
-      .withColumn("toks2", expr(applyFold))
+      .withColumn("toks2", expr(foldSql("toks", " ")))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_words"),
         size(col("toks2")).cast("long").as("n_tokens"),

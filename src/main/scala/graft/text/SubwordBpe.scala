@@ -28,29 +28,23 @@ import graft.functions.Fns._
   * (each word is its own row), so no document fencing is needed.
   *
   * Scale design (100 TB):
-  *   - Round state is (word, n, syms), localCheckpoint'ed per round
-  *     (reliable checkpoints on a real cluster); each round's ONLY
-  *     shuffle is the weighted pair count over the word table —
-  *     map-side combined, exchange bounded by the realized pair vocab.
-  *   - The winner is a ONE-ROW broadcast; the merge is a row-local
-  *     greedy leftmost non-overlapping array fold with an
-  *     `array_contains` quick reject (shared shape with [[Bpe]]).
-  *   - Application is row-local per document (zero shuffles beyond the
-  *     broadcast merge artifact, streaming-safe); a corpus that wants
-  *     to amortize further materializes the word→subwords table once
-  *     (vocab-bounded) and joins, but the gate keeps the row-local
-  *     form so batch and stream twins share one expression.
+  *   - Training is [[Bpe.mergeRounds]] over the word table: pair counts
+  *     weighted by the word's corpus count, merges concatenated (joiner
+  *     ""), one merge per round at cap 1, and a batch of up to
+  *     `cap` token-disjoint merges per round in [[subwordTrainBatched]].
+  *   - Application is the same [[Bpe.foldSql]] replay per word of each
+  *     document (zero shuffles beyond the broadcast merge artifact,
+  *     streaming-safe); a corpus that wants to amortize further
+  *     materializes the word→subwords table once (vocab-bounded) and
+  *     joins, but the gate keeps the row-local form so batch and stream
+  *     twins share one expression.
   *
   * Oracle: the [[Bpe]] separator-framed string device verbatim, minus
   * the space in the replacement (subword merges concatenate): one
   * `replace(s, SEP||a||SEP||SEP||b||SEP, SEP||a||b||SEP)` per round
   * over per-WORD framed strings, pair counts weighted by the word's
-  * corpus count. The boundary-alignment and greedy-equivalence
-  * arguments are [[Bpe]]'s own (tokens are SEP-free; both engines'
-  * replace scans left-to-right without rescanning output); merged
-  * tokens are length ≥ 2 while round-0 symbols are single characters
-  * or the marker, so a merge can never chain into itself within a
-  * round. SubwordBpeSpec pins determinism, the train/apply identity,
+  * corpus count — the Spark side runs the identical device.
+  * SubwordBpeSpec pins determinism, the train/apply identity,
   * OOV-freedom (every word reconstructs exactly from its subwords),
   * and the crafted "aaaaa" overlap case.
   */
@@ -80,166 +74,40 @@ object SubwordBpe {
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .withColumn("syms", expr(symsOf("word")))
 
-  /** One greedy leftmost non-overlapping merge of (ma, mb) → ma||mb on
-    * `syms` — [[Bpe]]'s fold with subword concatenation. A NULL pair
-    * (exhausted vocabulary round) is the identity. */
-  private val mergeFold =
-    """IF(array_contains(syms, ma) AND array_contains(syms, mb),
-         aggregate(syms, CAST(array() AS array<string>), (acc, t) ->
-           IF(size(acc) > 0 AND element_at(acc, -1) = ma AND t = mb,
-              concat(slice(acc, 1, size(acc) - 1), array(concat(ma, mb))),
-              concat(acc, array(t)))),
-         syms)"""
-
   /** The training loop; returns (merge table, final word state). The
     * final state stays checkpointed — callers release or read it
     * (SubwordBpeSpec pins apply == train on it). */
-  private[graft] def trainWithState(documents: DataFrame,
-                                    rounds: Int): (DataFrame, DataFrame) = {
-    var state = wordState(documents).localCheckpoint(false)
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    intermediates += state
-    var merges = Vector.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val pairs = state.filter(size(col("syms")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(0, size(syms) - 2), i -> struct(syms[i] AS a, syms[i+1] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-      // eager 1-row checkpoint: runs this round's pair count once and
-      // cuts the lineage so the table union never recounts
-      val top = pairs.orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .localCheckpoint()
-      intermediates += top
-      merges :+= top.select(lit(r).as("round"), col("a").as("tok_a"),
-        col("b").as("tok_b"), concat(col("a"), col("b")).as("merged"),
-        col("cnt").as("pair_n"))
-      // LEFT join on TRUE (not crossJoin): an exhausted vocabulary
-      // yields an EMPTY top and the state must pass through unchanged
-      state = state
-        .join(broadcast(top.select(col("a").as("ma"), col("b").as("mb"))),
-          lit(true), "left")
-        .withColumn("syms", expr(mergeFold))
-        .select(col("word"), col("n"), col("syms"))
-        .localCheckpoint(false)
-      intermediates += state
-    }
-    val table = merges.reduce(_.unionByName(_)).orderBy("round").localCheckpoint()
-    intermediates.dropRight(1).foreach(_.unpersist())
-    (table, state)
-  }
+  private[graft] def trainWithState(documents: DataFrame, rounds: Int,
+                                    cap: Int = 1): (DataFrame, DataFrame) =
+    Bpe.mergeRounds(wordState(documents), "syms", col("n"), "", rounds, cap)
 
   /** The learned subword merge table: one row per round —
     * (round, tok_a, tok_b, merged, pair_n), pair_n the weighted corpus
     * count of the winning pair at merge time. */
-  def subwordTrain(documents: DataFrame, rounds: Int = defaultRounds): DataFrame = {
-    val (table, finalState) = trainWithState(documents, rounds)
-    finalState.unpersist()
-    table
-  }
+  def subwordTrain(documents: DataFrame, rounds: Int = defaultRounds): DataFrame =
+    subwordTrainBatched(documents, rounds, cap = 1).drop("batch_rank")
 
   /** BATCHED subword training — the driver-latency fix for production
     * merge counts: the sequential loop pays one driver round-trip +
     * checkpoint PER MERGE, which binds a ~30k-merge production
     * vocabulary on the driver long before any executor is busy. Each
-    * batched round instead selects the LOCALLY-MAXIMAL pair set — a
-    * pair survives iff it beats (count desc, then (a, b) asc) every
-    * pair sharing a token with it — which is pairwise token-disjoint by
-    * construction (two overlapping survivors would have to beat each
-    * other), ranks it, keeps ≤ `cap`, and applies the whole batch in
-    * rank order in ONE pass over the vocab-bounded word table: merges
-    * per round-trip goes from 1 to cap. The global max always survives
-    * selection and ranks first, so cap = 1 reproduces the sequential
-    * trainer EXACTLY (spec-pinned on the real corpus); counts are
-    * measured at round start for every merge of a batch, the standard
-    * batched-BPE approximation. Selection work is one equi-join of the
-    * pair table against itself on the shared token — vocab-bounded,
-    * like everything after the initial word count.
+    * batched round merges up to `cap` locally-maximal, token-disjoint
+    * pairs (see [[Bpe.mergeRounds]]); cap = 1 IS the sequential trainer.
     * Output: (round, batch_rank, tok_a, tok_b, merged, pair_n). */
   def subwordTrainBatched(documents: DataFrame, rounds: Int = 4,
                           cap: Int = 4): DataFrame = {
-    var state = wordState(documents).localCheckpoint(false)
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    intermediates += state
-    var merges = Vector.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val pairs = state.filter(size(col("syms")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(0, size(syms) - 2), i -> struct(syms[i] AS a, syms[i+1] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-        .localCheckpoint(false)
-      // locally-maximal selection: explode each pair to its tokens and
-      // equi-join on the shared token; a pair any overlapping rival
-      // beats is out
-      val toks = pairs.select(col("a"), col("b"), col("cnt"),
-        explode(array(col("a"), col("b"))).as("t"))
-      val rival = toks.select(col("t"), col("a").as("qa"), col("b").as("qb"),
-        col("cnt").as("qcnt"))
-      val beaten = toks.join(rival, Seq("t"))
-        .filter(!(col("a") === col("qa") && col("b") === col("qb")))
-        .filter(col("qcnt") > col("cnt") ||
-          (col("qcnt") === col("cnt") &&
-            (col("qa") < col("a") ||
-              (col("qa") === col("a") && col("qb") < col("b")))))
-        .select(col("a"), col("b")).distinct()
-      // eager ≤cap-row checkpoint: one driver round-trip per ROUND
-      val sel = pairs.join(beaten, Seq("a", "b"), "left_anti")
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(cap)
-        .withColumn("batch_rank",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(graft.functions.Fns.onePart(col("a")))
-            .orderBy(col("cnt").desc, col("a"), col("b"))))
-        .localCheckpoint()
-      intermediates += sel
-      pairs.unpersist()
-      merges :+= sel.select(lit(r).as("round"), col("batch_rank"),
-        col("a").as("tok_a"), col("b").as("tok_b"),
-        concat(col("a"), col("b")).as("merged"), col("cnt").as("pair_n"))
-      // replay the batch in rank order — the replayFold device over a
-      // (batch_rank, tok_a, tok_b)-sorted one-row artifact; an empty
-      // batch (exhausted vocabulary) folds as the identity
-      val art = sel.agg(array_sort(collect_list(
-        struct(col("batch_rank"), col("a").as("tok_a"), col("b").as("tok_b")))).as("ms"))
-      state = state
-        .join(broadcast(art), lit(true), "left")
-        .withColumn("syms", expr(replayFold("syms")))
-        .select(col("word"), col("n"), col("syms"))
-        .localCheckpoint(false)
-      intermediates += state
-    }
-    val table = merges.reduce(_.unionByName(_))
-      .orderBy("round", "batch_rank").localCheckpoint()
-    intermediates.foreach(_.unpersist())
+    val (table, finalState) = trainWithState(documents, rounds, cap)
+    finalState.unpersist()
     table
   }
-
-  /** Rank-ordered replay of the broadcast merge artifact over one
-    * word's round-0 symbols — the row-local fold shared by the word-
-    * table replay and the per-document apply (so batch, word-cache,
-    * and streaming paths can never drift). `ws0` is the symbol-array
-    * expression to fold. */
-  private def replayFold(ws0: String): String =
-    s"""aggregate(ms, $ws0, (acc0, m) ->
-         IF(array_contains(acc0, m.tok_a) AND array_contains(acc0, m.tok_b),
-            aggregate(acc0, CAST(array() AS array<string>), (acc, t) ->
-              IF(size(acc) > 0 AND element_at(acc, -1) = m.tok_a AND t = m.tok_b,
-                 concat(slice(acc, 1, size(acc) - 1),
-                   array(concat(m.tok_a, m.tok_b))),
-                 concat(acc, array(t)))),
-            acc0))"""
-
-  private def mergeArtifact(merges: DataFrame): DataFrame =
-    merges.agg(array_sort(collect_list(
-      struct(col("round"), col("tok_a"), col("tok_b")))).as("ms"))
 
   /** Replay a merge table over a word table: (word, n, syms) with syms
     * the final subword sequence — the vocab-bounded application path
     * (and the train/apply identity's left-hand side). */
   private[graft] def applyWords(words: DataFrame, merges: DataFrame): DataFrame =
     words
-      .crossJoin(broadcast(mergeArtifact(merges)))
-      .withColumn("syms", expr(replayFold(symsOf("word"))))
+      .crossJoin(broadcast(Bpe.mergeArtifact(merges)))
+      .withColumn("syms", expr(Bpe.foldSql(symsOf("word"), "")))
       .select(col("word"), col("n"), col("syms"))
 
   /** Per-document subword tokenization mart — row-local replay of the
@@ -248,27 +116,21 @@ object SubwordBpe {
     * symbol count (chars + markers), post-merge subword count, merges
     * landed (their difference — conservation: concatenating each
     * word's subwords recovers word||marker exactly, spec-pinned), and
-    * the md5 fingerprint of the document's full subword stream. */
+    * the md5 fingerprint of the document's full subword stream. The
+    * artifact replays in (round, batch_rank) order, so one mart serves
+    * sequential and batched merge tables alike. */
   private[graft] def applyMart(documents: DataFrame,
                                merges: DataFrame): DataFrame =
-    applyMartWith(documents, mergeArtifact(merges))
-
-  /** [[applyMart]] against an already-ordered one-row merge artifact —
-    * the seam the rank-ordered batched replay shares with the
-    * (round, tok_a, tok_b)-ordered sequential one. */
-  private def applyMartWith(documents: DataFrame,
-                            artifact: DataFrame): DataFrame =
     Bpe.tokenState(documents)
-      .crossJoin(broadcast(artifact))
-      .withColumn("wtoks", expr(
-        s"transform(toks, w -> ${replayFold(symsOf("w"))})"))
-      .withColumn("flat", flatten(col("wtoks")))
+      .crossJoin(broadcast(Bpe.mergeArtifact(merges)))
+      .withColumn("flat", flatten(expr(
+        s"transform(toks, w -> ${Bpe.foldSql(symsOf("w"), "")})")))
+      .withColumn("n_syms", expr("aggregate(toks, 0L, (a, w) -> a + length(w) + 1L)"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_words"),
-        expr("aggregate(toks, 0L, (a, w) -> a + length(w) + 1L)").as("n_syms"),
+        col("n_syms"),
         size(col("flat")).cast("long").as("n_tokens"),
-        (expr("aggregate(toks, 0L, (a, w) -> a + length(w) + 1L)")
-          - size(col("flat"))).cast("long").as("n_merges"),
+        (col("n_syms") - size(col("flat"))).cast("long").as("n_merges"),
         md5(concat_ws(SEP, col("flat")).cast("binary")).as("tok_hash"))
 
   /** Corpus re-tokenization with a learned subword merge table — see
@@ -277,17 +139,12 @@ object SubwordBpe {
     applyMart(documents, merges).orderBy("doc_id")
 
   /** Per-document tokenization with a BATCHED merge table
-    * ([[subwordTrainBatched]]'s output): the same row-local replay, but
-    * the broadcast artifact sorts by (round, batch_rank) — within a
-    * round the rank order IS the application order, and since a
-    * round's merges are token-disjoint the fold is exactly the
-    * trainer's. Train/apply identity and OOV-freedom carry over
-    * unchanged (Round14Spec). */
+    * ([[subwordTrainBatched]]'s output): [[subwordApply]] itself, whose
+    * artifact sorts by (round, batch_rank) — within a round the rank
+    * order IS the training fold's application order. Train/apply
+    * identity and OOV-freedom carry over unchanged (Round14Spec). */
   def subwordApplyBatched(documents: DataFrame, merges: DataFrame): DataFrame =
-    applyMartWith(documents,
-      merges.agg(array_sort(collect_list(struct(col("round"),
-        col("batch_rank"), col("tok_a"), col("tok_b")))).as("ms")))
-      .orderBy("doc_id")
+    subwordApply(documents, merges)
 
   /** Shard-trained subword BPE vs full-corpus subword BPE — the
     * [[Bpe.bpeSampleEval]] amortization question re-asked at the
