@@ -11,26 +11,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The sf0.1 tables are single ~1-10 MB parquet files; at the default
-      // 128 MB split size every SCAN stage runs as ONE task and the
-      // aggregate-heavy queries serialize on it. 1 MB splits spread the
-      // scan across the cores — the knob a real cluster tunes to its own
-      // file sizes (the guideline: partitions sized to the data, not the
-      // default).
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      // The engine-wide timestamp contract (see Tables.events): UTC zone
-      // pinned at build, nanos escape hatch on in case the generator
-      // reverts events.ts to TIMESTAMP(NANOS).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Warm up JVM/codegen/parquet-footer paths so the first timed query of
     // each family doesn't absorb one-time session costs: the text/dedup
     // expressions (md5, conv, regex explode) and vector folds JIT-compile

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{DotScaled, PlanStats}
 import graft.functions.Fns._
+import graft.text.TextPrep
 
 /** Bounded-heap per-group top-k: keeps the k best (cosine desc, id asc)
   * neighbors in a size-k heap. Because it is an `Aggregator`, Spark runs
@@ -135,6 +136,59 @@ object Ann {
       .select(col("probe_id"), (col("pos") + 1).cast("int").as("rank"),
         col("entry._1").as("neighbor_id"), col("entry._2").as("cosine"))
       .orderBy("probe_id", "rank")
+  }
+
+  /** The probe documents' top-`kTerms` non-stopword terms by in-probe
+    * tf (ties to the smaller word) — (probe_id, word) from a (doc_id,
+    * word) token frame. The window is bounded by one document's
+    * vocabulary, never the corpus. Shared by the hybrid arms at document
+    * and chunk grain. */
+  private[ann] def probeTerms(toks: DataFrame, nProbes: Int, kTerms: Int): DataFrame = {
+    val wP = Window.partitionBy(col("probe_id"))
+      .orderBy(col("ptf").desc, col("word"))
+    toks.filter(col("doc_id") < nProbes && !col("word").isin(TextPrep.stopEn: _*))
+      .groupBy(col("doc_id").as("probe_id"), col("word"))
+      .agg(count(lit(1)).as("ptf"))
+      .withColumn("rn", row_number().over(wP))
+      .filter(col("rn") <= kTerms)
+      .select("probe_id", "word")
+  }
+
+  /** The BM25 scoring tail: per-(probe, `key`, word) tf/dl rows × word
+    * df × the one-row (nn, sdl) corpus stats → exact decimal sum per
+    * (probe, `key`) → top-`arm` heap, the `key` column served as
+    * neighbor_id. The exact constants and decimal-sum routing of
+    * [[graft.text.Vocab.bm25]]; the document and chunk arms both score
+    * here, so neither grain can drift from the other. */
+  private[ann] def bm25Topk(tfd: DataFrame, dfw: DataFrame, stats: DataFrame,
+                            key: String, arm: Int): DataFrame =
+    topkPerProbe(tfd.join(broadcast(dfw), Seq("word"))
+      .crossJoin(broadcast(stats))
+      .withColumn("avgdl", col("sdl") / col("nn"))
+      .withColumn("contrib", TextPrep.bm25Contrib(
+        col("tf"), col("df"), col("dl"), col("nn"), col("avgdl")))
+      .groupBy(col("probe_id"), col(key))
+      .agg(sum(col("contrib").cast("decimal(20,12)")).cast("double").as("score0"))
+      .select(col("probe_id"), col(key).as("vec_id"),
+        r6(col("score0")).as("cosine")), arm)
+
+  /** Reciprocal-rank fusion of two ranked arm frames (probe_id, rank,
+    * neighbor_id, …) over their full-outer union: (probe_id, `key`,
+    * lex_rank, vec_rank, rrf) with rrf = Σ 1/(rrfK + rank). */
+  private[ann] def fuseArms(lex0: DataFrame, vec0: DataFrame, rrfK: Int,
+                            key: String): DataFrame = {
+    val lex = lex0.select(col("probe_id").as("lp"), col("neighbor_id").as("ld"),
+      col("rank").as("lex_rank"))
+    val vec = vec0.select(col("probe_id").as("vp"), col("neighbor_id").as("vd"),
+      col("rank").as("vec_rank"))
+    lex.join(vec,
+        col("lp") === col("vp") && col("ld") === col("vd"), "full_outer")
+      .select(coalesce(col("lp"), col("vp")).as("probe_id"),
+        coalesce(col("ld"), col("vd")).as(key),
+        col("lex_rank"), col("vec_rank"))
+      .withColumn("rrf",
+        coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0)))
   }
 
   /** Brute-force cosine top-k: the exact baseline. Probes broadcast;
@@ -440,8 +494,6 @@ object Ann {
   private def hybridFused(documents: DataFrame, embeddings: DataFrame,
                           nProbes: Int, kTerms: Int,
                           arm: Int, rrfK: Int): DataFrame = {
-    import graft.text.TextPrep
-    val stopEn = TextPrep.stopEn
     val docs = documents.filter(col("text").isNotNull)
     // pinned: the exploded token frame has THREE consumers (probe terms,
     // probe-term df, per-(probe,doc,word) tf) that would each re-run the
@@ -450,16 +502,7 @@ object Ann {
       .select(col("doc_id"), size(col("words")).cast("long").as("dl"),
         explode(col("words")).as("word"))
       .localCheckpoint(false)
-    // probe query terms: top-kTerms by in-probe tf (window bounded by
-    // one document's vocabulary, never the corpus)
-    val wP = Window.partitionBy(col("probe_id"))
-      .orderBy(col("ptf").desc, col("word"))
-    val pt = toks.filter(col("doc_id") < nProbes && !col("word").isin(stopEn: _*))
-      .groupBy(col("doc_id").as("probe_id"), col("word"))
-      .agg(count(lit(1)).as("ptf"))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= kTerms)
-      .select("probe_id", "word")
+    val pt = probeTerms(toks, nProbes, kTerms)
     val dfw = toks.join(broadcast(pt.select("word").distinct()), Seq("word"))
       .groupBy(col("word")).agg(countDistinct(col("doc_id")).as("df"))
     val stats = TextPrep.withWords(docs)
@@ -469,29 +512,8 @@ object Ann {
       .filter(col("doc_id") =!= col("probe_id"))
       .groupBy(col("probe_id"), col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    val lexScored = tfd.join(broadcast(dfw), Seq("word"))
-      .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sdl") / col("nn"))
-      .withColumn("contrib", TextPrep.bm25Contrib(
-        col("tf"), col("df"), col("dl"), col("nn"), col("avgdl")))
-      .groupBy(col("probe_id"), col("doc_id"))
-      .agg(sum(col("contrib").cast("decimal(20,12)")).cast("double").as("score0"))
-      .select(col("probe_id"), col("doc_id").as("vec_id"),
-        r6(col("score0")).as("cosine"))
-    val lex = topkPerProbe(lexScored, arm)
-      .select(col("probe_id").as("lp"), col("neighbor_id").as("ld"),
-        col("rank").as("lex_rank"))
-    val vec = bruteForceTopK(embeddings, nProbes, arm)
-      .select(col("probe_id").as("vp"), col("neighbor_id").as("vd"),
-        col("rank").as("vec_rank"))
-    lex.join(vec,
-        col("lp") === col("vp") && col("ld") === col("vd"), "full_outer")
-      .select(coalesce(col("lp"), col("vp")).as("probe_id"),
-        coalesce(col("ld"), col("vd")).as("vec_id"),
-        col("lex_rank"), col("vec_rank"))
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0)))
+    fuseArms(bm25Topk(tfd, dfw, stats, "doc_id", arm),
+      bruteForceTopK(embeddings, nProbes, arm), rrfK, "vec_id")
   }
 
   /** Label-relevance precision@k of the three retrieval lists — the

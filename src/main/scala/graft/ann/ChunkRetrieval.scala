@@ -181,46 +181,74 @@ object ChunkRetrieval {
       .filter(col("nsq") > 0)
       .select(col(key), col("p"), col("nsq"))
 
-  /** Vector arm: exact cosine of every chunk against the nProbes
-    * broadcast probe vectors, top-`arm` per probe via the bounded heap.
-    *
-    * The embedding lineage feeding this arm is kept cheap to PLAN by
-    * [[hashEmbed]]'s two-stage shape (signed counts per (key, bucket),
-    * then one sparse fold through a SINGLE 16×64 sign-matrix literal) —
-    * the earlier one-stage form carried 16 aggregate expressions each
-    * embedding its own 64-literal array and cost the DRIVER ~29 s of
-    * optimizer/codegen per evaluation (no single Spark STAGE over
-    * 0.5 s — pure plan-processing cost); the restructured tree plans in
-    * milliseconds and is bit-identical. In production the chunk frame
-    * is additionally a persisted artifact (built once, served many) —
-    * see [[graft.sources.Artifacts]] — but no checkpoint is needed for
-    * planning anymore. */
   /** (chunk_id, p, nsq) of a chunk frame — the embedding grain shared
-    * by the vec arm, the semantic dedup, and the streaming artifact. */
+    * by the vec arm, the semantic dedup, and the streaming artifact.
+    *
+    * The lineage is kept cheap to PLAN by [[hashEmbed]]'s two-stage
+    * shape (signed counts per (key, bucket), then one sparse fold
+    * through a SINGLE 16×64 sign-matrix literal) — the earlier one-stage
+    * form carried 16 aggregate expressions each embedding its own
+    * 64-literal array and cost the DRIVER ~29 s of optimizer/codegen per
+    * evaluation (no single Spark STAGE over 0.5 s — pure plan-processing
+    * cost); the restructured tree plans in milliseconds and is
+    * bit-identical. */
   private[graft] def chunkEmbeds(ch: DataFrame): DataFrame =
     hashEmbed(ch.select(col("chunk_id"), explode(col("cwords")).as("word")), "chunk_id")
 
-  private def vecArm(ch: DataFrame, documents: DataFrame, nProbes: Int,
-                     arm: Int, factor: Long): DataFrame =
-    vecArmFromCe(chunkEmbeds(ch), documents, nProbes, arm, factor)
-
-  /** [[vecArm]] from an already-built (chunk_id, p, nsq) embedding
-    * frame — the entry the delta-merge serving path uses, where `ce` is
-    * a frozen artifact unioned with a fresh delta. */
-  private def vecArmFromCe(ce: DataFrame, documents: DataFrame, nProbes: Int,
-                           arm: Int, factor: Long): DataFrame = {
-    val pe = hashEmbed(TextPrep.withWords(documents.filter(col("text").isNotNull))
+  /** The probe documents' embeddings (probe_id, q, pnsq) — the query
+    * side of every chunk vector arm, over the probe document's full
+    * token stream. */
+  private def queryEmbeds(documents: DataFrame, nProbes: Int): DataFrame =
+    hashEmbed(TextPrep.withWords(documents.filter(col("text").isNotNull))
         .filter(col("norm") =!= "").filter(col("doc_id") < nProbes)
         .select(col("doc_id"), explode(col("words")).as("word")), "doc_id")
-      .select(col("doc_id").as("probe_id"), col("p").as("q"),
-        col("nsq").as("pnsq"))
-    val scored = ce.crossJoin(broadcast(pe))
-      .filter(floor(col("chunk_id") / factor) =!= col("probe_id"))
-      .withColumn("dotp", dotLong("p", "q"))
-      .withColumn("cosine", r6(col("dotp").cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("pnsq").cast("double")))))
-    Ann.topkPerProbe(scored.select(col("probe_id"),
-      col("chunk_id").as("vec_id"), col("cosine")), arm)
+      .select(col("doc_id").as("probe_id"), col("p").as("q"), col("nsq").as("pnsq"))
+
+  /** Exact cosine of two integer embedding columns and their squared
+    * norms, rounded to 6 places — integer arithmetic until the divide,
+    * so both engines score bit-identically. */
+  private def cosineOf(a: String, na: String, b: String, nb: String) =
+    r6(dotLong(a, b).cast("double") /
+      (sqrt(col(na).cast("double")) * sqrt(col(nb).cast("double"))))
+
+  /** The chunk vector arm: exact cosine of the chunk embeddings `ce`
+    * (chunk_id, p, nsq) against the nProbes probe embeddings, each
+    * probe's own document excluded, top-`arm` per probe via the bounded
+    * heap. `hamming` picks the candidate route:
+    *  - `None`: the broadcast cross join — every chunk scored against
+    *    every probe (right at gate scale, corpus-linear per probe at
+    *    10^10 chunks);
+    *  - `Some(h)`: the cell route, promoted from the [[chunkAnnEval]]
+    *    measurement (~1.1% of chunks scanned per probe at recall 0.80 at
+    *    100×; 1.0 at gate SFs). Each probe explodes to its Hamming-≤h
+    *    multi-probe CELL list (the [[hammingMasks]] ball over the
+    *    adaptive sign-LSH cell width, derived from the count of `ce` —
+    *    the index that exists at serving time) and EQUI-JOINS the
+    *    cell-keyed chunk store: a broadcast hash join on cell, so each
+    *    chunk row hash-probes a ≤ nProbes·|ball| table once — and on a
+    *    production index bucketed by cell the join is a partition-pruned
+    *    FETCH of ~|ball| cells per probe (the q_pq_refine pattern at
+    *    chunk grain). Exact cosine re-ranks only the fetched candidates. */
+  private[graft] def vecArm(ce: DataFrame, documents: DataFrame, nProbes: Int,
+                            arm: Int, factor: Long, hamming: Option[Int]): DataFrame = {
+    val pe = queryEmbeds(documents, nProbes)
+    val cand = hamming match {
+      case None => ce.crossJoin(broadcast(pe))
+      case Some(h) =>
+        // one evaluation of the embed shuffle serves both the width count
+        // and the celled store (the chunkCells boundary discipline)
+        val base = ce.localCheckpoint(false)
+        val bits = cellBitsFor(base.count())
+        val ball = pe.withColumn("pcell", cellAt("q", 0, bits))
+          .select(col("probe_id"), col("q"), col("pnsq"),
+            explode(expr(s"transform(array(${hammingMasks(bits, h).mkString(",")}), " +
+              "m -> pcell ^ cast(m as bigint))")).as("cand_cell"))
+        base.withColumn("cell", cellAt("p", 0, bits))
+          .join(broadcast(ball), col("cell") === col("cand_cell"))
+    }
+    Ann.topkPerProbe(cand.filter(floor(col("chunk_id") / factor) =!= col("probe_id"))
+      .select(col("probe_id"), col("chunk_id").as("vec_id"),
+        cosineOf("p", "nsq", "q", "pnsq").as("cosine")), arm)
   }
 
   /** XOR masks enumerating the Hamming-≤`hamming` ball over `bits` sign
@@ -230,193 +258,28 @@ object ChunkRetrieval {
     (0 to hamming).flatMap(h =>
       (0 until bits).combinations(h).map(_.map(i => 1L << i).sum).toSeq)
 
-  /** The PRODUCTION cell-route vector arm — [[vecArmFromCe]]'s scale
-    * replacement, promoted from the [[chunkAnnEval]] measurement
-    * (~1.1% of chunks scanned per probe at recall 0.80 at 100×; 1.0 at
-    * gate SFs): instead of scoring EVERY chunk against every probe
-    * (the brute-force cross — right at gate scale, corpus-linear per
-    * probe at 10^10 chunks), each probe explodes to its Hamming-≤
-    * `hamming` multi-probe CELL list (the [[hammingMasks]] ball over
-    * the adaptive sign-LSH cell width) and EQUI-JOINS the cell-keyed
-    * chunk store: a broadcast hash join on cell, so each chunk row
-    * hash-probes a ≤ nProbes·|ball| table once — and on a production
-    * index bucketed by cell the join is a partition-pruned FETCH of
-    * ~|ball| cells per probe (the q_pq_refine pattern at chunk grain).
-    * Exact cosine re-ranks only the fetched candidates. */
-  private def vecArmCellFromCe(base0: DataFrame, documents: DataFrame,
-                               nProbes: Int, arm: Int, factor: Long,
-                               hamming: Int): DataFrame = {
-    // one evaluation of the embed shuffle serves both the width count
-    // and the celled store (the chunkCells boundary discipline)
-    val base = base0.localCheckpoint(false)
-    val bits = cellBitsFor(base.count())
-    val ce = base.withColumn("cell", cellAt("p", 0, bits))
-    val masks = hammingMasks(bits, hamming)
-    val pe = hashEmbed(TextPrep.withWords(documents.filter(col("text").isNotNull))
-        .filter(col("norm") =!= "").filter(col("doc_id") < nProbes)
-        .select(col("doc_id"), explode(col("words")).as("word")), "doc_id")
-      .withColumn("pcell", cellAt("p", 0, bits))
-      .select(col("doc_id").as("probe_id"), col("p").as("q"),
-        col("nsq").as("pnsq"),
-        explode(expr(s"transform(array(${masks.mkString(",")}), " +
-          "m -> pcell ^ cast(m as bigint))")).as("cand_cell"))
-    val cand = ce.join(broadcast(pe), col("cell") === col("cand_cell"))
-      .filter(floor(col("chunk_id") / factor) =!= col("probe_id"))
-      .withColumn("cosine", r6(dotLong("p", "q")
-        .cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("pnsq").cast("double")))))
-    Ann.topkPerProbe(cand.select(col("probe_id"),
-      col("chunk_id").as("vec_id"), col("cosine")), arm)
-  }
-
-  /** [[chunkRetrieval]] with the cell-route vector arm — the production
-    * serving shape at corpus scale. Its own oracle mirrors the cell
-    * route exactly (candidates = Hamming-≤2 cells, re-ranked), so the
-    * key gates the PROMOTED plan, while Round14Spec pins that the
-    * served lists preserve the brute-force arm's label precision (the
-    * [[chunkEval]] device). */
-  def chunkRetrievalAnn(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
-                        kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
-                        hamming: Int = 2): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
-    // pinned for the same four consumers as [[retrieveFrom]]
-    val ch = chunksFrom(ww, factor).localCheckpoint(false)
-    rankServe(fuseArms(lexArm(ch, documents, nProbes, kTerms, arm),
-      vecArmCellFromCe(chunkEmbeds(ch), documents, nProbes, arm, factor,
-        hamming), rrfK), factor, k)
-  }
-
-  /** Lexical arm: the [[Ann.hybridRrf]] BM25 shape with chunks as the
-    * retrieval unit — chunk-grain tf/dl/df/avgdl, probe terms still from
-    * the probe document's own vocabulary. */
-  private def lexArm(ch: DataFrame, documents: DataFrame, nProbes: Int,
-                     kTerms: Int, arm: Int): DataFrame = {
-    val ctoks = ch
-      .select(col("doc_id"), col("chunk_id"),
-        size(col("cwords")).cast("long").as("dl"),
-        explode(col("cwords")).as("word"))
-    val pt = probeTerms(documents, nProbes, kTerms)
-    val dfw = ctoks.join(broadcast(pt.select("word").distinct()), Seq("word"))
-      .groupBy(col("word")).agg(countDistinct(col("chunk_id")).as("df"))
-    val stats = ch
-      .agg(count(lit(1)).as("nn"),
-        sum(size(col("cwords")).cast("decimal(18,0)")).cast("double").as("sdl"))
-    val tfd = ctoks.join(broadcast(pt), Seq("word"))
-      .filter(col("doc_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("chunk_id"), col("word"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    bm25Topk(tfd, dfw, stats, arm)
-  }
-
-  /** The probe documents' top-`kTerms` non-stopword terms —
-    * (probe_id, word), shared by the batch arm and the parts-based
-    * delta serving arm. */
-  private def probeTerms(documents: DataFrame, nProbes: Int,
-                         kTerms: Int): DataFrame = {
-    val wP = Window.partitionBy(col("probe_id"))
-      .orderBy(col("ptf").desc, col("word"))
-    TextPrep.withWords(documents.filter(col("text").isNotNull))
-      .select(col("doc_id"), explode(col("words")).as("word"))
-      .filter(col("doc_id") < nProbes && !col("word").isin(TextPrep.stopEn: _*))
-      .groupBy(col("doc_id").as("probe_id"), col("word"))
-      .agg(count(lit(1)).as("ptf"))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= kTerms)
-      .select("probe_id", "word")
-  }
-
-  /** BM25 scoring tail: per-(probe, chunk, word) tf rows × word df ×
-    * corpus stats → exact decimal sum per (probe, chunk) → top-`arm`
-    * heap. Shared by [[lexArm]] and [[lexArmFromParts]] so the frozen-
-    * artifact path can never drift from the batch arm. */
-  private def bm25Topk(tfd: DataFrame, dfw: DataFrame, stats: DataFrame,
-                       arm: Int): DataFrame = {
-    val scored = tfd.join(broadcast(dfw), Seq("word"))
-      .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sdl") / col("nn"))
-      .withColumn("contrib", TextPrep.bm25Contrib(
-        col("tf"), col("df"), col("dl"), col("nn"), col("avgdl")))
-      .groupBy(col("probe_id"), col("chunk_id"))
-      .agg(sum(col("contrib").cast("decimal(20,12)")).cast("double").as("score0"))
-      .select(col("probe_id"), col("chunk_id").as("vec_id"),
-        r6(col("score0")).as("cosine"))
-    Ann.topkPerProbe(scored, arm)
-  }
-
-  /** [[lexArm]] from pre-aggregated index parts — postings (word,
-    * chunk_id, tf, dl), the all-words df table, and the (nn, sdl0)
-    * stats row. tf per (word, chunk) is probe-independent, so the
-    * postings replay joined to the probe terms produces the batch
-    * arm's exact tfd rows; the probe's own document is excluded by
-    * decoding doc_id from the chunk_id encoding. */
-  private def lexArmFromParts(postings: DataFrame, dfAll: DataFrame,
-                              stats: DataFrame, documents: DataFrame,
-                              nProbes: Int, kTerms: Int, arm: Int,
-                              factor: Long): DataFrame = {
-    val pt = probeTerms(documents, nProbes, kTerms)
-    val dfw = dfAll.join(broadcast(pt.select("word").distinct()), Seq("word"))
+  /** The chunk BM25 arm over index parts — postings (word, chunk_id,
+    * tf, dl), the df table (word, df) and the (nn, sdl0) stats row —
+    * for the (probe_id, word) probe terms `pt`: chunk-grain tf/dl/df/
+    * avgdl, probe terms from the probe document's own vocabulary. tf per
+    * (word, chunk) is probe-independent, so the postings joined to the
+    * probe terms are exactly each probe's tf rows; the probe's own
+    * document is excluded by decoding doc_id from the chunk_id
+    * encoding. */
+  private def lexArm(postings: DataFrame, dfAll: DataFrame, stats: DataFrame,
+                     pt: DataFrame, arm: Int, factor: Long): DataFrame = {
     val tfd = postings.join(broadcast(pt), Seq("word"))
       .filter(floor(col("chunk_id") / factor).cast("long") =!= col("probe_id"))
-      .select(col("probe_id"), col("chunk_id"), col("word"),
-        col("tf"), col("dl"))
-    bm25Topk(tfd, dfw, stats.select(col("nn"),
-      col("sdl0").cast("double").as("sdl")), arm)
+      .select(col("probe_id"), col("chunk_id"), col("word"), col("tf"), col("dl"))
+    Ann.bm25Topk(tfd, dfAll.join(broadcast(pt.select("word").distinct()), Seq("word")),
+      stats.select(col("nn"), col("sdl0").cast("double").as("sdl")), "chunk_id", arm)
   }
 
-  /** The fused chunk candidate frame:
-    * (probe_id, chunk_id, lex_rank, vec_rank, rrf). */
-  private def fused(ch: DataFrame, documents: DataFrame, nProbes: Int,
-                    kTerms: Int, arm: Int, rrfK: Int, factor: Long): DataFrame =
-    fuseArms(lexArm(ch, documents, nProbes, kTerms, arm),
-      vecArm(ch, documents, nProbes, arm, factor), rrfK)
-
-  /** RRF fusion of two ranked arm frames. */
-  private def fuseArms(lex0: DataFrame, vec0: DataFrame,
-                       rrfK: Int): DataFrame = {
-    val lex = lex0
-      .select(col("probe_id").as("lp"), col("neighbor_id").as("ld"),
-        col("rank").as("lex_rank"))
-    val vec = vec0
-      .select(col("probe_id").as("vp"), col("neighbor_id").as("vd"),
-        col("rank").as("vec_rank"))
-    lex.join(vec,
-        col("lp") === col("vp") && col("ld") === col("vd"), "full_outer")
-      .select(coalesce(col("lp"), col("vp")).as("probe_id"),
-        coalesce(col("ld"), col("vd")).as("chunk_id"),
-        col("lex_rank"), col("vec_rank"))
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0)))
-  }
-
-  /** Top-k chunks per probe with at-most-one-chunk-per-document: RRF
-    * fusion of both arms, then the best-scoring chunk of each source
-    * document survives (rrf desc, chunk_id asc — the min-struct pick,
-    * no rank window over the fused frame), then the final rank. */
-  def chunkRetrieval(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
-                     kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
-    retrieveFrom(chunksFrom(ww, factor), documents, factor,
-      nProbes, k, kTerms, arm, rrfK)
-  }
-
-  /** The retrieval tail shared by [[chunkRetrieval]] (all chunks) and
-    * [[chunkServe]] (semantic-dedup survivors only): fuse, dedup to one
-    * chunk per doc, rank, cut at k. */
-  private def retrieveFrom(ch0: DataFrame, documents: DataFrame, factor: Long,
-                           nProbes: Int, k: Int, kTerms: Int,
-                           arm: Int, rrfK: Int): DataFrame = {
-    // the chunk frame has FOUR consumers downstream (lex-arm tf rows,
-    // probe-term df, corpus stats, vec-arm embeddings); without a
-    // boundary each re-runs the text scan + chunking (and, under
-    // chunkServe, the whole dedup anti-join) from raw parquet
-    val ch = ch0.localCheckpoint(false)
-    rankServe(fused(ch, documents, nProbes, kTerms, arm, rrfK, factor),
-      factor, k)
-  }
-
+  /** Top-k chunks per probe with at-most-one-chunk-per-document over the
+    * fused (probe_id, chunk_id, lex_rank, vec_rank, rrf) frame: the
+    * best-scoring chunk of each source document survives (rrf desc,
+    * chunk_id asc — the min-struct pick, no rank window over the fused
+    * frame), then the final rank. */
   private def rankServe(f0: DataFrame, factor: Long, k: Int): DataFrame = {
     // the fused frame (≤ 2·arm rows per probe) feeds BOTH the per-doc
     // best pick and the final join — pin it so the two consumers share
@@ -481,7 +344,7 @@ object ChunkRetrieval {
     // twice more). Without a boundary each consumer re-runs the shuffle:
     // measured 6 evaluations inside q_chunk_dedup alone and 24 inside
     // q_chunk_serve (whose survivor anti-join nests the whole chain under
-    // retrieveFrom's four reads) — 697 s at 100×. The lazy localCheckpoint
+    // the serve's chunk-frame reads) — 697 s at 100×. The lazy localCheckpoint
     // pins one evaluation; values are unchanged (a checkpoint is a plan
     // boundary, not a computation), and at cluster scale this is exactly
     // the persisted-index boundary Artifacts.save would provide.
@@ -554,9 +417,7 @@ object ChunkRetrieval {
       col("nsq").as("nsqa"), col("cell").as("cella"), col("fit").as("fita"))
     val dups = cc.join(other,
         col("cell") === col("cella") && col("chunk_id") =!= col("ca"))
-      .withColumn("cosine", r6(dotLong("p", "pa")
-        .cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("nsqa").cast("double")))))
+      .withColumn("cosine", cosineOf("p", "nsq", "pa", "nsqa"))
       .filter(col("cosine") >= threshold)
       .groupBy(col("chunk_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
@@ -683,9 +544,7 @@ object ChunkRetrieval {
       .join(other.repartition(nPart, col("bk2"), col("bv2")),
         col("band_k") === col("bk2") && col("band_v") === col("bv2") &&
           col("chunk_id") =!= col("ca"))
-      .withColumn("cosine", r6(dotLong("p", "pa")
-        .cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("nsqa").cast("double")))))
+      .withColumn("cosine", cosineOf("p", "nsq", "pa", "nsqa"))
       .filter(col("cosine") >= threshold)
       // a pair sharing several bands must count ONCE
       .select(col("chunk_id"), col("ca"), col("fit"), col("fita"), col("cosine"))
@@ -826,9 +685,7 @@ object ChunkRetrieval {
     val other = feat.select(col("chunk_id").as("ca"), col("p").as("pa"),
       col("nsq").as("nsqa"), col("bands").as("bandsa"))
     val truth = feat.join(broadcast(other), col("chunk_id") < col("ca"))
-      .withColumn("cosine", r6(dotLong("p", "pa")
-        .cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("nsqa").cast("double")))))
+      .withColumn("cosine", cosineOf("p", "nsq", "pa", "nsqa"))
       .filter(col("cosine") >= threshold)
       // hit disjunctions GENERATED from the band constants (band 0 ≡
       // the single cell, banded = the 3 exact bands, multiprobe = any
@@ -877,16 +734,10 @@ object ChunkRetrieval {
     val base = chunkEmbeds(chunksFrom(ww, factor)).localCheckpoint(false)
     val bits = cellBitsFor(base.count())
     val ce = base.withColumn("cell", cellAt("p", 0, bits))
-    val pe = hashEmbed(TextPrep.withWords(documents.filter(col("text").isNotNull))
-        .filter(col("norm") =!= "").filter(col("doc_id") < nProbes)
-        .select(col("doc_id"), explode(col("words")).as("word")), "doc_id")
-      .withColumn("pcell", cellAt("p", 0, bits))
-      .select(col("doc_id").as("probe_id"), col("p").as("q"),
-        col("nsq").as("pnsq"), col("pcell"))
+    val pe = queryEmbeds(documents, nProbes)
+      .withColumn("pcell", cellAt("q", 0, bits))
       .localCheckpoint(false)
-    def cos = r6(dotLong("p", "q")
-      .cast("double") /
-      (sqrt(col("nsq").cast("double")) * sqrt(col("pnsq").cast("double"))))
+    def cos = cosineOf("p", "nsq", "q", "pnsq")
     val exact = Ann.topkPerProbe(base.crossJoin(broadcast(pe.drop("pcell")))
       .filter(floor(col("chunk_id") / factor) =!= col("probe_id"))
       .withColumn("cosine", cos)
@@ -949,9 +800,7 @@ object ChunkRetrieval {
     // dominating pair), without the n_dups/max_cosine mart columns
     val dominated = cc.join(other,
         col("cell") === col("cella") && col("chunk_id") =!= col("ca"))
-      .withColumn("cosine", r6(dotLong("p", "pa")
-        .cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("nsqa").cast("double")))))
+      .withColumn("cosine", cosineOf("p", "nsq", "pa", "nsqa"))
       .filter(col("cosine") >= threshold)
       .filter(col("fita") < col("fit") ||
         (col("fita") === col("fit") && col("ca") < col("chunk_id")))
@@ -961,207 +810,105 @@ object ChunkRetrieval {
       base.join(dominated, Seq("chunk_id"), "left_anti"))
   }
 
-  /** [[chunkRetrieval]] served from the semantic-dedup SURVIVORS — the
-    * production serving index: dominated near-duplicate chunks are
-    * dropped BEFORE the arms, so corpus stats (chunk count, avgdl,
-    * chunk-df) and both candidate lists reflect the deduped index.
-    * Round13Spec pins that this preserves the full list's label
-    * precision@k (the q_chunk_eval device) while serving fewer chunks. */
-  def chunkServe(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
-                 kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
-                 threshold: Double = 0.95): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
-    // survivor embeds come from the dedup chain's own pinned embed base
-    // (anti-joined, not re-embedded); the survivor chunk frame is pinned
-    // for the lex arm's three consumers
-    val (sch0, sce) = survivorChunksAndCe(ww, factor, threshold)
-    val sch = sch0.localCheckpoint(false)
-    rankServe(fuseArms(lexArm(sch, documents, nProbes, kTerms, arm),
-      vecArmFromCe(sce, documents, nProbes, arm, factor), rrfK), factor, k)
-  }
+  /** A serving index: chunk embeddings (chunk_id, p, nsq), postings
+    * (word, chunk_id, tf, dl), the df table (word, df) and the (nn, sdl0)
+    * stats row. Every part is either disjoint by key across document
+    * partitions (embeddings, postings — chunking is per-document) or an
+    * associative sum (df, nn, sdl0), which is what makes exact
+    * incremental maintenance possible. */
+  private type Parts = (DataFrame, DataFrame, DataFrame, DataFrame)
 
-  /** [[chunkServe]] with the cell-route arm — the production DEDUPED
-    * serving index behind the promoted candidate fetch: dominated
-    * chunks drop before the arms, the adaptive cell width derives from
-    * the SURVIVOR count (the index that exists at serving time), and
-    * only Hamming-≤`hamming` cells are fetched and re-ranked. */
-  def chunkServeAnn(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
-                    kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
-                    threshold: Double = 0.95, hamming: Int = 2): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
-    // survivor embeds from the dedup chain's pinned base (see
-    // [[survivorChunksAndCe]]); the cell width still derives from the
-    // SURVIVOR count inside vecArmCellFromCe — the index that exists at
-    // serving time — exactly as before
-    val (sch0, sce) = survivorChunksAndCe(ww, factor, threshold)
-    val sch = sch0.localCheckpoint(false)
-    rankServe(fuseArms(lexArm(sch, documents, nProbes, kTerms, arm),
-      vecArmCellFromCe(sce, documents, nProbes, arm, factor,
-        hamming), rrfK), factor, k)
-  }
-
-  /** The MERGEABLE serving-index aggregates of a chunk frame: chunk
-    * embeddings, postings (word, chunk_id, tf, dl), the all-words df
-    * table, and the (nn, sdl0) stats row. Every part is either disjoint
-    * by key across document partitions (embeddings, postings — chunking
-    * is per-document) or an associative sum (df, nn, sdl0), which is
-    * what makes exact incremental maintenance possible. */
-  private[graft] def indexParts(ch: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val ce = chunkEmbeds(ch)
+  /** Postings (word, chunk_id, tf, dl) of a chunk frame — over every
+    * word, or only over `words` (a one-column `word` frame): the serving
+    * form, whose restriction runs BEFORE the (word, chunk_id) aggregate
+    * so only probe-word tokens reach the shuffle. */
+  private def postingsOf(ch: DataFrame, words: Option[DataFrame]): DataFrame = {
     val ctoks = ch.select(col("chunk_id"),
       size(col("cwords")).cast("long").as("dl"),
       explode(col("cwords")).as("word"))
-    val postings = ctoks.groupBy(col("word"), col("chunk_id"))
+    words.fold(ctoks)(w => ctoks.join(broadcast(w), Seq("word")))
+      .groupBy(col("word"), col("chunk_id"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    val dfAll = postings.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val stats = ch.agg(count(lit(1)).as("nn"),
-      sum(size(col("cwords")).cast("decimal(18,0)")).as("sdl0"))
-    (ce, postings, dfAll, stats)
   }
 
-  /** [[indexParts]] PINNED at the expensive boundaries — the entry for
-    * callers that evaluate each part more than once (artifact stamping
-    * reads a part once for its content version and once for the write;
-    * the delta merge materializes the frozen side once per part). The
-    * chunk frame is checkpointed so the four parts share ONE text
-    * scan + chunking, ce and postings (the two corpus-scale parts, each
-    * behind its own shuffle) are checkpointed themselves, and df/stats
-    * are re-derived as cheap aggregates OVER the pinned postings/chunks
-    * rather than from raw text. Values are identical — a checkpoint is
-    * a plan boundary, not a computation. */
-  private[graft] def pinnedIndexParts(ch0: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  /** The parts of chunk frame `ch` with its embeddings and postings: df
+    * counts the postings per word, stats aggregates the chunk frame. */
+  private def partsOf(ch: DataFrame, ce: DataFrame, postings: DataFrame): Parts =
+    (ce, postings, postings.groupBy(col("word")).agg(count(lit(1)).as("df")),
+      ch.agg(count(lit(1)).as("nn"),
+        sum(size(col("cwords")).cast("decimal(18,0)")).as("sdl0")))
+
+  /** The full index parts of a chunk frame, PINNED at the expensive
+    * boundaries — every caller evaluates each part more than once
+    * (artifact stamping reads a part once for its content version and
+    * once for the write; the delta merge materializes the frozen side
+    * once per part). The chunk frame is checkpointed so the four parts
+    * share ONE text scan + chunking, ce and postings (the two
+    * corpus-scale parts, each behind its own shuffle) are checkpointed
+    * themselves, and df/stats are cheap aggregates OVER the pinned
+    * postings/chunks. Values are unchanged — a checkpoint is a plan
+    * boundary, not a computation. */
+  private[graft] def indexParts(ch0: DataFrame): Parts = {
     val ch = ch0.localCheckpoint(false)
     val ce = chunkEmbeds(ch).localCheckpoint(false)
-    val ctoks = ch.select(col("chunk_id"),
-      size(col("cwords")).cast("long").as("dl"),
-      explode(col("cwords")).as("word"))
-    val postings = ctoks.groupBy(col("word"), col("chunk_id"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      .localCheckpoint(false)
-    val dfAll = postings.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val stats = ch.agg(count(lit(1)).as("nn"),
-      sum(size(col("cwords")).cast("decimal(18,0)")).as("sdl0"))
-    (ce, postings, dfAll, stats)
+    partsOf(ch, ce, postingsOf(ch, None).localCheckpoint(false))
   }
 
-  /** INCREMENTAL index maintenance — the 100 TB ingest shape: at scale
-    * the serving index is a frozen artifact and a day's arrivals are a
-    * fraction of a percent of it, so rebuilding every aggregate from
-    * raw text (what [[chunkRetrieval]] does) is the wrong plan by three
-    * orders of magnitude. This operator serves from the FROZEN base
-    * index parts ([[indexParts]] of the non-delta documents,
-    * checkpointed — in production, [[graft.sources.Artifacts]] loads)
-    * merged with the freshly-computed parts of an arriving delta
-    * (doc_id ≡ 0 mod `deltaMod`). The merge is exact, not approximate:
-    * chunk grains are disjoint (union), df/nn/sdl are associative sums
-    * — so the result is BIT-EQUAL to a full rebuild over the whole
-    * corpus, which is why the oracle is [[chunkRetrieval]]'s verbatim
-    * and the equality is the correctness gate, not a tolerance. */
-  def chunkDeltaServe(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
-                      kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
-                      deltaMod: Long = 17L): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
+  /** Index source: every chunk. The chunk frame is pinned for its three
+    * consumers (postings, stats, embeddings) — without a boundary each
+    * re-runs the text scan + chunking from raw parquet. */
+  private def allChunks(ww: DataFrame, factor: Long, pw: DataFrame): Parts = {
+    val ch = chunksFrom(ww, factor).localCheckpoint(false)
+    partsOf(ch, chunkEmbeds(ch), postingsOf(ch, Some(pw)))
+  }
+
+  /** Index source: the semantic-dedup SURVIVORS — the production serving
+    * index. Dominated near-duplicate chunks drop BEFORE the arms, so
+    * corpus stats (chunk count, avgdl, chunk-df), both candidate lists
+    * and the cell arm's width reflect the deduped index. Survivor embeds
+    * come from the dedup chain's own pinned embed base (anti-joined, not
+    * re-embedded — [[survivorChunksAndCe]]). */
+  private def survivors(threshold: Double)(ww: DataFrame, factor: Long,
+                                           pw: DataFrame): Parts = {
+    val (sch0, sce) = survivorChunksAndCe(ww, factor, threshold)
+    val sch = sch0.localCheckpoint(false)
+    partsOf(sch, sce, postingsOf(sch, Some(pw)))
+  }
+
+  /** Index source: INCREMENTAL maintenance — the 100 TB ingest shape. At
+    * scale the serving index is a frozen artifact and a day's arrivals
+    * are a fraction of a percent of it, so rebuilding every aggregate
+    * from raw text is the wrong plan by three orders of magnitude. The
+    * FROZEN base parts ([[indexParts]] of the non-delta documents — in
+    * production, [[graft.sources.Artifacts]] loads) merge with the
+    * freshly-computed parts of an arriving delta (doc_id ≡ 0 mod
+    * `deltaMod`); both sides split the ONE pinned words frame. The merge
+    * is exact, not approximate: chunk grains are disjoint (union),
+    * df/nn/sdl are associative sums — so the served rows are BIT-EQUAL
+    * to a full rebuild. */
+  private def deltaParts(deltaMod: Long)(ww: DataFrame, factor: Long,
+                                         pw: DataFrame): Parts = {
     val isDelta = col("doc_id") % deltaMod === 0
-    // pinnedIndexParts replaces the four per-part checkpoints that each
-    // re-ran the base text scan + chunking from raw parquet (df and
-    // stats now aggregate the pinned postings/chunks instead); both
-    // sides split the ONE pinned words frame on the doc_id predicate
-    val (fce, fpost, fdf, fstat) =
-      pinnedIndexParts(chunksFrom(ww.filter(!isDelta), factor))
-    val (dce, dpost, ddf, dstat) =
-      pinnedIndexParts(chunksFrom(ww.filter(isDelta), factor))
-    val ce = fce.unionByName(dce)
-    val postings = fpost.unionByName(dpost)
-    val dfAll = fdf.unionByName(ddf)
-      .groupBy(col("word")).agg(sum(col("df")).as("df"))
-    val stats = fstat.unionByName(dstat)
-      .agg(sum(col("nn")).as("nn"), sum(col("sdl0")).as("sdl0"))
-    serveFromParts(ce, postings, dfAll, stats, documents, factor,
-      nProbes, k, kTerms, arm, rrfK)
+    val (fce, fpost, fdf, fstat) = indexParts(chunksFrom(ww.filter(!isDelta), factor))
+    val (dce, dpost, ddf, dstat) = indexParts(chunksFrom(ww.filter(isDelta), factor))
+    (fce.unionByName(dce), fpost.unionByName(dpost),
+      fdf.unionByName(ddf).groupBy(col("word")).agg(sum(col("df")).as("df")),
+      fstat.unionByName(dstat)
+        .agg(sum(col("nn")).as("nn"), sum(col("sdl0")).as("sdl0")))
   }
 
-  /** Serve [[chunkRetrieval]] from pre-built index parts — the entry a
-    * session holding only PERSISTED parts (StorageSpec round-trips
-    * them through parquet) uses; bit-equal to the rebuild whenever the
-    * parts are [[indexParts]] of the same corpus. */
-  private[graft] def serveFromParts(ce: DataFrame, postings: DataFrame,
-                                    dfAll: DataFrame, stats: DataFrame,
-                                    documents: DataFrame, factor: Long,
-                                    nProbes: Int = 10, k: Int = 10,
-                                    kTerms: Int = 8, arm: Int = 50,
-                                    rrfK: Int = 60): DataFrame =
-    rankServe(fuseArms(
-      lexArmFromParts(postings, dfAll, stats, documents,
-        nProbes, kTerms, arm, factor),
-      vecArmFromCe(ce, documents, nProbes, arm, factor), rrfK), factor, k)
-
-  /** [[serveFromParts]] with the PROMOTED cell-route vector arm — the
-    * full production combination: frozen index parts AND the cell-keyed
-    * candidate fetch. The ce part carries exactly [[chunkEmbeds]]'
-    * values, so the derived width, cells, and candidates are identical
-    * to the rebuild's. */
-  private[graft] def serveFromPartsAnn(ce: DataFrame, postings: DataFrame,
-                                       dfAll: DataFrame, stats: DataFrame,
-                                       documents: DataFrame, factor: Long,
-                                       nProbes: Int = 10, k: Int = 10,
-                                       kTerms: Int = 8, arm: Int = 50,
-                                       rrfK: Int = 60,
-                                       hamming: Int = 2): DataFrame =
-    rankServe(fuseArms(
-      lexArmFromParts(postings, dfAll, stats, documents,
-        nProbes, kTerms, arm, factor),
-      vecArmCellFromCe(ce, documents, nProbes, arm, factor, hamming),
-      rrfK), factor, k)
-
-  /** [[chunkDeltaServe]] with the cell-route arm — exact incremental
-    * maintenance AND the promoted candidate fetch in one serving shape.
-    * The parts merge is exact (disjoint unions + associative sums), so
-    * the merged ce is value-identical to the full rebuild's embeddings
-    * and the oracle is [[chunkRetrievalAnn]]'s VERBATIM — bit-equality
-    * to the from-scratch ANN retrieval is the gate. */
-  def chunkDeltaServeAnn(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
-                         kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
-                         deltaMod: Long = 17L, hamming: Int = 2): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
-    val isDelta = col("doc_id") % deltaMod === 0
-    // pinned parts — see [[chunkDeltaServe]]
-    val (fce, fpost, fdf, fstat) =
-      pinnedIndexParts(chunksFrom(ww.filter(!isDelta), factor))
-    val (dce, dpost, ddf, dstat) =
-      pinnedIndexParts(chunksFrom(ww.filter(isDelta), factor))
-    val ce = fce.unionByName(dce)
-    val postings = fpost.unionByName(dpost)
-    val dfAll = fdf.unionByName(ddf)
-      .groupBy(col("word")).agg(sum(col("df")).as("df"))
-    val stats = fstat.unionByName(dstat)
-      .agg(sum(col("nn")).as("nn"), sum(col("sdl0")).as("sdl0"))
-    serveFromPartsAnn(ce, postings, dfAll, stats, documents, factor,
-      nProbes, k, kTerms, arm, rrfK, hamming)
-  }
-
-  /** The artifact-lifecycle gate at INDEX scale — the q_bpe_subword_loaded
-    * pattern applied to the corpus-sized index parts: build
-    * [[indexParts]] once, persist every part STAMPED with its
+  /** Index source: the artifact lifecycle at INDEX scale — the
+    * q_bpe_subword_loaded pattern applied to the corpus-sized parts.
+    * [[indexParts]] are built once and persisted, each STAMPED with its
     * [[graft.sources.Artifacts.distributedVersion]] (the
     * order-insensitive xxhash64 aggregate — no driver collect, so it
     * works on frames that grow with the corpus, which
-    * [[graft.sources.Artifacts.artifactVersion]] by design cannot),
-    * reload with the stamp re-verified (corruption fails closed,
-    * StorageSpec), and serve retrieval from the LOADED parts. The
-    * oracle is [[chunkRetrieval]]'s VERBATIM: a persisted index must
-    * serve bit-equal to the rebuild. */
-  def chunkPartsLoaded(spark: SparkSession, documents: DataFrame,
-                       nProbes: Int = 10, k: Int = 10, kTerms: Int = 8,
-                       arm: Int = 50, rrfK: Int = 60): DataFrame = {
-    val ww = wordsFrame(documents)
-    val factor = factorFrom(ww)
-    // pinned parts: the four parts share one chunking — without the
-    // boundary each part's saveLarge would re-run the raw-text lineage
-    val (ce, postings, dfAll, stats) = pinnedIndexParts(chunksFrom(ww, factor))
+    * [[graft.sources.Artifacts.artifactVersion]] by design cannot), then
+    * reloaded with the stamp re-verified (corruption fails closed,
+    * StorageSpec). */
+  private def loadedParts(spark: SparkSession)(ww: DataFrame, factor: Long,
+                                               pw: DataFrame): Parts = {
+    val (ce, postings, dfAll, stats) = indexParts(chunksFrom(ww, factor))
     val tmp = java.nio.file.Files.createTempDirectory("graft-index-parts")
     // a shutdown hook that WALKS the tree, not File.deleteOnExit:
     // deleteOnExit removes only empty directories, so every run leaked
@@ -1175,15 +922,103 @@ object ChunkRetrieval {
           .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
       } catch { case _: Throwable => () }))
     val dir = tmp.toFile.getAbsolutePath
-    Seq("ce" -> ce, "postings" -> postings, "df" -> dfAll, "stats" -> stats)
+    val names = Seq("ce", "postings", "df", "stats")
+    names.zip(Seq(ce, postings, dfAll, stats))
       .foreach { case (n, f) => graft.sources.Artifacts.saveLarge(f, dir, n) }
-    val (lce, _) = graft.sources.Artifacts.loadLarge(spark, dir, "ce")
-    val (lpost, _) = graft.sources.Artifacts.loadLarge(spark, dir, "postings")
-    val (ldf, _) = graft.sources.Artifacts.loadLarge(spark, dir, "df")
-    val (lstat, _) = graft.sources.Artifacts.loadLarge(spark, dir, "stats")
-    serveFromParts(lce, lpost, ldf, lstat, documents, factor,
-      nProbes, k, kTerms, arm, rrfK)
+    val Seq(lce, lpost, ldf, lstat) =
+      names.map(graft.sources.Artifacts.loadLarge(spark, dir, _)._1)
+    (lce, lpost, ldf, lstat)
   }
+
+  /** The ONE hybrid chunk serve: the BM25 arm ([[lexArm]]) and the
+    * vector arm ([[vecArm]]) over one index, RRF-fused, deduped to one
+    * chunk per source document and ranked. Each public entry is a
+    * configuration of three choices:
+    *  - the index `source` (pinned words frame, factor, probe words) =>
+    *    parts: [[allChunks]], [[survivors]], [[deltaParts]] or
+    *    [[loadedParts]];
+    *  - the lexical arm's input form, fixed by the source: chunk-frame
+    *    sources build postings and df from the chunk frame restricted to
+    *    the probe words, part sources bring every word's;
+    *  - the vector arm's candidate route, `hamming`.
+    * The part sources serve bit-equal rows to the all-chunks rebuild
+    * under the same vector arm (ServeMatrixSpec). */
+  private def serve(documents: DataFrame, nProbes: Int, k: Int, kTerms: Int,
+                    arm: Int, rrfK: Int, hamming: Option[Int])(
+                    source: (DataFrame, Long, DataFrame) => Parts): DataFrame = {
+    val ww = wordsFrame(documents)
+    val factor = factorFrom(ww)
+    val pt = Ann.probeTerms(TextPrep.withWords(documents.filter(col("text").isNotNull))
+      .select(col("doc_id"), explode(col("words")).as("word")), nProbes, kTerms)
+    val (ce, postings, dfAll, stats) = source(ww, factor, pt.select("word").distinct())
+    rankServe(Ann.fuseArms(lexArm(postings, dfAll, stats, pt, arm, factor),
+      vecArm(ce, documents, nProbes, arm, factor, hamming), rrfK, "chunk_id"), factor, k)
+  }
+
+  /** Top-k chunks per probe, at most one per document, over all chunks
+    * with the brute-force vector arm — the reference every other source
+    * and arm is checked against. */
+  def chunkRetrieval(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
+                     kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, None)(allChunks)
+
+  /** [[chunkRetrieval]] with the cell-route vector arm — the production
+    * serving shape at corpus scale. Its own oracle mirrors the cell
+    * route exactly (candidates = Hamming-≤2 cells, re-ranked), so the
+    * key gates the PROMOTED plan, while Round14Spec pins that the served
+    * lists preserve the brute-force arm's label precision. */
+  def chunkRetrievalAnn(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
+                        kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
+                        hamming: Int = 2): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, Some(hamming))(allChunks)
+
+  /** [[chunkRetrieval]] served from the semantic-dedup survivors.
+    * Round13Spec pins that this preserves the full list's label
+    * precision@k (the q_chunk_eval device) while serving fewer chunks. */
+  def chunkServe(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
+                 kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
+                 threshold: Double = 0.95): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, None)(survivors(threshold))
+
+  /** [[chunkServe]] with the cell-route arm — the deduped serving index
+    * behind the promoted candidate fetch. */
+  def chunkServeAnn(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
+                    kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
+                    threshold: Double = 0.95, hamming: Int = 2): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, Some(hamming))(survivors(threshold))
+
+  /** [[chunkRetrieval]] served from frozen + delta parts; bit-equal to
+    * the rebuild, so its oracle is [[chunkRetrieval]]'s verbatim. */
+  def chunkDeltaServe(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
+                      kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
+                      deltaMod: Long = 17L): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, None)(deltaParts(deltaMod))
+
+  /** [[chunkRetrievalAnn]] served from frozen + delta parts; the merged
+    * ce is value-identical to the rebuild's embeddings, so the derived
+    * width, cells and candidates are too and the oracle is
+    * [[chunkRetrievalAnn]]'s verbatim. */
+  def chunkDeltaServeAnn(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
+                         kTerms: Int = 8, arm: Int = 50, rrfK: Int = 60,
+                         deltaMod: Long = 17L, hamming: Int = 2): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, Some(hamming))(deltaParts(deltaMod))
+
+  /** [[chunkRetrieval]] served from parts persisted and reloaded with
+    * their stamps verified; the oracle is [[chunkRetrieval]]'s verbatim:
+    * a persisted index must serve bit-equal to the rebuild. */
+  def chunkPartsLoaded(spark: SparkSession, documents: DataFrame,
+                       nProbes: Int = 10, k: Int = 10, kTerms: Int = 8,
+                       arm: Int = 50, rrfK: Int = 60): DataFrame =
+    serve(documents, nProbes, k, kTerms, arm, rrfK, None)(loadedParts(spark))
+
+  /** [[serve]] from parts built elsewhere (stream ingest, a parquet round
+    * trip) at the default serving parameters; bit-equal to the rebuild
+    * whenever the parts are [[indexParts]] of the same corpus. */
+  private[graft] def serveFromParts(ce: DataFrame, postings: DataFrame,
+                                    dfAll: DataFrame, stats: DataFrame,
+                                    documents: DataFrame,
+                                    hamming: Option[Int] = None): DataFrame =
+    serve(documents, 10, 10, 8, 50, 60, hamming)((_, _, _) => (ce, postings, dfAll, stats))
 
   /** Chunk-grain vs doc-grain label-relevance precision@k — the serving
     * decision beside [[Ann.hybridEval]]: does passage retrieval with
@@ -1225,21 +1060,6 @@ object ChunkRetrieval {
     }
     c.join(d, Seq("probe_id"), "full_outer").orderBy("probe_id")
   }
-
-  // test seams (Round14/15/16Spec): private stages of the chunk
-  // pipelines, exposed for plan-shape and pair-set assertions
-  private[graft] def probeVecArmCell(docs: DataFrame): DataFrame = {
-    val f = chunkFactorFor(docs)
-    vecArmCellFromCe(chunkEmbeds(chunks(docs, f)), docs, 10, 50, f, 2)
-  }
-  private[graft] def probeMpPairs(docs: DataFrame): DataFrame = {
-    val (cf, bits, _, n) = bandFitFrame(docs)
-    mpVerifiedPairs(cf, bits, 0.95, hamming = 1, nBands = mpBandCount, nRows = n)
-      .filter(col("chunk_id") < col("ca"))
-      .select(col("chunk_id").as("doc_a"), col("ca").as("doc_b"))
-  }
-  private[graft] def probeDominated(docs: DataFrame): DataFrame =
-    chunkDedup(docs).filter(!col("keep")).select(col("chunk_id"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_chunk_retrieval" -> ((s, d) => chunkRetrieval(Tables.documents(s, d))),

@@ -1,31 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper: writes `.explain("formatted")` of named declared
   * queries to <outDir>/<name>_<tag>.txt under the bench session config.
   * Not part of the driver contract.
-  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
+  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> [tag] [q1,q2,...]
+  * (tag defaults to `before`, the query list to every declared key).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val outDir = args.lift(1).getOrElse("/root/repo/plans/r15")
+    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [tag] [q1,q2,...]")
+    val Array(sfDir, outDir) = args.take(2)
     val tag = args.lift(2).getOrElse("before")
     val names: Seq[String] = args.lift(3) match {
       case Some(csv) => csv.split(",").toSeq
       case None => graft.SparkEntry.queries.keys.toSeq.sorted
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       graft.SparkEntry.queries.get(n) match {

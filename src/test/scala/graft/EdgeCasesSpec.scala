@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,11 +12,7 @@ import graft.text.{TextOps, Vocab}
   * source, one day, one language). Every operator must return an empty /
   * well-defined frame there, never throw. */
 class EdgeCasesSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("edge-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def emptyDocs = Tables.documents(spark, sf).limit(0)

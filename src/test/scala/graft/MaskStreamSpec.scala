@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Masking
@@ -11,13 +10,7 @@ import graft.streaming.{EventStream, ScoreStream}
   * shared maskTable — the two surfaces cannot drift), with no streaming
   * state anywhere in the plan (pure stateless Append). */
 class MaskStreamSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("maskstream-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("streamed masked events equal the batch masked projection bit-for-bit") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,11 +13,7 @@ import graft.text.{Packing, TextOps, Vocab}
   * lazy Catalyst plan per sink (operators never force actions
   * mid-pipeline). */
 class PipelineSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("pipeline-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("curate -> chunk -> pack composes lazily and conserves rows/tokens across stages") {

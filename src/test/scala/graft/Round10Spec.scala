@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.Inference
@@ -11,13 +10,7 @@ import graft.ml.Inference
   * (feature_store_manager.py:244-257) and the catalog-policy masking
   * operator. */
 class Round10Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("round10-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("customerDerived: tiers are balanced quartiles, monotone in CLV, churn clipped to [0,1]") {

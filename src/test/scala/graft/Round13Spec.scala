@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.ann.ChunkRetrieval
   * semantic dedup laws, and serving-from-survivors precision
   * preservation. */
 class Round13Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("round13-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val docs = Tables.documents(spark, sf)
@@ -205,8 +198,7 @@ class Round13Spec extends AnyFunSuite {
       bpost.collect().map(_.toSeq).toSet,
       "streamed postings diverged from the batch build")
     // and the parts SERVE bit-equal to the full rebuild
-    val served = ChunkRetrieval.serveFromParts(ce, postings, dfAll, stats,
-      docs, factor)
+    val served = ChunkRetrieval.serveFromParts(ce, postings, dfAll, stats, docs)
     assert(served.collect().map(_.toSeq).toSet ==
       ChunkRetrieval.chunkRetrieval(docs).collect().map(_.toSeq).toSet,
       "serving from stream-ingested parts diverged from the rebuild")

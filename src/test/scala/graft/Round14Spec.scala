@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.ann.ChunkRetrieval
   * gate scale, and carries the equi-join plan shape (a cell-keyed
   * fetch, not a per-probe corpus scan). */
 class Round14Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("round14-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val docs = Tables.documents(spark, sf)
@@ -51,7 +44,9 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("cell arm plan: a broadcast equi-join on cell, no per-probe corpus scan") {
-    val arm = ChunkRetrieval.probeVecArmCell(docs)
+    val f = ChunkRetrieval.chunkFactorFor(docs)
+    val arm = ChunkRetrieval.vecArm(
+      ChunkRetrieval.chunkEmbeds(ChunkRetrieval.chunks(docs, f)), docs, 10, 50, f, Some(2))
     arm.collect()
     val plan = arm.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)

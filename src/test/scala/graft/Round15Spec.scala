@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import graft.ann.ChunkRetrieval
   * exact transitive closure of the shared multiprobe pair generator,
   * consistent with the dedup verdicts it shares that generator with. */
 class Round15Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("round15-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
   private lazy val docs = Tables.documents(spark, sf)
 
@@ -50,7 +43,11 @@ class Round15Spec extends AnyFunSuite {
     // Reference closure: union-find over the collected verified pairs
     // (bounded at the gate SF). The operator's pointer-jumping labels
     // must agree EXACTLY — same node set, same min-id component labels.
-    val pairs = ChunkRetrieval.probeMpPairs(docs)
+    val (cf, bits, _, n) = ChunkRetrieval.bandFitFrame(docs)
+    val pairs = ChunkRetrieval.mpVerifiedPairs(cf, bits, 0.95, hamming = 1,
+        nBands = ChunkRetrieval.mpBandCount, nRows = n)
+      .filter(col("chunk_id") < col("ca"))
+      .select(col("chunk_id").as("doc_a"), col("ca").as("doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "gate corpus produced no verified pairs")
     val parent = scala.collection.mutable.Map[Long, Long]()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ import graft.sources.Artifacts
   * value-identical to re-embedding the survivor chunks — the
   * equivalence chunkServe/chunkServeAnn now rely on. */
 class Round16Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("round16-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
   private lazy val docs = Tables.documents(spark, sf)
 
@@ -78,7 +71,8 @@ class Round16Spec extends AnyFunSuite {
     // anti-join (dominated ids) == embeds of (chunks minus dominated)
     val factor = ChunkRetrieval.chunkFactorFor(docs)
     val ch = ChunkRetrieval.chunks(docs, factor)
-    val dominated = ChunkRetrieval.probeDominated(docs)
+    val dominated = ChunkRetrieval.chunkDedup(docs).filter(!col("keep"))
+      .select(col("chunk_id"))
     val reused = ChunkRetrieval.chunkEmbeds(ch)
       .join(dominated, Seq("chunk_id"), "left_anti")
     val rebuilt = ChunkRetrieval.chunkEmbeds(

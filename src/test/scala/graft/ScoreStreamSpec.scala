@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.ScoreStream
@@ -13,11 +12,7 @@ import graft.text.Vocab
   * agree with the batch top-fraction selection when the edge ships with
   * the artifact. */
 class ScoreStreamSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("scorestream-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("streamed DSIR scores and gate flags equal the batch operator bit-for-bit") {

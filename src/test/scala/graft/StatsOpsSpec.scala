@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.{Approx, TrainPrep}
@@ -14,13 +13,7 @@ import graft.text.{TextOps, Vocab}
   * and the HLL-union rollup contract.
   */
 class StatsOpsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("stats-ops-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("linregFit matches a local normal-equation solve; R2 sane; residuals sum to ~0") {

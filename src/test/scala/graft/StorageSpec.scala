@@ -268,7 +268,7 @@ class StorageSpec extends AnyFunSuite {
       df.write.mode("overwrite").parquet(s"$dir/$name")
     def back(name: String) = spark.read.parquet(s"$dir/$name")
     val served = ChunkRetrieval.serveFromParts(back("ce"), back("postings"),
-      back("df"), back("stats"), docs, factor)
+      back("df"), back("stats"), docs)
     val rebuilt = ChunkRetrieval.chunkRetrieval(docs)
     assert(served.count() > 0)
     assert(served.collect().map(_.toSeq).toSet ==

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.TrainPrep
@@ -13,13 +12,7 @@ import graft.text.Vocab
   * target encoder, the embargo gap's temporal ordering, the k-anonymity
   * floor, and hashing-trick mass conservation. */
 class TrainGovSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("train-gov-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("targetEncode: loo_enc equals the brute-force leave-one-out mean; 1-row class smooths to the prior") {

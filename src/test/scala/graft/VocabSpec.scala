@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +9,7 @@ import graft.text.Vocab
 /** Invariants for the vocabulary/chunking/projection operators beyond the
   * row-level oracle: coverage, monotonicity, and plan-shape properties. */
 class VocabSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("vocab-spec").getOrCreate()
+  private lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("tfidf: k rows per doc, ranks 1..k, scores non-increasing within a doc") {
