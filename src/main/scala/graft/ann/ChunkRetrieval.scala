@@ -725,8 +725,8 @@ object ChunkRetrieval {
     * that is a bounded fetch of Σ C(bits, i≤hamming) cells; this mart
     * MEASURES both sides of the tradeoff per probe — candidates
     * actually scanned (n_cand vs the full corpus) and top-k recall
-    * against the exact arm — the ann_eval calibration device at chunk
-    * grain. */
+    * against the exact arm ([[vecArm]]'s brute-force route) — the
+    * ann_eval calibration device at chunk grain. */
   def chunkAnnEval(documents: DataFrame, nProbes: Int = 10, k: Int = 10,
                    hamming: Int = 2): DataFrame = {
     val ww = wordsFrame(documents)
@@ -737,16 +737,11 @@ object ChunkRetrieval {
     val pe = queryEmbeds(documents, nProbes)
       .withColumn("pcell", cellAt("q", 0, bits))
       .localCheckpoint(false)
-    def cos = cosineOf("p", "nsq", "q", "pnsq")
-    val exact = Ann.topkPerProbe(base.crossJoin(broadcast(pe.drop("pcell")))
-      .filter(floor(col("chunk_id") / factor) =!= col("probe_id"))
-      .withColumn("cosine", cos)
-      .select(col("probe_id"), col("chunk_id").as("vec_id"), col("cosine")), k)
-      .localCheckpoint(false)
+    val exact = vecArm(base, documents, nProbes, k, factor, None).localCheckpoint(false)
     val cand = ce.crossJoin(broadcast(pe))
       .filter(expr(s"bit_count(cell ^ pcell) <= $hamming"))
       .filter(floor(col("chunk_id") / factor) =!= col("probe_id"))
-      .withColumn("cosine", cos)
+      .withColumn("cosine", cosineOf("p", "nsq", "q", "pnsq"))
       .select(col("probe_id"), col("chunk_id").as("vec_id"), col("cosine"))
       .localCheckpoint(false)
     val lsh = Ann.topkPerProbe(cand, k)

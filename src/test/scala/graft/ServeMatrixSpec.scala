@@ -27,9 +27,10 @@ class ServeMatrixSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
 
-  /** The full index parts, persisted stamped and loaded back verified. */
-  private def loadedParts(docs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve-matrix").toString
+  /** The full index parts, persisted stamped under `dir` and loaded back
+    * verified. */
+  private def loadedParts(docs: DataFrame,
+                          dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (ce, postings, dfAll, stats) = ChunkRetrieval.indexParts(
       ChunkRetrieval.chunks(docs, ChunkRetrieval.chunkFactorFor(docs)))
     val names = Seq("ce", "postings", "df", "stats")
@@ -46,7 +47,8 @@ class ServeMatrixSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val (lce, lpost, ldf, lstat) = loadedParts(docs)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-serve-matrix")
+    val (lce, lpost, ldf, lstat) = loadedParts(docs, tmp.toString)
     val Seq(brute, cell, deltaBrute, deltaCell, loadedBrute, loadedCell) =
       Await.result(Future.sequence(Seq(
         () => ChunkRetrieval.chunkRetrieval(docs),
@@ -64,6 +66,8 @@ class ServeMatrixSpec extends AnyFunSuite {
       assert(got == ref, s"$source x $arm arm diverged from the all-chunks rebuild: " +
         s"${got.diff(ref).take(3)} vs ${ref.diff(got).take(3)}")
     }
+    java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => { java.nio.file.Files.delete(p); () })
   }
 
   test("every source serves the all-chunks rows under both arms (sf0.001)") {
