@@ -904,19 +904,9 @@ object ChunkRetrieval {
   private def loadedParts(spark: SparkSession)(ww: DataFrame, factor: Long,
                                                pw: DataFrame): Parts = {
     val (ce, postings, dfAll, stats) = indexParts(chunksFrom(ww, factor))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-index-parts")
-    // a shutdown hook that WALKS the tree, not File.deleteOnExit:
-    // deleteOnExit removes only empty directories, so every run leaked
-    // four corpus-sized parquet trees under /tmp. Deletion can't happen
-    // eagerly — the returned frame stays parquet-backed until the
-    // caller's action
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        java.nio.file.Files.walk(tmp)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      } catch { case _: Throwable => () }))
-    val dir = tmp.toFile.getAbsolutePath
+    // removed at exit, not eagerly: the returned frames stay
+    // parquet-backed until the caller's action
+    val dir = graft.sources.Scratch.dir("graft-index-parts").toString
     val names = Seq("ce", "postings", "df", "stats")
     names.zip(Seq(ce, postings, dfAll, stats))
       .foreach { case (n, f) => graft.sources.Artifacts.saveLarge(f, dir, n) }

@@ -1,8 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.util.SizeEstimator
 
 import graft.Tables
 import graft.functions.Fns._
@@ -216,12 +218,12 @@ object Dedup {
   /** Near-dup CLUSTER assignment — the step after candidate pairs that a
     * real dedup pipeline needs: connected components over the LSH pair
     * graph, every doc labeled with its component's minimum doc_id so one
-    * canonical survivor per cluster can be kept. Distributed min-label
-    * propagation: each round joins labels across edges and keeps the
-    * smaller label, converging in O(component diameter) rounds (near-dup
-    * clusters are shallow; each round is one shuffle join — the standard
-    * large-scale connected-components shape). The fixpoint (min node id
-    * per component) is unique, so the result is deterministic and
+    * canonical survivor per cluster can be kept. [[propagate]] labels
+    * the components: on the driver by union-find when the edge list fits
+    * its heap-derived bound, else by distributed min-label propagation
+    * with pointer jumping (the standard large-scale connected-components
+    * shape). The labeling (min node id per component) is unique, so the
+    * result is deterministic, identical on both branches and
     * oracle-reproducible via a recursive CTE. */
   def nearDupClusters(documents: DataFrame, bucketLimit: Int = 100,
                       maxIters: Int = 20): DataFrame =
@@ -230,12 +232,20 @@ object Dedup {
         (col("id") =!= col("label")).as("is_duplicate"))
       .orderBy("doc_id")
 
-  /** Distributed min-label propagation over ANY candidate-pair frame
-    * (columns doc_a, doc_b) — the connected-components engine behind
-    * [[nearDupClusters]] and the embedding-cluster survivor mart
-    * ([[graft.ann.Ann.embedSurvivors]]). Returns (id, label): every node
-    * of the pair graph labeled with its component's minimum id. */
-  private[graft] def propagate(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  /** Connected components of ANY candidate-pair frame (columns doc_a,
+    * doc_b of one integral id type) — the engine behind
+    * [[nearDupClusters]], the embedding-cluster survivor mart
+    * ([[graft.ann.Ann.embedSurvivors]]) and the chunk cluster marts.
+    * Returns (id, label): every node of the pair graph labeled with its
+    * component's minimum id. One `limit(bound + 1)` collect of the edge
+    * checkpoint decides the branch: an edge list within `driverEdges`
+    * (default [[driverEdgeBound]]) is labeled on the driver by
+    * [[minLabels]] and returned as a local relation — no further job;
+    * a larger one runs the distributed min-label loop, the only path
+    * that scales to corpus-sized graphs. Both give the same labels
+    * (ConnectedComponentsSpec). */
+  private[graft] def propagate(pairs: DataFrame, maxIters: Int = 20,
+                               driverEdges: Long = driverEdgeBound): DataFrame = {
     // Both edge orientations come out of ONE pass over the pair stream
     // (explode, not a union of two scans that would each re-run the
     // candidate-join lineage). Persisted once; every round reads it.
@@ -250,6 +260,78 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(false)
+    val idType = edges.schema("src").dataType
+    val small = if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(idType)) None
+      else {
+        val got = edges.limit(math.min(driverEdges, Int.MaxValue - 1L).toInt + 1).collect()
+        if (got.length > driverEdges || got.exists(e => e.isNullAt(0) || e.isNullAt(1))) None
+        else Some(got)
+      }
+    small match {
+      case Some(got) =>
+        edges.unpersist()
+        val num = (v: Any) => v.asInstanceOf[Number].longValue
+        val (ids, labels) = minLabels(got.map(e => num(e.get(0))), got.map(e => num(e.get(1))))
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        ids.zip(labels).toSeq.toDF("id", "label")
+          .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
+      case None => labelLoop(edges, maxIters)
+    }
+  }
+
+  /** Union-find connected components of an edge list on the driver:
+    * returns (node ids ascending, each node's component minimum). Nodes
+    * are indexed in id order and every union links the larger root
+    * under the smaller, so a root is always its component's smallest
+    * index — the minimum id, the same label the distributed loop
+    * converges to. Path halving keeps each find near-constant. */
+  private[dedup] def minLabels(src: Array[Long],
+                               dst: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = src ++ dst
+    java.util.Arrays.sort(all)
+    val ids = if (all.isEmpty) all else {
+      val b = Array.newBuilder[Long]
+      b += all(0)
+      (1 until all.length).foreach(i => if (all(i) != all(i - 1)) b += all(i))
+      b.result()
+    }
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    src.indices.foreach { k =>
+      val a = find(java.util.Arrays.binarySearch(ids, src(k)))
+      val b = find(java.util.Arrays.binarySearch(ids, dst(k)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (ids, Array.tabulate(ids.length)(i => ids(find(i))))
+  }
+
+  /** Driver bytes one collected edge costs on [[propagate]]'s driver
+    * branch — its collected row plus its share of [[minLabels]]'
+    * arrays — measured once with Spark's SizeEstimator on a sample
+    * chain, so the bound follows the JVM's real object layout. */
+  private lazy val bytesPerEdge: Long = {
+    val n = 4096
+    val rows = Array.tabulate[Row](n)(i => Row(i.toLong, i + 1L))
+    val (src, dst) = (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    val (ids, labels) = minLabels(src, dst)
+    val parent = Array.tabulate(ids.length)(identity)
+    math.max(1L, SizeEstimator.estimate(
+      Array[AnyRef](rows, src, dst, src ++ dst, ids, labels, parent)) / n)
+  }
+
+  /** The largest edge list [[propagate]] labels on the driver: an
+    * eighth of the driver heap at the measured per-edge cost. */
+  private[graft] def driverEdgeBound: Long =
+    Runtime.getRuntime.maxMemory / 8 / bytesPerEdge
+
+  /** The distributed branch of [[propagate]]: min-label propagation
+    * with pointer jumping over the checkpointed directed `edges`. */
+  private def labelLoop(edges: DataFrame, maxIters: Int): DataFrame = {
     // Seed with least(id, min(neighbor)) — the node-set groupBy has to
     // shuffle anyway, so the first propagation round rides along free.
     var labels = edges.groupBy(col("src"))
@@ -258,8 +340,7 @@ object Dedup {
       .localCheckpoint(false)
     // labels only ever decrease, so the label-sum is a strictly-monotone
     // convergence witness — one tiny aggregate instead of a
-    // change-detection join. The seed materialization also fills the
-    // edges cache (one job does both).
+    // change-detection join.
     // coalesce: sum over an empty label set (no near-dup pairs at all —
     // a fully-unique corpus slice) is NULL, which must read as converged,
     // not throw

@@ -13,9 +13,8 @@ import scala.jdk.CollectionConverters._
   * the partition column's values live only in the `key=value` directory
   * names, so flattening would stream every row with that column NULL —
   * batch-correct, stream-silently-wrong. The scratch dir is per-call
-  * and cleaned at JVM exit (deleteOnExit runs in reverse registration
-  * order — dir first, links after, so the links inside delete before
-  * the dir). A real deployment points the stream straight at its
+  * and removed with its links at JVM exit ([[graft.sources.Scratch]]).
+  * A real deployment points the stream straight at its
   * landing directory and never takes this path. */
 object Staging {
 
@@ -26,8 +25,7 @@ object Staging {
     * and when the source is a `key=value` partitioned layout (see
     * object doc: flattening would NULL the partition column). */
   def stageParquet(dir: String, table: String, scratchPrefix: String): String = {
-    val streamDir = Files.createTempDirectory(scratchPrefix)
-    streamDir.toFile.deleteOnExit()
+    val streamDir = graft.sources.Scratch.dir(scratchPrefix)
     val src = Paths.get(s"$dir/$table.parquet")
     val dataFiles: List[Path] =
       if (Files.isDirectory(src)) {
@@ -60,7 +58,6 @@ object Staging {
         "refusing to stage an empty stream source")
     dataFiles.zipWithIndex.foreach { case (f, i) =>
       Files.createSymbolicLink(streamDir.resolve(f"part-$i%05d.parquet"), f)
-        .toFile.deleteOnExit()
     }
     streamDir.toString
   }

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.Fns._
@@ -35,9 +36,11 @@ import graft.functions.Fns._
   *     round's ONLY shuffle is the weighted pair count — hash
   *     partial-aggregated map-side, so the exchange moves at most
   *     partitions × realized-pair-vocab rows, never the token stream.
-  *   - The round's selected pairs become a ONE-ROW broadcast merge
-  *     artifact; the merge itself is a row-local string replace (no
-  *     shuffle).
+  *   - The round's ≤ cap selected pairs are collected to the driver
+  *     (the loop needs them there anyway) and folded back in as a
+  *     literal array; the merge itself is a row-local string replace
+  *     (no shuffle, no join), and the merge table is assembled on the
+  *     driver — `rounds × cap` rows at any corpus size.
   *   - A fixed round count keeps the job graph static; per-round plans
   *     stay O(1) because state lineage is cut at each checkpoint. On a
   *     real cluster the localCheckpoints become reliable checkpoints to
@@ -74,12 +77,13 @@ object Bpe {
       .filter(col("norm") =!= "")
       .select(col("doc_id"), col("words").as("toks"))
 
-  /** The merge fold: replay the one-row artifact `ms` (see
-    * [[mergeArtifact]]) in its rank order over the symbol-array SQL
-    * expression `syms` — frame the array with chr(1)||chr(1) between
-    * symbols and at both ends, run one `replace` per merge (see the
-    * object doc), split back once at the end. `replace` and `split` are
-    * O(n) string scans; an empty artifact is the identity. */
+  /** The merge fold: replay the merge array `ms` (a training round's
+    * literal winners, or the one-row artifact of [[mergeArtifact]]) in
+    * its rank order over the symbol-array SQL expression `syms` — frame
+    * the array with chr(1)||chr(1) between symbols and at both ends,
+    * run one `replace` per merge (see the object doc), split back once
+    * at the end. `replace` and `split` are O(n) string scans; an empty
+    * artifact is the identity. */
   private[text] def foldSql(syms: String, joiner: String): String =
     s"""filter(split(aggregate(ms,
          concat('$SEP2', concat_ws('$SEP2', $syms), '$SEP2'), (acc, m) ->
@@ -102,23 +106,29 @@ object Bpe {
     * pairs, then up to `cap` pairs ranked by (count desc, a, b) that no
     * token-sharing rival beats (locally maximal, hence pairwise
     * token-disjoint: two overlapping survivors would each have to beat
-    * the other), folded into the state in rank order by [[foldSql]].
-    * The global top pair always survives and ranks first, so at
-    * `cap` = 1 it is the whole selection and the rival self-join is
-    * skipped — one eager checkpoint per round. At `cap` > 1 merges per
-    * driver round-trip go from 1 to cap, with every count of a batch
-    * measured at round start (the standard batched-BPE approximation).
-    * Table: (round, batch_rank, tok_a, tok_b, merged, pair_n), pair_n
-    * the pair's weighted count at merge time. The final state stays
-    * checkpointed — callers release or read it (the specs pin
-    * apply == train on it). */
+    * the other), collected to the driver and folded into the state in
+    * rank order by [[foldSql]] over a literal `ms` array. The global
+    * top pair always survives and ranks first, so at `cap` = 1 it is
+    * the whole selection and the rival self-join is skipped — a round
+    * is the pair count's two jobs (its shuffle and the winner collect,
+    * which also materializes the previous round's lazy state
+    * checkpoint). At `cap` > 1 merges per driver round-trip go from 1
+    * to cap, with every count of a batch measured at round start (the
+    * standard batched-BPE approximation). A round without pairs ends
+    * the loop: the state can no longer change. Table: a local relation
+    * (round, batch_rank, tok_a, tok_b, merged, pair_n) in application
+    * order, pair_n the pair's weighted count at merge time. The final
+    * state stays checkpointed — callers release or read it (the specs
+    * pin apply == train on it). */
   private[graft] def mergeRounds(state0: DataFrame, symbols: String,
                                  weight: Column, joiner: String,
                                  rounds: Int, cap: Int): (DataFrame, DataFrame) = {
     var state = state0.localCheckpoint(false)
     val held = scala.collection.mutable.ArrayBuffer(state)
-    var merges = Vector.empty[DataFrame]
-    for (r <- 1 to rounds) {
+    val table = Vector.newBuilder[Row]
+    var r = 1
+    var exhausted = false
+    while (r <= rounds && !exhausted) {
       val pairs = state.filter(size(col(symbols)) >= 2)
         .select(weight.as("w"), explode(expr(s"transform(sequence(0, size($symbols) - 2)," +
           s" i -> struct($symbols[i] AS a, $symbols[i+1] AS b))")).as("p"))
@@ -136,32 +146,37 @@ object Bpe {
           .filter(col("qk") < col("k")).select(col("a"), col("b")).distinct()
         counted.join(beaten, Seq("a", "b"), "left_anti")
       }
-      // the round's merge artifact, checkpointed eagerly: runs this
-      // round's pair count once and cuts the lineage so the table union
-      // never recounts. The structs sort by (-count, a, b), which is the
-      // batch's rank order; an exhausted round is one row with an empty
-      // batch, which folds as the identity.
-      val art = cands.orderBy(col("cnt").desc, col("a"), col("b")).limit(cap)
-        .agg(array_sort(collect_list(struct((-col("cnt")).as("neg_n"),
-          col("a").as("tok_a"), col("b").as("tok_b")))).as("ms"))
-        .localCheckpoint()
-      held += art
-      merges :+= art.select(posexplode(col("ms")))
-        .select(lit(r).as("round"), (col("pos") + 1).as("batch_rank"),
-          col("col.tok_a"), col("col.tok_b"),
-          concat(col("col.tok_a"), lit(joiner), col("col.tok_b")).as("merged"),
-          (-col("col.neg_n")).as("pair_n"))
-      state = state.crossJoin(broadcast(art))
-        .withColumn(symbols, expr(foldSql(symbols, joiner)))
-        .drop("ms")
-        .localCheckpoint(false)
-      held += state
+      val won = cands.orderBy(col("cnt").desc, col("a"), col("b"))
+        .select(col("a"), col("b"), col("cnt")).limit(cap).collect()
+      exhausted = won.isEmpty
+      if (!exhausted) {
+        won.zipWithIndex.foreach { case (w, i) =>
+          val (a, b) = (w.getString(0), w.getString(1))
+          table += Row(r, i + 1, a, b, a + joiner + b, w.getLong(2))
+        }
+        val ms = array(won.toSeq.map(w =>
+          struct(lit(w.getString(0)).as("tok_a"), lit(w.getString(1)).as("tok_b"))): _*)
+        state = state.withColumn("ms", ms)
+          .withColumn(symbols, expr(foldSql(symbols, joiner)))
+          .drop("ms")
+          .localCheckpoint(false)
+        held += state
+      }
+      r += 1
     }
-    val table = merges.reduce(_.unionByName(_))
-      .orderBy("round", "batch_rank").localCheckpoint()
     held.dropRight(1).foreach(_.unpersist())
-    (table, state)
+    val spark = state0.sparkSession
+    (spark.createDataFrame(java.util.Arrays.asList(table.result(): _*), mergeSchema), state)
   }
+
+  /** The merge table's columns; [[graft.sources.Artifacts]] stamps
+    * `name:type`, so these types are part of a persisted table's
+    * version (BpeKernelSpec pins them). */
+  private val mergeSchema = StructType(Seq(
+    StructField("round", IntegerType, nullable = false),
+    StructField("batch_rank", IntegerType, nullable = false),
+    StructField("tok_a", StringType), StructField("tok_b", StringType),
+    StructField("merged", StringType), StructField("pair_n", LongType)))
 
   /** Word-grain training; returns (merge table, final token state). */
   private[graft] def trainWithState(documents: DataFrame,

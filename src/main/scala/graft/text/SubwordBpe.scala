@@ -213,12 +213,9 @@ object SubwordBpe {
     // verbatim, because a persisted artifact must serve bit-equal
     "q_bpe_subword_loaded" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-artifacts").toFile
-      tmp.deleteOnExit()
-      graft.sources.Artifacts.save(subwordTrain(docs),
-        tmp.getAbsolutePath, "subword_merges")
-      val (loaded, _) = graft.sources.Artifacts.load(s,
-        tmp.getAbsolutePath, "subword_merges")
+      val tmp = graft.sources.Scratch.dir("graft-artifacts").toString
+      graft.sources.Artifacts.save(subwordTrain(docs), tmp, "subword_merges")
+      val (loaded, _) = graft.sources.Artifacts.load(s, tmp, "subword_merges")
       subwordApply(docs, loaded)
     })
   )

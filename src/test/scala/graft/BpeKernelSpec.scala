@@ -158,4 +158,38 @@ class BpeKernelSpec extends AnyFunSuite {
     assert(chars.map(m => (m._2, m._3, m._4, m._6)) ==
       Seq((1, "a", "b", 4L), (2, "c", "d", 2L)))
   }
+
+  test("the merge table's schema is pinned at both grains, cap 1 and 4, and when empty") {
+    // Artifacts.artifactVersion hashes name:type, so a drift here would
+    // silently restamp every persisted merge table
+    val pinned = Seq("round:int", "batch_rank:int", "tok_a:string", "tok_b:string",
+      "merged:string", "pair_n:bigint")
+    for (docs <- Seq(docsOf("a b a b c"), docsOf("hello")); subword <- Seq(false, true);
+         cap <- Seq(1, 4)) {
+      val (state0, symCol, weight, joiner) =
+        if (subword) (SubwordBpe.wordState(docs), "syms", col("n"), "")
+        else (Bpe.tokenState(docs), "toks", lit(1L), " ")
+      val (table, finalState) = Bpe.mergeRounds(state0, symCol, weight, joiner, 2, cap)
+      finalState.unpersist()
+      assert(table.schema.map(f => s"${f.name}:${f.dataType.simpleString}") == pinned)
+    }
+  }
+
+  test("cap-1 training starts at most 2R + 2 jobs over R rounds (sf0.001, both grains)") {
+    // a round is its pair count's shuffle job and the winner collect;
+    // the merge table is built on the driver, so nothing else runs
+    val docs = Tables.documents(spark, sf)
+    val rounds = 8
+    for (subword <- Seq(false, true)) {
+      val (state0, symCol, weight, joiner) =
+        if (subword) (SubwordBpe.wordState(docs), "syms", col("n"), "")
+        else (Bpe.tokenState(docs), "toks", lit(1L), " ")
+      val ((table, finalState), jobs) =
+        jobsDuring(Bpe.mergeRounds(state0, symCol, weight, joiner, rounds, cap = 1))
+      finalState.unpersist()
+      assert(table.count() == rounds, "the corpus must not run out of pairs")
+      assert(jobs <= 2 * rounds + 2,
+        s"${if (subword) "subword" else "word"} grain: $jobs jobs over $rounds rounds")
+    }
+  }
 }

@@ -69,10 +69,14 @@ class EdgeCasesSpec extends AnyFunSuite {
     val n = 400
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1))
       .toDF("doc_a", "doc_b")
-    val labels = Dedup.propagate(pairs)
-    assert(labels.count() == n)
-    assert(labels.filter(col("label") =!= 0L).count() == 0,
-      "every chained doc must reach the chain-minimum label")
+    // both branches: the driver union-find (default bound) and the
+    // distributed loop (bound 0 forces it)
+    for (driverEdges <- Seq(Dedup.driverEdgeBound, 0L)) {
+      val labels = Dedup.propagate(pairs, driverEdges = driverEdges)
+      assert(labels.count() == n)
+      assert(labels.filter(col("label") =!= 0L).count() == 0,
+        s"every chained doc must reach the chain-minimum label (bound $driverEdges)")
+    }
   }
 
   test("hierAssign emits one row per vector under total cosine ties") {

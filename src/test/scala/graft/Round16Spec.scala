@@ -41,27 +41,28 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("write-first saveLarge: round-trip verifies; total truncation fails closed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r16-parts").toString
-    val factor = ChunkRetrieval.chunkFactorFor(docs)
-    val (_, postings, _, _) =
-      ChunkRetrieval.indexParts(ChunkRetrieval.chunks(docs, factor))
-    val v = Artifacts.saveLarge(postings, dir, "postings")
-    // the stamp computed from the WRITTEN parquet equals the stamp of
-    // the in-memory frame (every column type round-trips exactly) —
-    // the guarantee the single-evaluation save relies on
-    assert(v == Artifacts.distributedVersion(postings))
-    val (lp, lv) = Artifacts.loadLarge(spark, dir, "postings")
-    assert(lv == v)
-    assert(lp.exceptAll(postings).count() == 0 &&
-      postings.exceptAll(lp).count() == 0)
-    // TOTAL truncation: every row-bearing file lost, sidecar intact —
-    // the hole the sidecar exists to close; must fail loud at load
-    val partDir = new java.io.File(s"$dir/postings")
-    partDir.listFiles().filter(_.getName.endsWith(".parquet"))
-      .foreach(f => assert(f.delete(), s"could not delete $f"))
-    assertThrows[Exception] {
-      val (df, _) = Artifacts.loadLarge(spark, dir, "postings")
-      df.collect()
+    TestSession.withTempDir("graft-r16-parts") { dir =>
+      val factor = ChunkRetrieval.chunkFactorFor(docs)
+      val (_, postings, _, _) =
+        ChunkRetrieval.indexParts(ChunkRetrieval.chunks(docs, factor))
+      val v = Artifacts.saveLarge(postings, dir, "postings")
+      // the stamp computed from the WRITTEN parquet equals the stamp of
+      // the in-memory frame (every column type round-trips exactly) —
+      // the guarantee the single-evaluation save relies on
+      assert(v == Artifacts.distributedVersion(postings))
+      val (lp, lv) = Artifacts.loadLarge(spark, dir, "postings")
+      assert(lv == v)
+      assert(lp.exceptAll(postings).count() == 0 &&
+        postings.exceptAll(lp).count() == 0)
+      // TOTAL truncation: every row-bearing file lost, sidecar intact —
+      // the hole the sidecar exists to close; must fail loud at load
+      val partDir = new java.io.File(s"$dir/postings")
+      partDir.listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(f => assert(f.delete(), s"could not delete $f"))
+      assertThrows[Exception] {
+        val (df, _) = Artifacts.loadLarge(spark, dir, "postings")
+        df.collect()
+      }
     }
   }
 

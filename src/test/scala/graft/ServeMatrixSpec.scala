@@ -66,8 +66,7 @@ class ServeMatrixSpec extends AnyFunSuite {
       assert(got == ref, s"$source x $arm arm diverged from the all-chunks rebuild: " +
         s"${got.diff(ref).take(3)} vs ${ref.diff(got).take(3)}")
     }
-    java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => { java.nio.file.Files.delete(p); () })
+    TestSession.rmTree(tmp.toString)
   }
 
   test("every source serves the all-chunks rows under both arms (sf0.001)") {

@@ -8,20 +8,6 @@ import graft.streaming.Sinks
 class SinksSpec extends AnyFunSuite {
   import TestSession._
 
-  /** Recursive delete — deleteOnExit can't remove the non-empty parquet/
-    * checkpoint trees Spark creates under the scratch dirs. */
-  private def rmTree(root: String): Unit = {
-    import java.nio.file.{Path, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(root)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-  }
-
   test("exactly-once parquet sink: complete, idempotent under replay, restart-safe") {
     val srcDir = Files.createTempDirectory("graft-sink-src").toString
     val target = Files.createTempDirectory("graft-sink-t").toString

@@ -1,13 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-/** The one session of the forked test JVM (local[4]), shared by every spec. */
-object TestSession {
-  lazy val spark: SparkSession = Sessions.local(4)
-  val sf: String = "/root/testdata/sf0.001"
-}
 
 class WarehouseSpec extends AnyFunSuite {
   import TestSession._
