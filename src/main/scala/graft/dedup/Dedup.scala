@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.util.SizeEstimator
 
 import graft.Tables
@@ -260,23 +259,17 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(false)
-    val idType = edges.schema("src").dataType
-    val small = if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(idType)) None
-      else {
-        val got = edges.limit(math.min(driverEdges, Int.MaxValue - 1L).toInt + 1).collect()
-        if (got.length > driverEdges || got.exists(e => e.isNullAt(0) || e.isNullAt(1))) None
-        else Some(got)
-      }
-    small match {
-      case Some(got) =>
-        edges.unpersist()
-        val num = (v: Any) => v.asInstanceOf[Number].longValue
-        val (ids, labels) = minLabels(got.map(e => num(e.get(0))), got.map(e => num(e.get(1))))
-        val spark = pairs.sparkSession
-        import spark.implicits._
-        ids.zip(labels).toSeq.toDF("id", "label")
-          .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
-      case None => labelLoop(edges, maxIters)
+    val got = edges.limit(math.min(driverEdges, Int.MaxValue - 1L).toInt + 1).collect()
+    if (got.length > driverEdges) labelLoop(edges, maxIters)
+    else {
+      edges.unpersist()
+      val id = (e: Row, i: Int) => e.getAs[Number](i).longValue
+      val (ids, labels) = minLabels(got.map(id(_, 0)), got.map(id(_, 1)))
+      val idType = edges.schema("src").dataType
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      ids.zip(labels).toSeq.toDF("id", "label")
+        .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
     }
   }
 
