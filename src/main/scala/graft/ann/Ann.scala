@@ -571,7 +571,7 @@ object Ann {
     * m codes, and the exact reconstruction distance — the staleness
     * signal [[indexStaleness]] aggregates: a rising recon_l2 on arrivals
     * says the frozen codebook no longer covers the distribution and a
-    * [[Embeddings.pqLloydCsub]] retrain is due. Cost: one broadcast of
+    * codebook retrain (Lloyd refinement) is due. Cost: one broadcast of
     * the (kCents + kCodes·m) artifacts against the NEW batch only. */
   def pqIncrement(newVecs: DataFrame, corpus: DataFrame, kCents: Int = 16,
                   m: Int = 8, subDim: Int = 8, kCodes: Int = 64): DataFrame = {
@@ -1018,8 +1018,8 @@ object Ann {
   }
 
   /** ADC recall@k against an EXPLICIT subspace codebook — the A/B seam
-    * that compares codebook TRAINING (hash sample vs
-    * [[Embeddings.pqLloydCsub]]) through the identical search plan,
+    * that compares codebook TRAINING (hash sample vs Lloyd-refined
+    * entries) through the identical search plan,
     * exactly as [[annEval]]'s `cents` does for IVF centroids. */
   private[graft] def pqEvalWith(embeddings: DataFrame, csub: DataFrame,
                                 nProbes: Int = 10, k: Int = 10,

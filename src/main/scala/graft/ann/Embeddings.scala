@@ -153,7 +153,8 @@ object Embeddings {
 
   /** [[pqAssign]] against an explicit subspace codebook (centroid_id,
     * cm, cv) — the seam that lets the SAME assignment plan run over the
-    * hash sample or Lloyd-refined entries ([[pqLloydCsub]]). */
+    * hash sample or Lloyd-refined entries (Round11Spec's Lloyd
+    * refinement). */
   private[graft] def pqAssignWith(sub: DataFrame, csub: DataFrame): DataFrame = {
     graft.functions.DotScaled.register(sub.sparkSession)
     def d(a: String, b: String) =
@@ -164,46 +165,6 @@ object Embeddings {
       .agg(min(struct(col("d2"), col("centroid_id"))).as("best"))
       .select(col("vec_id"), col("m"),
         col("best.centroid_id").as("centroid_id"), col("best.d2").as("d2"))
-  }
-
-  /** Lloyd (per-subspace k-means) refinement of the PQ codebook — the
-    * [[Ann.lloydCentroids]] twin for the quantizer, and the codebook-
-    * quality lever q_pq_quality's utilization/distortion columns decide
-    * on. Each round: assign every sub-vector to its nearest entry (the
-    * shared [[pqAssignWith]] plan) and recompute each (subspace, code)
-    * entry as the elementwise mean of its members — a
-    * (m·kCodes·subDim)-row aggregate, partial-aggregated, never a
-    * corpus-sized collect. Entries that lose all members drop out
-    * (utilization can only concentrate, like lloydCentroids). The spec
-    * pins the k-means contract (mean total distortion non-increasing
-    * per round) and A/Bs ADC recall through [[Ann.pqEvalWith]].
-    *
-    * MEASURED (sf0.01, m=8/subDim=8/kCodes=64): mean d2 0.0573 (hash)
-    * → 0.0455 / 0.0427 / 0.0411 after 1/2/4 rounds (−26% at the
-    * 2-round default), ADC recall@10 0.32 → 0.39 at 2 rounds (4 rounds
-    * buys no more at this probe budget). Worth shipping when the
-    * serving path is ADC-only; once the refine stage runs, recall is
-    * already at the IVF probing ceiling ([[Ann.pqSearch]]'s scaladoc)
-    * and the codebook choice is immaterial. */
-  private[graft] def pqLloydCsub(embeddings: DataFrame, m: Int = 8,
-                                 subDim: Int = 8, k: Int = 64,
-                                 iters: Int = 2): DataFrame = {
-    val sub = subFrame(embeddings, m, subDim).localCheckpoint(false)
-    var csub = csubOf(pqCodebook(embeddings, k), m, subDim)
-    for (_ <- 1 to iters) {
-      val assigned = pqAssignWith(sub, csub)
-        .join(sub, Seq("vec_id", "m"))
-      csub = assigned
-        .select(col("m"), col("centroid_id"), posexplode(col("sv")).as(Seq("j", "x")))
-        .groupBy(col("m"), col("centroid_id"), col("j"))
-        .agg(avg(col("x").cast("double")).as("mx"))
-        .groupBy(col("centroid_id"), col("m"))
-        .agg(expr("transform(array_sort(collect_list(struct(j, mx))), s -> cast(s.mx as float))")
-          .as("cv"))
-        .select(col("centroid_id"), col("m").as("cm"), col("cv"))
-        .localCheckpoint(false)
-    }
-    csub
   }
 
   def pqCodes(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,

@@ -15,7 +15,10 @@ import graft.text.TextPrep
   * top-k all evaluate as row expressions, so the query holds ZERO
   * aggregation state (asserted inside the operator) and the emitted
   * rows are BIT-EQUAL to batch [[ChunkRetrieval.chunkRetrieval]] for
-  * the same probes (Round13Spec).
+  * the same probes (Round13Spec) — and, with `hamming = Some(2)`, to
+  * batch [[ChunkRetrieval.chunkRetrievalAnn]] (Round14Spec): the vector
+  * arm is chosen by the artifact, as batch [[ChunkRetrieval.vecArm]]
+  * chooses it by its `hamming` argument.
   *
   * The artifact: chunk embeddings as one sorted entry array, the
   * chunk-grain BM25 postings with each (word, chunk) contribution
@@ -43,12 +46,70 @@ object ChunkStream {
 
   private val dims = ChunkRetrieval.hashDims
 
+  private val entryArr = "array<struct<chunk_id:bigint,p:array<bigint>,nsq:bigint>>"
+
+  /** `body` with `v` bound to `value`: a single-element
+    * `transform(array(value), v -> body)`, so `value` evaluates once per
+    * row however often `body` reads it (see [[serveRows]]). */
+  private def let1(value: String, v: String, body: String): String =
+    s"element_at(transform(array($value), $v -> $body), 1)"
+
+  /** The hash/JL embedding of the string array `words` as one row
+    * expression: the per-word (bucket, sgn) fold into 64 bucket counts
+    * (== the batch map-side sums, integer and associative), bound once
+    * as `bcv`, then the sign-matrix fold — bit-equal to the batch
+    * [[ChunkRetrieval.chunkEmbeds]] shuffle build. */
+  private def embedSql(words: String): String = let1(
+    s"""aggregate(transform($words, w -> struct(
+       pmod((instr('0123456789abcdef', substr(md5(cast(w as binary)), 1, 1)) - 1) * 16
+         + instr('0123456789abcdef', substr(md5(cast(w as binary)), 2, 1)) - 1, $dims) AS bucket,
+       IF((instr('0123456789abcdef', substr(md5(cast(w as binary)), 3, 1)) - 1) % 2 = 0, 1L, -1L) AS sgn)),
+       array_repeat(0L, $dims),
+       (acc, e) -> transform(acc, (x, i) -> x + IF(i = e.bucket, e.sgn, 0L)))""",
+    "bcv",
+    s"""transform(${ChunkRetrieval.signsSql}, srow ->
+       aggregate(zip_with(bcv, srow, (bca, sgv) -> bca * sgv), cast(0 as bigint), (qa, qx) -> qa + qx))""")
+
+  /** The row-local sign-LSH cell of the vector `vec` at the artifact's
+    * frozen `bits` width ([[ChunkRetrieval.cellAt]] as a row fold);
+    * NULL when its squared norm `nsq` is 0 — a zero vector has no cell. */
+  private def cellSql(vec: String, nsq: String): String =
+    s"""IF($nsq > 0, aggregate(sequence(0, bits - 1), 0L, (a, j) ->
+       a + IF(element_at($vec, cast(j as int) + 1) >= 0,
+              shiftleft(1L, cast(j as int)), 0L)), cast(null as bigint))"""
+
+  /** The corpus chunk embeddings (checkpointed: the cell map reads them
+    * after their count) and the adaptive cell width that count derives. */
+  private def celledEmbeds(documents: DataFrame, factor: Long): (DataFrame, Int) = {
+    val base = ChunkRetrieval
+      .chunkEmbeds(ChunkRetrieval.chunks(documents, factor))
+      .localCheckpoint(false)
+    (base, ChunkRetrieval.cellBitsFor(base.count()))
+  }
+
+  /** `entries` (chunk_id, p, nsq) RE-KEYED by their sign-LSH cell at
+    * width `bits`, as one `cells` map row — the shard key a serving
+    * store fetches by. */
+  private def cellMap(entries: DataFrame, bits: Int): DataFrame =
+    entries.withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
+      .groupBy(col("cell"))
+      .agg(sort_array(collect_list(
+        struct(col("chunk_id"), col("p"), col("nsq")))).as("entries"))
+      .agg(map_from_entries(collect_list(
+        struct(col("cell"), col("entries")))).as("cells"))
+
   /** The frozen serving artifact as ONE broadcastable row:
     * `centries` = sorted (chunk_id, p, nsq), `postings` = word →
     * sorted (chunk_id, contrib DECIMAL(20,12)), `fct` = the derived
     * chunk_id factor. Built from the static corpus with the SAME batch
-    * devices the gate queries run. */
-  private[graft] def chunkArtifacts(documents: DataFrame): DataFrame = {
+    * devices the gate queries run.
+    *
+    * `hamming = Some(h)` adds the cell-route serving columns: the
+    * entries re-keyed by cell ([[cellMap]]), the frozen cell width
+    * `bits`, and the precomputed Hamming-≤h mask ball `masks` — width,
+    * cells and masks all from the batch [[ChunkRetrieval]] devices. */
+  private[graft] def chunkArtifacts(documents: DataFrame,
+                                    hamming: Option[Int] = None): DataFrame = {
     val factor = ChunkRetrieval.chunkFactorFor(documents)
     val ch = ChunkRetrieval.chunks(documents, factor)
     val centries = ChunkRetrieval.chunkEmbeds(ch)
@@ -72,7 +133,14 @@ object ChunkStream {
         struct(col("chunk_id"), col("contrib")))).as("entries"))
       .agg(map_from_entries(collect_list(
         struct(col("word"), col("entries")))).as("postings"))
-    centries.crossJoin(postings).withColumn("fct", lit(factor))
+    val arts = centries.crossJoin(postings).withColumn("fct", lit(factor))
+    hamming.fold(arts) { h =>
+      val (base, bits) = celledEmbeds(documents, factor)
+      arts.crossJoin(broadcast(cellMap(base, bits)))
+        .withColumn("bits", lit(bits))
+        .withColumn("masks",
+          expr(s"array(${ChunkRetrieval.hammingMasks(bits, h).mkString(",")})"))
+    }
   }
 
   /** Row-local hybrid retrieval of a (possibly streaming) probe
@@ -88,50 +156,27 @@ object ChunkStream {
     * chunk (~80M interpreted ops per probe, measured as a minutes-long
     * micro-batch with the executor pinned in ArrayAggregate.eval).
     * With the bindings every shared value evaluates exactly once per
-    * probe row. */
+    * probe row.
+    *
+    * The vector arm follows the artifact: a [[chunkArtifacts]] row
+    * built with `hamming = Some(h)` carries `cells`, and the probe is
+    * served by the PROMOTED cell-route arm — the streaming twin of
+    * [[ChunkRetrieval.chunkRetrievalAnn]]: the probe cell folds
+    * row-locally from its own JL signs at the artifact's frozen width,
+    * the Hamming-≤h ball enumerates via the artifact's mask array, and
+    * only the fetched cells' entries are scored — the per-probe work
+    * drops from |corpus| to the ball's occupancy. Without `cells` the
+    * exact arm scans every stored entry. */
   private[graft] def serveRows(probes: DataFrame, arts: DataFrame,
                                k: Int, kTerms: Int, arm: Int,
-                               rrfK: Int): DataFrame =
-    serveCore(probes, arts, k, kTerms, arm, rrfK, ann = false)
-
-  /** [[serveRows]] with the PROMOTED cell-route vector arm — the
-    * streaming twin of [[ChunkRetrieval.chunkRetrievalAnn]]: the probe
-    * cell folds row-locally from its own JL signs at the artifact's
-    * frozen width, the Hamming-≤2 ball enumerates via the artifact's
-    * precomputed mask array, and only the fetched cells' entries are
-    * scored — the per-probe work drops from |corpus| to the ball's
-    * occupancy, which is the entire point of the promotion at a
-    * serving tier (the cell map is the shard key a store fetches by).
-    * Requires a [[chunkArtifactsAnn]] row. */
-  private[graft] def serveRowsAnn(probes: DataFrame, arts: DataFrame,
-                                  k: Int, kTerms: Int, arm: Int,
-                                  rrfK: Int): DataFrame =
-    serveCore(probes, arts, k, kTerms, arm, rrfK, ann = true)
-
-  private def serveCore(probes: DataFrame, arts: DataFrame,
-                        k: Int, kTerms: Int, arm: Int,
-                        rrfK: Int, ann: Boolean): DataFrame = {
+                               rrfK: Int): DataFrame = {
+    val ann = arts.columns.contains("cells")
     val stopArr = TextPrep.stopEn.map(w => s"'$w'").mkString("array(", ", ", ")")
-    def let1(value: String, v: String, body: String): String =
-      s"element_at(transform(array($value), $v -> $body), 1)"
-    // per-word (bucket, sgn) once, then a 64-bucket count fold == the
-    // batch map-side sums (integer, associative)
-    val bcE =
-      s"""aggregate(transform(words, w -> struct(
-         pmod((instr('0123456789abcdef', substr(md5(cast(w as binary)), 1, 1)) - 1) * 16
-           + instr('0123456789abcdef', substr(md5(cast(w as binary)), 2, 1)) - 1, $dims) AS bucket,
-         IF((instr('0123456789abcdef', substr(md5(cast(w as binary)), 3, 1)) - 1) % 2 = 0, 1L, -1L) AS sgn)),
-         array_repeat(0L, $dims),
-         (acc, e) -> transform(acc, (x, i) -> x + IF(i = e.bucket, e.sgn, 0L)))"""
-    val qE =
-      s"""transform(${ChunkRetrieval.signsSql}, srow ->
-         aggregate(zip_with(bcv, srow, (bca, sgv) -> bca * sgv), cast(0 as bigint), (qa, qx) -> qa + qx))"""
     val pnsqE = "aggregate(qv, cast(0 as bigint), (na, nx) -> na + nx * nx)"
     // vector arm: exact cosine, own-document chunks excluded,
     // r6-rounded, (cos desc, id asc). The brute arm scans every stored
     // entry; the ANN arm scores only the Hamming-ball fetch bound to
     // `cande` below.
-    val entryArr = "array<struct<chunk_id:bigint,p:array<bigint>,nsq:bigint>>"
     val vecSrc = if (ann) "cande" else "centries"
     val vtopE =
       s"""CASE WHEN pq > 0 THEN slice(array_sort(
@@ -143,12 +188,7 @@ object ChunkStream {
                  * 1000000D + 0.5D) / 1000000D) AS nc,
                c.chunk_id AS cid))), 1, $arm)
          ELSE cast(array() as array<struct<nc:double,cid:bigint>>) END"""
-    // the probe's sign-LSH cell at the artifact's frozen width, and the
-    // Hamming-ball candidate fetch from the cell-keyed entry map
-    val pcellE =
-      """IF(pq > 0, aggregate(sequence(0, bits - 1), 0L, (a, j) ->
-         a + IF(element_at(qv, cast(j as int) + 1) >= 0,
-                shiftleft(1L, cast(j as int)), 0L)), cast(null as bigint))"""
+    // the Hamming-ball candidate fetch from the cell-keyed entry map
     val candE =
       s"""IF(pcell IS NULL, cast(array() as $entryArr),
          flatten(transform(masks, m ->
@@ -203,11 +243,10 @@ object ChunkStream {
         let1(ltopE, "lt",
           let1(fusE, "fu", frE)))
     val bound =
-      let1(bcE, "bcv",
-        let1(qE, "qv",
-          let1(pnsqE, "pq",
-            if (ann) let1(pcellE, "pcell", let1(candE, "cande", tail))
-            else tail)))
+      let1(embedSql("words"), "qv",
+        let1(pnsqE, "pq",
+          if (ann) let1(cellSql("qv", "pq"), "pcell", let1(candE, "cande", tail))
+          else tail))
     probes
       .filter(col("text").isNotNull)
       .withColumn("norm", graft.functions.Fns.normText(col("text")))
@@ -230,77 +269,21 @@ object ChunkStream {
         when(col("e.vr0") > 0, col("e.vr0")).cast("int").as("vec_rank"))
   }
 
-  /** [[chunkArtifacts]] plus the cell-route serving columns: the
-    * stored entries RE-KEYED by their adaptive sign-LSH cell (`cells`
-    * map — the shard key a serving store fetches by), the frozen cell
-    * width, and the precomputed Hamming-≤2 mask ball. Width, cells,
-    * and masks all come from the batch [[ChunkRetrieval]] devices. */
-  private[graft] def chunkArtifactsAnn(documents: DataFrame): DataFrame = {
-    val factor = ChunkRetrieval.chunkFactorFor(documents)
-    val base = ChunkRetrieval
-      .chunkEmbeds(ChunkRetrieval.chunks(documents, factor))
-      .localCheckpoint(false)
-    val bits = ChunkRetrieval.cellBitsFor(base.count())
-    val masks = ChunkRetrieval.hammingMasks(bits, 2)
-    val cellMap = base.withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
-      .groupBy(col("cell"))
-      .agg(sort_array(collect_list(
-        struct(col("chunk_id"), col("p"), col("nsq")))).as("entries"))
-      .agg(map_from_entries(collect_list(
-        struct(col("cell"), col("entries")))).as("cells"))
-    chunkArtifacts(documents)
-      .crossJoin(broadcast(cellMap))
-      .withColumn("bits", lit(bits))
-      .withColumn("masks", expr(s"array(${masks.mkString(",")})"))
-  }
-
   /** Serve a stream of arriving probe documents against the frozen
-    * CELL-KEYED chunk artifact with the promoted ANN arm — bit-equal to
-    * batch [[ChunkRetrieval.chunkRetrievalAnn]] for the same probes
-    * (Round14Spec); zero aggregation state asserted inside the
-    * operator. */
-  def servedChunkQueriesAnn(spark: SparkSession, dir: String, corpus: DataFrame,
-                            nProbes: Int = 10, k: Int = 10, kTerms: Int = 8,
-                            arm: Int = 50, rrfK: Int = 60,
-                            queryName: String = "stream_chunkserve_ann"): DataFrame = {
-    val probes = DocStream.readDocuments(spark, dir)
-      .filter(col("doc_id") < nProbes)
-    val arts = chunkArtifactsAnn(corpus)
-    val out = serveRowsAnn(probes, arts, k, kTerms, arm, rrfK)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      val st = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
-        .getOrElse(Array.empty)
-      require(st.isEmpty,
-        s"ANN chunk query serving must hold zero aggregation state, found ${st.length} operators")
-    } finally q.stop()
-    spark.table(queryName)
-  }
-
-  /** Serve a stream of arriving probe documents against the frozen
-    * chunk artifact: the fused top-k per probe per micro-batch. Pure
-    * Append, zero aggregation state — asserted inside the operator
-    * (null progress = no micro-batch = zero state). */
+    * chunk artifact: the fused top-k per probe per micro-batch, with the
+    * exact vector arm or, for `hamming = Some(h)`, the cell-route arm
+    * over the Hamming-≤h ball (bit-equal to batch
+    * [[ChunkRetrieval.chunkRetrievalAnn]] at `Some(2)`). Pure Append,
+    * zero aggregation state — asserted by [[Sinks.drainStateless]]. */
   def servedChunkQueries(spark: SparkSession, dir: String, corpus: DataFrame,
                          nProbes: Int = 10, k: Int = 10, kTerms: Int = 8,
                          arm: Int = 50, rrfK: Int = 60,
+                         hamming: Option[Int] = None,
                          queryName: String = "stream_chunkserve"): DataFrame = {
-    val probes = DocStream.readDocuments(spark, dir)
+    val probes = Staging.read(spark, dir, "documents")
       .filter(col("doc_id") < nProbes)
-    val arts = chunkArtifacts(corpus)
-    val out = serveRows(probes, arts, k, kTerms, arm, rrfK)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      val st = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
-        .getOrElse(Array.empty)
-      require(st.isEmpty,
-        s"chunk query serving must hold zero aggregation state, found ${st.length} operators")
-    } finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(
+      serveRows(probes, chunkArtifacts(corpus, hamming), k, kTerms, arm, rrfK), queryName)
   }
 
   /** Index-side INGEST twin of [[servedChunkQueries]] — the write half
@@ -316,29 +299,17 @@ object ChunkStream {
     * they belong to the downstream merge, not the stream. `factor` is
     * the frozen artifact's chunk_id encoding — a stream cannot derive
     * it, exactly like the serving twin. */
-  private[graft] def ingestRows(docs: DataFrame, factor: Long): DataFrame = {
-    val bcE =
-      s"""aggregate(transform(cwords, w -> struct(
-         pmod((instr('0123456789abcdef', substr(md5(cast(w as binary)), 1, 1)) - 1) * 16
-           + instr('0123456789abcdef', substr(md5(cast(w as binary)), 2, 1)) - 1, $dims) AS bucket,
-         IF((instr('0123456789abcdef', substr(md5(cast(w as binary)), 3, 1)) - 1) % 2 = 0, 1L, -1L) AS sgn)),
-         array_repeat(0L, $dims),
-         (acc, e) -> transform(acc, (x, i) -> x + IF(i = e.bucket, e.sgn, 0L)))"""
-    val pE =
-      s"""transform(${ChunkRetrieval.signsSql}, srow ->
-         aggregate(zip_with(bcv, srow, (bca, sgv) -> bca * sgv), cast(0 as bigint), (qa, qx) -> qa + qx))"""
+  private[graft] def ingestRows(docs: DataFrame, factor: Long): DataFrame =
     ChunkRetrieval.chunks(docs, factor)
       .withColumn("dl", size(col("cwords")).cast("long"))
       .withColumn("tfs", expr(
         """transform(array_distinct(cwords), w ->
            struct(w AS word, cast(size(filter(cwords, x -> x = w)) as bigint) AS tf))"""))
-      .withColumn("bcv", expr(bcE))
-      .withColumn("p", expr(pE))
+      .withColumn("p", expr(embedSql("cwords")))
       .withColumn("nsq",
         expr("aggregate(p, cast(0 as bigint), (a, x) -> a + x * x)"))
       .select(col("doc_id"), col("chunk_id"), col("dl"), col("tfs"),
         col("p"), col("nsq"))
-  }
 
   /** The frozen DEDUP-admission artifact as one broadcastable row: the
     * stored SURVIVOR embeddings keyed by their sign-LSH cell (`cells`
@@ -350,20 +321,11 @@ object ChunkStream {
   private[graft] def dedupArtifacts(documents: DataFrame,
                                     threshold: Double = 0.95): DataFrame = {
     val factor = ChunkRetrieval.chunkFactorFor(documents)
-    val base = ChunkRetrieval
-      .chunkEmbeds(ChunkRetrieval.chunks(documents, factor))
-      .localCheckpoint(false)
-    val bits = ChunkRetrieval.cellBitsFor(base.count())
+    val (base, bits) = celledEmbeds(documents, factor)
     val keep = ChunkRetrieval.chunkDedup(documents, threshold)
       .filter(col("keep")).select(col("chunk_id"))
-    val cells = base.withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
-      .join(keep, Seq("chunk_id"))
-      .groupBy(col("cell"))
-      .agg(sort_array(collect_list(
-        struct(col("chunk_id"), col("p"), col("nsq")))).as("entries"))
-      .agg(map_from_entries(collect_list(
-        struct(col("cell"), col("entries")))).as("cells"))
-    cells.withColumn("fct", lit(factor)).withColumn("bits", lit(bits))
+    cellMap(base.join(keep, Seq("chunk_id")), bits)
+      .withColumn("fct", lit(factor)).withColumn("bits", lit(bits))
   }
 
   /** STREAMING chunk-dedup admission — the lshIncrement /
@@ -381,17 +343,12 @@ object ChunkStream {
                                factor: Long, threshold: Double): DataFrame =
     ingestRows(docs, factor)
       .crossJoin(broadcast(arts))
-      .withColumn("cell", expr(
-        """IF(nsq = 0, cast(null as bigint),
-           aggregate(sequence(0, bits - 1), 0L, (a, j) ->
-             a + IF(element_at(p, cast(j as int) + 1) >= 0,
-                    shiftleft(1L, cast(j as int)), 0L)))"""))
+      .withColumn("cell", expr(cellSql("p", "nsq")))
       .withColumn("near", expr(
         s"""IF(nsq = 0,
              cast(array() as array<double>),
              filter(transform(
-               coalesce(element_at(cells, cell),
-                 cast(array() as array<struct<chunk_id:bigint,p:array<bigint>,nsq:bigint>>)),
+               coalesce(element_at(cells, cell), cast(array() as $entryArr)),
                c -> floor(cast(aggregate(zip_with(p, c.p, (x, y) -> x * y),
                        cast(0 as bigint), (a, t) -> a + t) as double)
                      / (sqrt(cast(nsq as double)) * sqrt(cast(c.nsq as double)))
@@ -402,38 +359,6 @@ object ChunkStream {
         expr("array_max(near)").as("max_cosine"),
         (size(col("near")) === 0).as("admit"))
 
-  /** The BATCH twin of [[admitRows]] — same arrivals, same frozen
-    * survivor set, computed with joins instead of row-local map
-    * fetches; the spec gate is bit-equality. */
-  private[graft] def admitBatch(docs: DataFrame, corpus: DataFrame,
-                                factor: Long,
-                                threshold: Double = 0.95): DataFrame = {
-    val base = ChunkRetrieval
-      .chunkEmbeds(ChunkRetrieval.chunks(corpus, factor))
-      .localCheckpoint(false)
-    val bits = ChunkRetrieval.cellBitsFor(base.count())
-    val surv = base.withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
-      .join(ChunkRetrieval.chunkDedup(corpus, threshold)
-        .filter(col("keep")).select(col("chunk_id")), Seq("chunk_id"))
-      .select(col("cell").as("scell"), col("p").as("sp"), col("nsq").as("snsq"))
-    val ach = ChunkRetrieval.chunks(docs, factor)
-      .select(col("doc_id"), col("chunk_id"))
-    val ace = ChunkRetrieval.chunkEmbeds(ChunkRetrieval.chunks(docs, factor))
-      .withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
-    val near = ace.join(surv, col("cell") === col("scell"))
-      .withColumn("cosine", graft.functions.Fns.r6(ChunkRetrieval.dotLong("p", "sp")
-        .cast("double") /
-        (sqrt(col("nsq").cast("double")) * sqrt(col("snsq").cast("double")))))
-      .filter(col("cosine") >= threshold)
-      .groupBy(col("chunk_id").as("nc"))
-      .agg(count(lit(1)).as("n_near0"), max(col("cosine")).as("max_cosine"))
-    ach.join(ace.select(col("chunk_id"), col("cell")), Seq("chunk_id"), "left")
-      .join(near, col("chunk_id") === col("nc"), "left")
-      .select(col("doc_id"), col("chunk_id"), col("cell"),
-        coalesce(col("n_near0"), lit(0L)).as("n_near"), col("max_cosine"),
-        (coalesce(col("n_near0"), lit(0L)) === 0L).as("admit"))
-  }
-
   /** Run [[admitRows]] over a document file stream; asserts zero
     * aggregation state inside the operator and returns the admission
     * verdicts. */
@@ -442,17 +367,8 @@ object ChunkStream {
                      queryName: String = "stream_chunkadmit"): DataFrame = {
     val arts = dedupArtifacts(corpus, threshold)
     val factor = arts.select(col("fct")).head.getLong(0)
-    val q = admitRows(DocStream.readDocuments(spark, dir), arts, factor, threshold)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      val st = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
-        .getOrElse(Array.empty)
-      require(st.isEmpty,
-        s"chunk admission must hold zero aggregation state, found ${st.length} operators")
-    } finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(
+      admitRows(Staging.read(spark, dir, "documents"), arts, factor, threshold), queryName)
   }
 
   /** Run [[ingestRows]] over a document file stream; asserts zero
@@ -461,17 +377,8 @@ object ChunkStream {
   def ingestedParts(spark: SparkSession, dir: String, factor: Long,
                     maxDocs: Int = Int.MaxValue,
                     queryName: String = "stream_chunkparts"): DataFrame = {
-    val docs = DocStream.readDocuments(spark, dir)
+    val docs = Staging.read(spark, dir, "documents")
       .filter(col("doc_id") < maxDocs)
-    val q = ingestRows(docs, factor).writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      val st = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
-        .getOrElse(Array.empty)
-      require(st.isEmpty,
-        s"index-part ingest must hold zero aggregation state, found ${st.length} operators")
-    } finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(ingestRows(docs, factor), queryName)
   }
 }

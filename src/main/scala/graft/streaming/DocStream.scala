@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming corpus ingestion against a PERSISTED dedup index — the
   * production shape for continuous training-data intake: new documents
@@ -16,13 +15,12 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object DocStream {
 
-  /** Streaming read of the documents table (same [[Staging.stageParquet]]
-    * scratch staging as [[EventStream.readEvents]] — production points
-    * this at the landing directory). */
-  def readDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = Staging.stageParquet(dir, "documents", "graft-docstream")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    spark.readStream.schema(schema).parquet(streamDir)
+  /** The streamed documents table, optionally restricted to the
+    * arrivals `newDocFilter` keeps. */
+  private def arrivals(spark: SparkSession, dir: String,
+                       newDocFilter: Option[Column]): DataFrame = {
+    val base = Staging.read(spark, dir, "documents")
+    newDocFilter.map(base.filter).getOrElse(base)
   }
 
   /** Row-local LSH banding: the EXACT same signature math as
@@ -71,19 +69,13 @@ object DocStream {
   def bandMatches(spark: SparkSession, dir: String, storedBands: DataFrame,
                   newDocFilter: Option[Column] = None,
                   queryName: String = "stream_bandmatch"): DataFrame = {
-    val base = readDocuments(spark, dir)
-    val newDocs = newDocFilter.map(base.filter).getOrElse(base)
-    val hits = bandsRowLocal(newDocs).as("n")
+    val hits = bandsRowLocal(arrivals(spark, dir, newDocFilter)).as("n")
       .join(storedBands.withColumnRenamed("doc_id", "corpus_doc")
         .withColumnRenamed("bh", "cbh").withColumnRenamed("band_idx", "cband"),
         col("band_idx") === col("cband") && col("bh") === col("cbh"))
       .select(col("doc_id").as("new_doc"), col("corpus_doc"),
         col("band_idx"), col("bh"))
-    val q = hits.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(hits, queryName)
   }
 
   /** Stream arriving documents through a FROZEN learned BPE merge table
@@ -91,45 +83,27 @@ object DocStream {
     * offline and applied at ingest): the ranked merge table collapses to
     * one stream-static broadcast row and every document re-tokenizes
     * with the row-local replay fold the moment its micro-batch lands.
-    * Emits the bpeApply columns per arrival; zero aggregation state,
-    * bit-equal to batch [[graft.text.Bpe.bpeApply]] (Round12Spec). */
+    * Emits the bpeApply columns per arrival; zero aggregation state
+    * asserted by [[Sinks.drainStateless]], bit-equal to batch
+    * [[graft.text.Bpe.bpeApply]] (Round12Spec). */
   def tokenizedArrivals(spark: SparkSession, dir: String, merges: DataFrame,
                         newDocFilter: Option[Column] = None,
-                        queryName: String = "stream_bpe"): DataFrame = {
-    val base = readDocuments(spark, dir)
-    val docs = newDocFilter.map(base.filter).getOrElse(base)
-    val out = graft.text.Bpe.applyMart(docs, merges)
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
+                        queryName: String = "stream_bpe"): DataFrame =
+    Sinks.drainStateless(
+      graft.text.Bpe.applyMart(arrivals(spark, dir, newDocFilter), merges), queryName)
 
   /** Stream arriving documents through a FROZEN SUBWORD merge table
     * (the [[graft.text.SubwordBpe.subwordTrain]] artifact — the
     * production tokenizer grain): every arriving document re-tokenizes
     * ROW-LOCALLY with the rank-ordered replay fold over the one-row
     * broadcast artifact. Emits the subwordApply columns per arrival;
-    * zero aggregation state asserted inside the operator, bit-equal to
-    * batch [[graft.text.SubwordBpe.subwordApply]] (Round14Spec). */
+    * zero aggregation state asserted by [[Sinks.drainStateless]],
+    * bit-equal to batch [[graft.text.SubwordBpe.subwordApply]] (Round14Spec). */
   def subwordArrivals(spark: SparkSession, dir: String, merges: DataFrame,
                       newDocFilter: Option[Column] = None,
-                      queryName: String = "stream_subword"): DataFrame = {
-    val base = readDocuments(spark, dir)
-    val docs = newDocFilter.map(base.filter).getOrElse(base)
-    val out = graft.text.SubwordBpe.applyMart(docs, merges)
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      val st = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
-        .getOrElse(Array.empty)
-      require(st.isEmpty,
-        s"subword tokenization must hold zero aggregation state, found ${st.length} operators")
-    } finally q.stop()
-    spark.table(queryName)
-  }
+                      queryName: String = "stream_subword"): DataFrame =
+    Sinks.drainStateless(
+      graft.text.SubwordBpe.applyMart(arrivals(spark, dir, newDocFilter), merges), queryName)
 
   /** Stream arriving documents through the fixed-width Bloom
     * decontamination screen (the [[graft.text.Filters.bloomBits]]
@@ -146,10 +120,8 @@ object DocStream {
                        containmentThreshold: Double = 0.2,
                        newDocFilter: Option[Column] = None,
                        queryName: String = "stream_bloom"): DataFrame = {
-    val base = readDocuments(spark, dir)
-    val docs = newDocFilter.map(base.filter).getOrElse(base)
     val hit = graft.text.Filters.bloomHitSql("s")
-    val out = docs
+    val out = arrivals(spark, dir, newDocFilter)
       .withColumn("words", split(graft.functions.Fns.normText(col("text")), " "))
       .withColumn("sh", expr(
         """CASE WHEN text IS NULL OR size(words) < 3
@@ -166,10 +138,6 @@ object DocStream {
         col("bloom_containment") >= containmentThreshold)
       .select("doc_id", "n_shingles", "n_bloom",
         "bloom_containment", "bloom_contaminated")
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(out, queryName)
   }
 }

@@ -44,11 +44,10 @@ case class SessionOut(session_id: String, user_id: Long, session_seq: Long,
 object EventStream {
 
   /** Streaming events with the same encoding-adaptive ts handling as
-    * graft.Tables.events. The file stream source needs a directory, so the
-    * single test parquet is staged into a temp dir via symlink (a real
-    * deployment points this at the landing directory / Kafka instead). */
+    * graft.Tables.events, through the [[Staging.read]] file source (a
+    * real deployment points this at the landing directory / Kafka
+    * instead). */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     // Same contract as Tables.events: assert, never mutate, host session
     // state. The nanos escape hatch (like the UTC zone) is pinned at
     // session build by the graft entry points; flipping it here would be
@@ -57,10 +56,7 @@ object EventStream {
     // TIMESTAMP(NANOS), in which case the batch loader fails loudly
     // first with the same remedy.)
     Tables.requireUtcSession(spark)
-    val streamDir = Staging.stageParquet(dir, "events", "graft-stream")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(streamDir))
+    Tables.normalizeEventTs(Staging.read(spark, dir, "events"))
   }
 
   /** Tumbling 1-hour windowed aggregation with a 2-hour watermark —
@@ -76,11 +72,7 @@ object EventStream {
         col("event_type"), col("n_events"), col("sum_value"))
     // Update mode so the 2h watermark actually bounds window state
     // (Complete mode ignores watermarks and retains every window forever).
-    val q = agg.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(agg, OutputMode.Update(), queryName)
   }
 
   /** SLIDING 1-hour/15-minute windowed aggregation — streaming twin of
@@ -96,11 +88,7 @@ object EventStream {
       .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("win_start_s"),
         col("event_type"), col("n_events"), col("sum_value"))
-    val q = agg.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(agg, OutputMode.Update(), queryName)
   }
 
   /** Streaming builder of the day-grain quantile state — the readStream
@@ -122,10 +110,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"))
       .select(col("event_type"), to_date(col("window.start")).as("day"),
         col("bin"), col("n"))
-    val q = agg.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
     // The Update-mode memory sink APPENDS one row per key per trigger that
     // touched it — if the file source ever splits the input across
     // micro-batches (maxFilesPerTrigger, real multi-wave arrivals), stale
@@ -134,7 +118,7 @@ object EventStream {
     // is monotone non-decreasing across emissions (a streaming count only
     // accumulates), so max(n) per key IS the latest emission — dedupe
     // here instead of assuming the single-micro-batch drain.
-    spark.table(queryName)
+    Sinks.drain(agg, OutputMode.Update(), queryName)
       .groupBy(col("event_type"), col("day"), col("bin"))
       .agg(max(col("n")).as("n"))
   }
@@ -151,15 +135,11 @@ object EventStream {
     * (event_id, ts) dedups identically while making eviction work. */
   def dedupedEvents(spark: SparkSession, dir: String,
                     queryName: String = "stream_dedup"): DataFrame = {
-    val q = readEvents(spark, dir)
+    val out = readEvents(spark, dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicates("event_id", "ts")
       .select(col("event_id"), col("user_id"), col("event_type"))
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(out, OutputMode.Append(), queryName)
   }
 
   private def closeSession(userId: Long, s: SessState): SessionOut =
@@ -216,11 +196,7 @@ object EventStream {
       .as[SessEvent]
       .groupByKey(_.userId)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
-    val q = sessions.toDF().writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(sessions.toDF(), OutputMode.Append(), queryName)
   }
 
   /** Sessionizer with the PRODUCTION flush: same gap-close logic as
@@ -283,12 +259,7 @@ object EventStream {
     // window state would grow forever on an unbounded stream. In Update mode
     // the 2h watermark evicts finalized windows; the single-batch file source
     // emits each window exactly once, so streaming==batch still holds.
-    val q = graft.ml.Monitoring.windowedPerf(scored)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(graft.ml.Monitoring.windowedPerf(scored), OutputMode.Update(), queryName)
   }
 
   /** Core stateful SCD2 transform: per-key state holds the OPEN version;
@@ -360,13 +331,9 @@ object EventStream {
         col("event_type").as("eventType"),
         col("value").cast("double").as("value"))
       .as[Scd2Event])
-    val q = closed.toDF().writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
     // finish with the batch builder's derived columns (same expressions:
     // µs-keyed scd_key and the shared rowHash, exactly as Scd2.build)
-    spark.table(queryName)
+    Sinks.drain(closed.toDF(), OutputMode.Append(), queryName)
       .select(
         surrogateKey(col("user_id"), col("effective_from_us")).as("scd_key"),
         col("user_id"), col("source_event_id"), col("attr_type"),
@@ -390,13 +357,9 @@ object EventStream {
                    queryName: String = "stream_drift"): DataFrame = {
     val ref = graft.ml.Monitoring.referenceHistogram(graft.Tables.events(spark, dir))
     // Update mode for the same state-bounding reason as performanceMonitor.
-    val q = graft.ml.Monitoring
+    val out = graft.ml.Monitoring
       .windowedDrift(readEvents(spark, dir).withWatermark("ts", "2 hours"), ref)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(out, OutputMode.Update(), queryName)
   }
 
   /** The two sides of the stream-stream attribution join: purchases and
@@ -454,14 +417,9 @@ object EventStream {
   def touchPurchaseJoin(spark: SparkSession, dir: String,
                         queryName: String = "stream_ssjoin",
                         lookback: String = "1 hour",
-                        watermark: String = "2 hours"): DataFrame = {
-    val q = touchPurchaseJoined(spark, dir, lookback, watermark)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
+                        watermark: String = "2 hours"): DataFrame =
+    Sinks.drain(touchPurchaseJoined(spark, dir, lookback, watermark),
+      OutputMode.Append(), queryName)
 
   /** LEFT-OUTER stream-stream interval join — same pair stream, but a
     * purchase with NO touch in its lookback window still emits (null
@@ -475,14 +433,9 @@ object EventStream {
   def touchPurchaseJoinOuter(spark: SparkSession, dir: String,
                              queryName: String = "stream_ssjoin_outer",
                              lookback: String = "1 hour",
-                             watermark: String = "2 hours"): DataFrame = {
-    val q = touchPurchaseJoined(spark, dir, lookback, watermark, "left_outer")
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
+                             watermark: String = "2 hours"): DataFrame =
+    Sinks.drain(touchPurchaseJoined(spark, dir, lookback, watermark, "left_outer"),
+      OutputMode.Append(), queryName)
 
   /** Custom keyed state via mapGroupsWithState: running event count per
     * user (the minimal production shape for per-entity state machines —
@@ -502,11 +455,7 @@ object EventStream {
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateFn)
       .toDF("user_id", "n_events")
-    val q = counts.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drain(counts, OutputMode.Update(), queryName)
       .groupBy("user_id").agg(max("n_events").as("n_events"))
   }
 }

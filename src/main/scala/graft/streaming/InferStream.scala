@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.ml.Inference
 
@@ -19,23 +18,11 @@ import graft.ml.Inference
   */
 object InferStream {
 
-  /** Streaming read of the orders table ([[Staging.stageParquet]]
-    * scratch staging, as [[DocStream.readDocuments]]). */
-  def readOrders(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = Staging.stageParquet(dir, "orders", "graft-inferstream")
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
-    spark.readStream.schema(schema).parquet(streamDir)
-  }
-
   /** Score an orders stream against a pre-fit static scaler. Returns the
-    * collected memory-sink table after draining available input. */
+    * collected memory-sink table after draining available input; zero
+    * aggregation state asserted. */
   def scoreStream(spark: SparkSession, dir: String, moments: DataFrame,
-                  queryName: String = "stream_infer"): DataFrame = {
-    val scored = Inference.scoreWith(Inference.features(readOrders(spark, dir)), moments)
-    val q = scored.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
+                  queryName: String = "stream_infer"): DataFrame =
+    Sinks.drainStateless(Inference.scoreWith(
+      Inference.features(Staging.read(spark, dir, "orders")), moments), queryName)
 }

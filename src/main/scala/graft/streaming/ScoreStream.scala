@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.functions.Fns
 
@@ -42,7 +41,7 @@ object ScoreStream {
     val bucketOf = (e: String) =>
       s"((instr('0123456789abcdef', substr(md5(cast($e as binary)), 1, 1)) - 1) * 16 + " +
         s"instr('0123456789abcdef', substr(md5(cast($e as binary)), 2, 1)) - 1) % $dims"
-    val scored = DocStream.readDocuments(spark, dir)
+    val scored = Staging.read(spark, dir, "documents")
       .filter(col("source") =!= targetSource)
       .withColumn("words", split(Fns.normText(col("text")), " "))
       .withColumn("bkts", expr(s"transform(words, w -> ${bucketOf("w")})"))
@@ -59,11 +58,7 @@ object ScoreStream {
         size(col("words")).cast("long").as("n_tok"),
         Fns.r6(col("s0").cast("double")).as("dsir_score"))
       .withColumn("selected", col("dsir_score") >= lit(edge))
-    val q = scored.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(scored, queryName)
   }
 
   /** Character-entropy quality gate at INGEST — the stateless streaming
@@ -80,7 +75,7 @@ object ScoreStream {
     * documented trade for zero streaming state at 100 TB of ingest. */
   def entropyGate(spark: SparkSession, dir: String,
                   queryName: String = "stream_entropy"): DataFrame = {
-    val gated = DocStream.readDocuments(spark, dir)
+    val gated = Staging.read(spark, dir, "documents")
       .withColumn("chars", split(Fns.normText(col("text")), ""))
       .filter(length(Fns.normText(col("text"))) > 0)
       .withColumn("s0", expr(
@@ -94,11 +89,7 @@ object ScoreStream {
         size(array_distinct(col("chars"))).cast("long").as("n_distinct_chars"),
         Fns.r6((-col("s0")).cast("double")).as("entropy"))
       .withColumn("low_entropy", col("entropy") < lit(2.0))
-    val q = gated.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(gated, queryName)
   }
 
   /** Catalog-policy masking at INGEST — the streaming deployment of
@@ -118,10 +109,6 @@ object ScoreStream {
     val masked = graft.operators.Masking.maskTable(
       EventStream.readEvents(spark, dir),
       graft.operators.Masking.policy("events"))
-    val q = masked.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(masked, queryName)
   }
 }

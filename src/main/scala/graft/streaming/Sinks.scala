@@ -2,8 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-/** Production sink patterns for the streaming twins.
+/** Sink patterns for the streaming twins: the memory-sink drain every
+  * twin returns its result through ([[drain]], [[drainStateless]]), and
+  * the production exactly-once parquet sink.
   *
   * Structured Streaming's delivery guarantee to `foreachBatch` is
   * AT-LEAST-ONCE: after a crash between "sink wrote batch N" and
@@ -21,6 +24,36 @@ import org.apache.spark.sql.functions._
   * is an independent batch job over closed partitions.
   */
 object Sinks {
+
+  /** Run a finite streaming frame to the memory sink under `name`,
+    * block until the source is drained, and return the sink's table.
+    * The query is stopped in `finally`, so a failed micro-batch never
+    * leaves it running in the session. */
+  def drain(out: DataFrame, mode: OutputMode, name: String): DataFrame =
+    run(out, mode, name)(_ => ())
+
+  /** [[drain]] in Append mode for a twin whose doc claims a row-local,
+    * stateless plan: fails unless the last progress reports zero state
+    * operators. A null progress (an empty source ran no micro-batch) is
+    * zero state, not a failure. */
+  def drainStateless(out: DataFrame, name: String): DataFrame =
+    run(out, OutputMode.Append(), name) { q =>
+      val ops = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
+        .getOrElse(Array.empty)
+      require(ops.isEmpty,
+        s"stream '$name' must hold zero aggregation state, found ${ops.length} state operators")
+    }
+
+  private def run(out: DataFrame, mode: OutputMode, name: String)
+                 (check: StreamingQuery => Unit): DataFrame = {
+    val q = out.writeStream.outputMode(mode)
+      .format("memory").queryName(name).start()
+    try {
+      q.processAllAvailable()
+      check(q)
+    } finally q.stop()
+    out.sparkSession.table(name)
+  }
 
   /** The per-batch writer [[exactlyOnceParquet]] installs — exposed so
     * specs (and recovery tooling) can replay a delivered batch and

@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Scratch staging for the file-stream sources: the test layout exposes
   * each table as `<dir>/<table>.parquet`, which may be a single parquet
   * FILE (driver testdata) or a flat parquet DIRECTORY of part files
@@ -18,14 +20,22 @@ import scala.jdk.CollectionConverters._
   * landing directory and never takes this path. */
 object Staging {
 
+  /** Streaming read of `<dir>/<table>.parquet` through a staged scratch
+    * directory, with the batch read's schema — the one file-stream
+    * source behind every twin. */
+  def read(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val streamDir = stageParquet(dir, table)
+    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
+    spark.readStream.schema(schema).parquet(streamDir)
+  }
+
   /** Returns the scratch directory to hand to `readStream.parquet`.
     * Fails loudly when the source yields ZERO data files (e.g. an
     * interrupted write that left only _SUCCESS) — a file stream over an
     * empty scratch dir would silently answer 0 rows to every query —
     * and when the source is a `key=value` partitioned layout (see
     * object doc: flattening would NULL the partition column). */
-  def stageParquet(dir: String, table: String, scratchPrefix: String): String = {
-    val streamDir = graft.sources.Scratch.dir(scratchPrefix)
+  def stageParquet(dir: String, table: String): String = {
     val src = Paths.get(s"$dir/$table.parquet")
     val dataFiles: List[Path] =
       if (Files.isDirectory(src)) {
@@ -56,6 +66,7 @@ object Staging {
     require(dataFiles.nonEmpty,
       s"stageParquet: no .parquet data files under $src — " +
         "refusing to stage an empty stream source")
+    val streamDir = graft.sources.Scratch.dir(s"graft-stream-$table")
     dataFiles.zipWithIndex.foreach { case (f, i) =>
       Files.createSymbolicLink(streamDir.resolve(f"part-$i%05d.parquet"), f)
     }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.ann.Embeddings
 
 /** Streaming vector-index ingest — the readStream twin of
@@ -24,14 +23,6 @@ import graft.ann.Embeddings
   * aggregation state; the only state is the file-source log.
   */
 object VecStream {
-
-  /** Streaming read of the embeddings table (same staging device as
-    * [[DocStream.readDocuments]]). */
-  def readEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = Staging.stageParquet(dir, "embeddings", "graft-vecstream")
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    spark.readStream.schema(schema).parquet(streamDir)
-  }
 
   /** The frozen index artifacts as one broadcastable row:
     * `cents` = array of (cid, ce, cnrm), `cb0..cb{m-1}` = per-subspace
@@ -97,21 +88,16 @@ object VecStream {
 
   /** Stream new vectors against the frozen index artifacts: emits one
     * fully-coded index row per arrival. Pure Append — no aggregation
-    * state at all. */
+    * state at all, asserted by [[Sinks.drainStateless]]. */
   def codedArrivals(spark: SparkSession, dir: String, corpus: DataFrame,
                     kCents: Int = 16, m: Int = 8, subDim: Int = 8,
                     kCodes: Int = 64,
                     newVecFilter: Option[org.apache.spark.sql.Column] = None,
                     queryName: String = "stream_veccode"): DataFrame = {
-    val base = readEmbeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val base = Staging.read(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val fresh = newVecFilter.map(base.filter).getOrElse(base)
     val arts = artifactRow(corpus, kCents, m, subDim, kCodes)
-    val out = codeRows(fresh, arts, m, subDim)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(codeRows(fresh, arts, m, subDim), queryName)
   }
 
   /** The [[artifactRow]] extended for QUERY serving: one broadcast row
@@ -202,22 +188,10 @@ object VecStream {
                     nCells: Int = 5, m: Int = 8, subDim: Int = 8,
                     kCodes: Int = 64,
                     queryName: String = "stream_pqserve"): DataFrame = {
-    val probes = readEmbeddings(spark, dir)
+    val probes = Staging.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < nProbes)
     val arts = serveArtifacts(corpus, kCents, m, subDim, kCodes)
-    val out = serveRows(probes, arts, k, nCells, m, subDim)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      // an empty probe directory produces no micro-batch and a NULL
-      // lastProgress — that is zero state, not a failure
-      val st = Option(q.lastProgress).flatMap(p => Option(p.stateOperators))
-        .getOrElse(Array.empty)
-      require(st.isEmpty,
-        s"query serving must hold zero aggregation state, found ${st.length} operators")
-    } finally q.stop()
-    spark.table(queryName)
+    Sinks.drainStateless(serveRows(probes, arts, k, nCells, m, subDim), queryName)
   }
 }

@@ -94,15 +94,16 @@ class JoinsStreamingSpec extends AnyFunSuite {
     val q = EventStream.sessionizedTimeoutStream(input.toDS()).toDF()
       .writeStream.outputMode("append")
       .format("memory").queryName("sess_timeout").start()
-    // batch 1: user 7, two events 100s apart -> one OPEN session in state
-    input.addData(SessEvent(7L, 1000L, 1L, "view"), SessEvent(7L, 1100L, 2L, "click"))
-    q.processAllAvailable()
-    assert(spark.table("sess_timeout").count() == 0, "nothing should close yet")
-    // batch 2: a far-future event on ANOTHER user advances the watermark
-    // beyond 1100 + 1800 -> user 7's open session must flush via timeout
-    input.addData(SessEvent(9L, 10000L, 3L, "view"))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      // batch 1: user 7, two events 100s apart -> one OPEN session in state
+      input.addData(SessEvent(7L, 1000L, 1L, "view"), SessEvent(7L, 1100L, 2L, "click"))
+      q.processAllAvailable()
+      assert(spark.table("sess_timeout").count() == 0, "nothing should close yet")
+      // batch 2: a far-future event on ANOTHER user advances the watermark
+      // beyond 1100 + 1800 -> user 7's open session must flush via timeout
+      input.addData(SessEvent(9L, 10000L, 3L, "view"))
+      q.processAllAvailable()
+    } finally q.stop()
     val rows = spark.table("sess_timeout").collect()
     val u7 = rows.filter(_.getAs[Long]("user_id") == 7L)
     assert(u7.length == 1, s"expected one flushed session, got ${rows.mkString(", ")}")
@@ -176,9 +177,10 @@ class JoinsStreamingSpec extends AnyFunSuite {
     val q = EventStream.touchPurchaseJoined(spark, sf)
       .writeStream.outputMode("append")
       .format("memory").queryName("ssjoin_shape").start()
-    q.processAllAvailable()
-    val progress = q.recentProgress.filter(_.stateOperators.nonEmpty)
-    q.stop()
+    val progress = try {
+      q.processAllAvailable()
+      q.recentProgress.filter(_.stateOperators.nonEmpty)
+    } finally q.stop()
     assert(progress.nonEmpty, "no progress with state operators recorded")
     val ops = progress.flatMap(_.stateOperators)
     // the plan must run the streaming symmetric hash join — not fall back

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +17,38 @@ class Round14Spec extends AnyFunSuite {
 
   private lazy val docs = Tables.documents(spark, sf)
   private lazy val emb = Tables.embeddings(spark, sf)
+
+  /** The BATCH twin of `ChunkStream.admitRows` — same arrivals, same
+    * frozen survivor set, computed with joins instead of row-local map
+    * fetches; the admission test's gate is bit-equality. */
+  private def admitBatch(docs: DataFrame, corpus: DataFrame,
+                         factor: Long,
+                         threshold: Double = 0.95): DataFrame = {
+    val base = ChunkRetrieval
+      .chunkEmbeds(ChunkRetrieval.chunks(corpus, factor))
+      .localCheckpoint(false)
+    val bits = ChunkRetrieval.cellBitsFor(base.count())
+    val surv = base.withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
+      .join(ChunkRetrieval.chunkDedup(corpus, threshold)
+        .filter(col("keep")).select(col("chunk_id")), Seq("chunk_id"))
+      .select(col("cell").as("scell"), col("p").as("sp"), col("nsq").as("snsq"))
+    val ach = ChunkRetrieval.chunks(docs, factor)
+      .select(col("doc_id"), col("chunk_id"))
+    val ace = ChunkRetrieval.chunkEmbeds(ChunkRetrieval.chunks(docs, factor))
+      .withColumn("cell", ChunkRetrieval.cellAt("p", 0, bits))
+    val near = ace.join(surv, col("cell") === col("scell"))
+      .withColumn("cosine", graft.functions.Fns.r6(ChunkRetrieval.dotLong("p", "sp")
+        .cast("double") /
+        (sqrt(col("nsq").cast("double")) * sqrt(col("snsq").cast("double")))))
+      .filter(col("cosine") >= threshold)
+      .groupBy(col("chunk_id").as("nc"))
+      .agg(count(lit(1)).as("n_near0"), max(col("cosine")).as("max_cosine"))
+    ach.join(ace.select(col("chunk_id"), col("cell")), Seq("chunk_id"), "left")
+      .join(near, col("chunk_id") === col("nc"), "left")
+      .select(col("doc_id"), col("chunk_id"), col("cell"),
+        coalesce(col("n_near0"), lit(0L)).as("n_near"), col("max_cosine"),
+        (coalesce(col("n_near0"), lit(0L)) === 0L).as("admit"))
+  }
 
   test("cell-route retrieval preserves the brute-force arm's label p@10") {
     val labels = emb.select(col("vec_id").as("doc_id"), col("label"))
@@ -113,12 +146,12 @@ class Round14Spec extends AnyFunSuite {
     // re-arrives and must be REJECTED by its own stored copy
     val streamed = ChunkStream.admittedChunks(spark, sf, docs)
       .collect().map(_.toSeq).toSet
-    val batch = ChunkStream.admitBatch(docs, docs, factor)
+    val batch = admitBatch(docs, docs, factor)
       .collect().map(_.toSeq).toSet
     assert(streamed.nonEmpty)
     assert(streamed == batch,
       "streamed admission verdicts diverged from the batch twin")
-    val adm = ChunkStream.admitBatch(docs, docs, factor)
+    val adm = admitBatch(docs, docs, factor)
     val survivors = graft.ann.ChunkRetrieval.chunkDedup(docs)
       .filter(col("keep")).select(col("chunk_id"))
     // an embeddable arrival already stored as a survivor self-matches at
@@ -134,7 +167,7 @@ class Round14Spec extends AnyFunSuite {
     // only the Hamming-ball cells from the cell-keyed artifact map and
     // must reproduce the batch promoted retrieval exactly
     val streamed = graft.streaming.ChunkStream
-      .servedChunkQueriesAnn(spark, sf, docs)
+      .servedChunkQueries(spark, sf, docs, hamming = Some(2))
       .collect().map(_.toSeq).toSet
     val batch = ChunkRetrieval.chunkRetrievalAnn(docs)
       .collect().map(_.toSeq).toSet

@@ -80,17 +80,18 @@ class Scd2AnalyticsSpec extends AnyFunSuite {
     val q = EventStream.scd2ClosedStream(input.toDS()).toDF()
       .writeStream.outputMode("append")
       .format("memory").queryName("scd2_late").start()
-    // batch 1: two in-order changes -> v1 closes
-    input.addData(
-      Scd2Event(7L, 100000000L, 1L, "a", 1.0),
-      Scd2Event(7L, 200000000L, 2L, "b", 2.0))
-    q.processAllAvailable()
-    // batch 2: a straggler OLDER than the open head (200s), then a valid change
-    input.addData(Scd2Event(7L, 150000000L, 3L, "late", 9.0))
-    q.processAllAvailable()
-    input.addData(Scd2Event(7L, 300000000L, 4L, "c", 3.0))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      // batch 1: two in-order changes -> v1 closes
+      input.addData(
+        Scd2Event(7L, 100000000L, 1L, "a", 1.0),
+        Scd2Event(7L, 200000000L, 2L, "b", 2.0))
+      q.processAllAvailable()
+      // batch 2: a straggler OLDER than the open head (200s), then a valid change
+      input.addData(Scd2Event(7L, 150000000L, 3L, "late", 9.0))
+      q.processAllAvailable()
+      input.addData(Scd2Event(7L, 300000000L, 4L, "c", 3.0))
+      q.processAllAvailable()
+    } finally q.stop()
     val rows = spark.table("scd2_late").collect()
       .map(r => (r.getAs[Long]("version"), r.getAs[Long]("source_event_id"),
         r.getAs[Long]("effective_from_s"), r.getAs[Long]("effective_to_s")))

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.Sinks
+import org.apache.spark.sql.streaming.OutputMode
+import graft.streaming.{Sinks, Staging}
 
 class SinksSpec extends AnyFunSuite {
   import TestSession._
@@ -58,6 +59,81 @@ class SinksSpec extends AnyFunSuite {
       rmTree(srcDir)
       rmTree(target)
       rmTree(checkpoint)
+    }
+  }
+
+  /** `n` synthetic (id, ts) rows, one a second from 2024-01-01 (an
+    * event at the epoch would sit at the initial watermark and drop). */
+  private def idRows(n: Long) =
+    spark.range(n).select(col("id"), timestamp_seconds(col("id") + 1704067200L).as("ts"))
+
+  /** 20 [[idRows]] written under `dir`, streamed back. */
+  private def idStream(dir: String) = {
+    val src = s"$dir/src"
+    idRows(20).write.parquet(src)
+    spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+  }
+
+  test("drainStateless refuses a stateful plan, naming its state operator count") {
+    withTempDir("graft-drain") { dir =>
+      val deduped = idStream(dir).withWatermark("ts", "1 hour").dropDuplicates("id", "ts")
+      val e = intercept[IllegalArgumentException] {
+        Sinks.drainStateless(deduped, "drain_stateful")
+      }
+      assert(e.getMessage.contains("found 1 state operators"), e.getMessage)
+      assert(spark.streams.active.isEmpty, "a refused drain left its query running")
+      // the same plan drains through the stateful entry point
+      assert(Sinks.drain(deduped, OutputMode.Append(), "drain_stateful").count() == 20L)
+      assert(spark.streams.active.isEmpty)
+    }
+  }
+
+  test("drainStateless passes a row-local plan and stops its query") {
+    withTempDir("graft-drain") { dir =>
+      val out = Sinks.drainStateless(idStream(dir).filter(col("id") % 2 === 0), "drain_rowlocal")
+      assert(out.count() == 10L)
+      assert(spark.streams.active.isEmpty, "a passing drain left its query running")
+    }
+  }
+
+  test("an empty source runs no micro-batch and counts as zero state") {
+    withTempDir("graft-drain") { dir =>
+      val empty = s"$dir/empty"
+      Files.createDirectory(java.nio.file.Paths.get(empty))
+      val schema = idRows(1).schema
+      // stateful plan, but no micro-batch ever ran: no state to report
+      val out = Sinks.drainStateless(spark.readStream.schema(schema).parquet(empty)
+        .withWatermark("ts", "1 hour").dropDuplicates("id", "ts"), "drain_empty")
+      assert(out.count() == 0L)
+      assert(spark.streams.active.isEmpty)
+    }
+  }
+
+  test("Staging fails closed on partitionBy, nested and data-less layouts") {
+    withTempDir("graft-staging") { dir =>
+      val ids = spark.range(10).withColumn("k", col("id") % 2)
+      ids.write.partitionBy("k").parquet(s"$dir/parted.parquet")
+      ids.write.parquet(s"$dir/nested.parquet")
+      ids.write.parquet(s"$dir/nested.parquet/sub")
+      Files.createDirectories(java.nio.file.Paths.get(s"$dir/bare.parquet"))
+      Files.createFile(java.nio.file.Paths.get(s"$dir/bare.parquet/_SUCCESS"))
+      val parted = intercept[IllegalArgumentException](Staging.stageParquet(dir, "parted"))
+      assert(parted.getMessage.contains("partitionBy layout"), parted.getMessage)
+      val nested = intercept[IllegalArgumentException](Staging.stageParquet(dir, "nested"))
+      assert(nested.getMessage.contains("nested director"), nested.getMessage)
+      val bare = intercept[IllegalArgumentException](Staging.stageParquet(dir, "bare"))
+      assert(bare.getMessage.contains("no .parquet data files"), bare.getMessage)
+    }
+  }
+
+  test("Staging streams a flat part-file directory row-for-row with its batch read") {
+    withTempDir("graft-staging") { dir =>
+      spark.range(37).repartition(3).write.parquet(s"$dir/flat.parquet")
+      val batch = spark.read.parquet(s"$dir/flat.parquet")
+      assert(batch.inputFiles.length == 3)
+      val streamed = Sinks.drainStateless(Staging.read(spark, dir, "flat"), "staging_flat")
+      assert(streamed.count() == batch.count())
+      assert(streamed.exceptAll(batch).count() == 0L)
     }
   }
 }
