@@ -35,10 +35,13 @@ object Bench {
     // had run — kept out of `total`, listed in the output line, and
     // makes the run exit non-zero.
     val failed = scala.collection.mutable.SortedSet.empty[String]
+    // Each key is drained over every column through its own physical
+    // plan (`queryExecution.toRdd`): `count()` would let Catalyst prune
+    // the projected columns and time a smaller plan than the result.
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+      try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()) } catch {
         case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -60,10 +63,14 @@ object Bench {
     // measured 97-125 s across runs when most queries were single-shot —
     // the scheduling/GC noise that swamped round-over-round deltas lives
     // in the sub-second tail too, and it only cancels if every query
-    // reports its minimum. Whole-stage-codegen compile + JVM JIT of the
-    // md5/shingle/vector kernels is additionally a per-SESSION constant
-    // that lands on whichever family runs first — not a property of the
-    // query's plan, and not what a 100 TB capacity estimate should read.
+    // reports its minimum. The first pass also absorbs JVM JIT of the
+    // md5/shingle/vector kernels, which is paid once per session. Whole-
+    // stage-codegen compiles are NOT: Spark's codegen cache holds 100
+    // classes (`spark.sql.codegen.cache.maxEntries`, a static conf), so a
+    // key with more distinct stages recompiles them on every evaluation
+    // — measured warm recompiles per evaluation in SCALE.md (177–180
+    // for q_chunk_serve). The min-of-2 keeps that cost, which only fewer
+    // distinct stages can cut.
     // The second pass roughly doubles bench wall-clock; that is the
     // price of a usable instrument (SCALE.md's A/Bs already pay it).
     val results = firstPass.map { case (name, fn, t1) =>

@@ -3,9 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.util.SizeEstimator
 
-import graft.Tables
+import graft.{DriverHeap, Tables}
 import graft.functions.Fns._
 import graft.text.TextPrep
 
@@ -305,22 +304,19 @@ object Dedup {
 
   /** Driver bytes one collected edge costs on [[propagate]]'s driver
     * branch — its collected row plus its share of [[minLabels]]'
-    * arrays — measured once with Spark's SizeEstimator on a sample
-    * chain, so the bound follows the JVM's real object layout. */
+    * arrays — measured once on a sample chain. */
   private lazy val bytesPerEdge: Long = {
     val n = 4096
     val rows = Array.tabulate[Row](n)(i => Row(i.toLong, i + 1L))
     val (src, dst) = (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     val (ids, labels) = minLabels(src, dst)
     val parent = Array.tabulate(ids.length)(identity)
-    math.max(1L, SizeEstimator.estimate(
-      Array[AnyRef](rows, src, dst, src ++ dst, ids, labels, parent)) / n)
+    DriverHeap.bytesPer(n, Array[AnyRef](rows, src, dst, src ++ dst, ids, labels, parent))
   }
 
   /** The largest edge list [[propagate]] labels on the driver: an
     * eighth of the driver heap at the measured per-edge cost. */
-  private[graft] def driverEdgeBound: Long =
-    Runtime.getRuntime.maxMemory / 8 / bytesPerEdge
+  private[graft] def driverEdgeBound: Long = DriverHeap.bound(bytesPerEdge)
 
   /** The distributed branch of [[propagate]]: min-label propagation
     * with pointer jumping over the checkpointed directed `edges`. */

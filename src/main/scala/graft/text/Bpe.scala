@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.{DriverHeap, Tables}
 import graft.functions.Fns._
 
 /** Iterative BPE merge-table training and application over the word-token
@@ -32,15 +34,26 @@ import graft.functions.Fns._
   * replay, apply mart and streaming twin runs.
   *
   * Scale design (100 TB):
-  *   - State is (key, symbol array), re-checkpointed per round. Each
-  *     round's ONLY shuffle is the weighted pair count — hash
-  *     partial-aggregated map-side, so the exchange moves at most
+  *   - One `limit(bound + 1)` collect of the round-0 state picks the
+  *     branch. A state within [[driverSymbolBound]] symbols (an eighth
+  *     of the driver heap over a measured per-symbol cost) runs all
+  *     rounds in [[mergeLocal]] on the driver and returns the table and
+  *     final state as local relations: the collect is the only job,
+  *     where the distributed loop pays two jobs a round. The subword
+  *     grain's state is the vocabulary-bounded word table, so it stays
+  *     on the driver at any corpus size this engine has measured; the
+  *     word grain's state is the token stream and leaves the driver
+  *     once the corpus outgrows the heap (SCALE.md has the bound and
+  *     the branch per scale).
+  *   - Above the bound the state is (key, symbol array), re-checkpointed
+  *     per round. Each round's ONLY shuffle is the weighted pair count —
+  *     hash partial-aggregated map-side, so the exchange moves at most
   *     partitions × realized-pair-vocab rows, never the token stream.
-  *   - The round's ≤ cap selected pairs are collected to the driver
-  *     (the loop needs them there anyway) and folded back in as a
-  *     literal array; the merge itself is a row-local string replace
-  *     (no shuffle, no join), and the merge table is assembled on the
-  *     driver — `rounds × cap` rows at any corpus size.
+  *     The round's ≤ cap selected pairs are collected to the driver and
+  *     folded back in as a literal array; the merge itself is a
+  *     row-local string replace (no shuffle, no join), and the merge
+  *     table is assembled on the driver — `rounds × cap` rows at any
+  *     corpus size.
   *   - A fixed round count keeps the job graph static; per-round plans
   *     stay O(1) because state lineage is cut at each checkpoint. On a
   *     real cluster the localCheckpoints become reliable checkpoints to
@@ -56,8 +69,9 @@ import graft.functions.Fns._
   * and never rescans replaced output, the pattern consumes one frame
   * char from each boundary and the replacement restores it, so disjoint
   * consecutive occurrences stay matchable. U+0001 cannot appear in a
-  * token of this corpus (spec-asserted); BpeSpec and BpeKernelSpec pin
-  * the string form == a reference greedy array fold. The oracle runs
+  * token of this corpus (spec-asserted); BpeSpec pins the string form
+  * == a reference greedy array fold, and BpeKernelSpec pins both
+  * branches of [[mergeRounds]] == [[mergeLocal]]. The oracle runs
   * the same `rounds` merge rounds unrolled as chained CTEs (the
   * q_pagerank device).
   */
@@ -106,23 +120,65 @@ object Bpe {
     * pairs, then up to `cap` pairs ranked by (count desc, a, b) that no
     * token-sharing rival beats (locally maximal, hence pairwise
     * token-disjoint: two overlapping survivors would each have to beat
-    * the other), collected to the driver and folded into the state in
-    * rank order by [[foldSql]] over a literal `ms` array. The global
-    * top pair always survives and ranks first, so at `cap` = 1 it is
-    * the whole selection and the rival self-join is skipped — a round
-    * is the pair count's two jobs (its shuffle and the winner collect,
-    * which also materializes the previous round's lazy state
-    * checkpoint). At `cap` > 1 merges per driver round-trip go from 1
-    * to cap, with every count of a batch measured at round start (the
-    * standard batched-BPE approximation). A round without pairs ends
-    * the loop: the state can no longer change. Table: a local relation
-    * (round, batch_rank, tok_a, tok_b, merged, pair_n) in application
-    * order, pair_n the pair's weighted count at merge time. The final
-    * state stays checkpointed — callers release or read it (the specs
-    * pin apply == train on it). */
+    * the other), folded into the state in rank order as greedy leftmost
+    * non-overlapping merges. The global top pair always survives and
+    * ranks first, so `cap` = 1 is the sequential trainer; at `cap` > 1
+    * merges per round go from 1 to cap, with every count of a batch
+    * measured at round start (the standard batched-BPE approximation).
+    * A round without pairs ends the loop: the state can no longer
+    * change. Table: (round, batch_rank, tok_a, tok_b, merged, pair_n) in
+    * application order, pair_n the pair's weighted count at merge time.
+    *
+    * Two branches, one result (BpeKernelSpec). One `limit(bound + 1)`
+    * collect of the state decides: a state of at most `driverSymbols`
+    * symbols (default [[driverSymbolBound]]) runs every round in
+    * [[mergeLocal]] and comes back, with the table, as local relations
+    * — no job per round. A larger one, or any state at `driverSymbols`
+    * = 0, runs the distributed loop over `distribute(state0)` (the hook
+    * is applied on that branch only). */
   private[graft] def mergeRounds(state0: DataFrame, symbols: String,
                                  weight: Column, joiner: String,
-                                 rounds: Int, cap: Int): (DataFrame, DataFrame) = {
+                                 rounds: Int, cap: Int,
+                                 driverSymbols: Long = driverSymbolBound,
+                                 distribute: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    // One row per symbol, the state row and its weight riding on the
+    // first: the row limit then bounds the symbols the driver would hold.
+    // A bound of 0 admits no state, so it skips the collect.
+    val row = struct(state0.columns.toSeq.map(col) :+ weight.cast("long").as("w"): _*)
+    lazy val got = state0
+      .select(row.as("r"), explode(sequence(lit(1), greatest(size(col(symbols)), lit(1)))).as("i"))
+      .select(when(col("i") === 1, col("r")).as("r"))
+      .limit(math.min(driverSymbols, Int.MaxValue - 1L).toInt + 1).collect()
+    if (driverSymbols <= 0 || got.length > driverSymbols)
+      distributedRounds(distribute(state0), symbols, weight, joiner, rounds, cap)
+    else {
+      val n = state0.columns.length
+      val rows = got.flatMap(g => Option(g.getStruct(0)))
+      val si = state0.schema.fieldIndex(symbols)
+      val (table, fin) = mergeLocal(rows.map(_.getLong(n)),
+        rows.map(_.getSeq[String](si).toArray), joiner, rounds, cap)
+      val finRows = rows.zip(fin).map { case (r, s) =>
+        Row.fromSeq(r.toSeq.take(n).updated(si, s.toSeq))
+      }
+      val spark = state0.sparkSession
+      (spark.createDataFrame(java.util.Arrays.asList(table: _*), mergeSchema),
+        spark.createDataFrame(java.util.Arrays.asList(finRows: _*), state0.schema))
+    }
+  }
+
+  /** The distributed branch of [[mergeRounds]]: each round's pair count
+    * is a partial-aggregated shuffle, its ≤ `cap` winners are collected
+    * and folded into the checkpointed state by [[foldSql]] over a
+    * literal `ms` array. At `cap` = 1 the rival self-join is skipped — a
+    * round is the pair count's two jobs (its shuffle and the winner
+    * collect, which also materializes the previous round's lazy state
+    * checkpoint). The table is a driver-built local relation; the final
+    * state stays checkpointed — callers release or read it (the specs
+    * pin apply == train on it). */
+  private def distributedRounds(state0: DataFrame, symbols: String,
+                                weight: Column, joiner: String,
+                                rounds: Int, cap: Int): (DataFrame, DataFrame) = {
     var state = state0.localCheckpoint(false)
     val held = scala.collection.mutable.ArrayBuffer(state)
     val table = Vector.newBuilder[Row]
@@ -169,6 +225,95 @@ object Bpe {
     (spark.createDataFrame(java.util.Arrays.asList(table.result(): _*), mergeSchema), state)
   }
 
+  /** A pair's weighted count during one [[mergeLocal]] round. */
+  private final class Count(var n: Long)
+
+  /** Spark's string order: unsigned UTF-8 bytes, as `ORDER BY` ranks. */
+  private def utf8Compare(x: String, y: String): Int =
+    UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+
+  /** The merge loop on the driver — Sennrich et al.'s reference BPE
+    * (ACL 2016) over rows of (weight, symbols), with [[mergeRounds]]'
+    * selection: per round the weighted count of adjacent pairs, the
+    * locally-maximal pairs (each ranks first by (count desc, a, b)
+    * among the pairs sharing either of its tokens), the top `cap` of
+    * them in rank order, and each one's greedy leftmost
+    * non-overlapping fold over every row. Strings rank as Spark ranks
+    * them, so this loop and the distributed one pick the same winners.
+    * Returns the merge table's rows and each row's final symbols. */
+  private[graft] def mergeLocal(weights: Array[Long], syms0: Array[Array[String]],
+                                joiner: String, rounds: Int,
+                                cap: Int): (Vector[Row], Array[Array[String]]) = {
+    val syms = syms0.clone()
+    val table = Vector.newBuilder[Row]
+    var r = 1
+    var exhausted = false
+    while (r <= rounds && !exhausted) {
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Count]
+      syms.indices.foreach { k =>
+        val s = syms(k)
+        var i = 0
+        while (i + 1 < s.length) {
+          counts.getOrElseUpdate((s(i), s(i + 1)), new Count(0L)).n += weights(k)
+          i += 1
+        }
+      }
+      val ranked = counts.iterator.map { case ((a, b), c) => (a, b, c.n) }.toArray
+      def before(p: (String, String, Long), q: (String, String, Long)): Boolean =
+        if (p._3 != q._3) p._3 > q._3 else {
+          val ca = utf8Compare(p._1, q._1)
+          if (ca != 0) ca < 0 else utf8Compare(p._2, q._2) < 0
+        }
+      // each token's top-ranked pair; a pair is locally maximal when it
+      // is the top pair of both its tokens
+      val top = scala.collection.mutable.HashMap.empty[String, (String, String, Long)]
+      ranked.foreach(p => Seq(p._1, p._2).foreach { t =>
+        if (top.get(t).forall(before(p, _))) top(t) = p
+      })
+      val won = ranked.filter(p => (top(p._1) eq p) && (top(p._2) eq p))
+        .sortWith(before).take(cap)
+      exhausted = won.isEmpty
+      won.zipWithIndex.foreach { case ((a, b, n), i) =>
+        table += Row(r, i + 1, a, b, a + joiner + b, n)
+        syms.indices.foreach(k => syms(k) = greedyMerge(syms(k), a, b, joiner))
+      }
+      r += 1
+    }
+    (table.result(), syms)
+  }
+
+  /** `syms` with every leftmost non-overlapping adjacent (a, b) joined
+    * into a||joiner||b — the fold [[foldSql]]'s `replace` performs. */
+  private def greedyMerge(syms: Array[String], a: String, b: String,
+                          joiner: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+        out += a + joiner + b; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.result()
+  }
+
+  /** Driver bytes one symbol costs on [[mergeRounds]]' driver branch —
+    * its collected row, its slot and string in [[mergeLocal]]'s state
+    * and its share of a round's pair counts — measured once on a sample
+    * of 512 rows of 8 distinct symbols. */
+  private lazy val bytesPerSymbol: Long = {
+    val (n, width) = (512, 8)
+    val syms = Array.tabulate(n, width)((i, j) => f"s$i%04d$j")
+    val rows = syms.flatMap(s => Row(Row(7L, s.toSeq, 1L)) +: Array.fill(width - 1)(Row(null)))
+    val counts = scala.collection.mutable.HashMap.from(
+      syms.flatMap(s => s.indices.init.map(i => (s(i), s(i + 1)) -> new Count(1L))))
+    DriverHeap.bytesPer(n * width, Array[AnyRef](rows, syms, counts))
+  }
+
+  /** The largest state, in symbols, that [[mergeRounds]] trains on the
+    * driver: an eighth of the driver heap at the measured per-symbol
+    * cost. */
+  private[graft] def driverSymbolBound: Long = DriverHeap.bound(bytesPerSymbol)
+
   /** The merge table's columns; [[graft.sources.Artifacts]] stamps
     * `name:type`, so these types are part of a persisted table's
     * version (BpeKernelSpec pins them). */
@@ -181,23 +326,24 @@ object Bpe {
   /** Word-grain training; returns (merge table, final token state). */
   private[graft] def trainWithState(documents: DataFrame,
                                     rounds: Int): (DataFrame, DataFrame) = {
-    // The round-0 checkpoint inherits the SCAN's split count (3 tasks at
-    // sf0.1's file sizes), and every round's pair-count + merge stage
-    // replays at that width for the whole loop, so one hash repartition
-    // (deterministic key) spreads all `rounds` corpus passes. The WIDTH
-    // is derived from the corpus, not pinned to the core count: r15's
+    // On the distributed branch the round-0 checkpoint would inherit the
+    // SCAN's split count (3 tasks at sf0.1's file sizes), and every
+    // round's pair-count + merge stage replays at that width for the
+    // whole loop, so one hash repartition (deterministic key) spreads
+    // all `rounds` corpus passes. The WIDTH is derived from the corpus,
+    // not pinned to the core count: r15's
     // `repartition(numShufflePartitions)` made 32 sub-MB tasks per round
     // at sf0.1 and the 8-round loop ran 2.3× SLOWER on 32 cores than on
     // 8 (BENCH_r15 scaling 0.43) — pure per-task scheduling overhead.
     // The scan's split count is the bytes proxy (corpus bytes / split
     // size), ×2 for the fold work per byte, capped at the session's
-    // shuffle parallelism so a real cluster still fans out.
-    val ts = tokenState(documents)
-    val nPart = math.max(1, math.min(
+    // shuffle parallelism so a real cluster still fans out. The driver
+    // branch reads the state once and skips this shuffle.
+    def spread(ts: DataFrame): DataFrame = ts.repartition(math.max(1, math.min(
       documents.sparkSession.sessionState.conf.numShufflePartitions,
-      ts.rdd.getNumPartitions * 2))
-    val (table, state) = mergeRounds(ts.repartition(nPart, col("doc_id")),
-      "toks", lit(1L), " ", rounds, cap = 1)
+      ts.rdd.getNumPartitions * 2)), col("doc_id"))
+    val (table, state) = mergeRounds(tokenState(documents), "toks", lit(1L), " ",
+      rounds, cap = 1, distribute = spread)
     (table.drop("batch_rank"), state)
   }
 

@@ -32,6 +32,10 @@ import graft.functions.Fns._
   *     weighted by the word's corpus count, merges concatenated (joiner
   *     ""), one merge per round at cap 1, and a batch of up to
   *     `cap` token-disjoint merges per round in [[subwordTrainBatched]].
+  *     The word table is vocabulary-bounded, so it is collected once
+  *     after the word count and every round runs on the driver while it
+  *     fits [[Bpe.driverSymbolBound]]; a larger table runs the
+  *     distributed rounds.
   *   - Application is the same [[Bpe.foldSql]] replay per word of each
   *     document (zero shuffles beyond the broadcast merge artifact,
   *     streaming-safe); a corpus that wants to amortize further
@@ -88,11 +92,12 @@ object SubwordBpe {
     subwordTrainBatched(documents, rounds, cap = 1).drop("batch_rank")
 
   /** BATCHED subword training — the driver-latency fix for production
-    * merge counts: the sequential loop pays one driver round-trip +
-    * checkpoint PER MERGE, which binds a ~30k-merge production
-    * vocabulary on the driver long before any executor is busy. Each
-    * batched round merges up to `cap` locally-maximal, token-disjoint
-    * pairs (see [[Bpe.mergeRounds]]); cap = 1 IS the sequential trainer.
+    * merge counts: on the distributed branch the sequential loop pays
+    * one driver round-trip + checkpoint PER MERGE, which binds a
+    * ~30k-merge production vocabulary on the driver long before any
+    * executor is busy. Each batched round merges up to `cap`
+    * locally-maximal, token-disjoint pairs (see [[Bpe.mergeRounds]]);
+    * cap = 1 IS the sequential trainer.
     * Output: (round, batch_rank, tok_a, tok_b, merged, pair_n). */
   def subwordTrainBatched(documents: DataFrame, rounds: Int = 4,
                           cap: Int = 4): DataFrame = {
