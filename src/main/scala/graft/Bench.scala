@@ -12,23 +12,6 @@ object Bench {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
-    // Warm up JVM/codegen/parquet-footer paths so the first timed query of
-    // each family doesn't absorb one-time session costs: the text/dedup
-    // expressions (md5, conv, regex explode) and vector folds JIT-compile
-    // on first touch, which showed up as several seconds on whichever
-    // query happened to run first. Tiny limits keep the warmup itself fast.
-    try {
-      SparkEntry.queries.get("q_fact_daily_agg").foreach(_(spark, sfDir).count())
-      val docs = graft.Tables.documents(spark, sfDir).limit(64)
-      graft.dedup.Dedup.minhashLsh(docs, 100).count()
-      graft.dedup.Dedup.ngramJaccard(docs).count()
-      graft.dedup.Dedup.simhash(docs).count()
-      graft.ann.Embeddings.quantizeInt8(
-        graft.Tables.embeddings(spark, sfDir).limit(64)).count()
-      graft.ml.Monitoring.modelPerf(
-        graft.Tables.events(spark, sfDir).limit(256)).count()
-    } catch { case _: Throwable => () }
-    spark.catalog.clearCache()
     // Dev-only subset filter (comma-separated names); unset → full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // A query that throws is recorded as failed — never timed as if it

@@ -720,7 +720,7 @@ object Ann {
     // adaptiveLshParams' (2b, b), but the parameters are public
     require(nBits % bandBits == 0,
       s"bandBits=$bandBits must divide nBits=$nBits — trailing hyperplane bits would be lost")
-    val S = "1099511627776.0" // 2^40, DotScaled.Scale
+    val S = DotScaled.ScaleSql
     val bits = (0 until nBits).map { j =>
       val sgn = (0 until inDims).map(lshSign(_, j)).mkString("array(", ",", ")")
       when(expr(s"aggregate(zip_with(embedding, $sgn, (x, s) -> cast(x as double) * s), " +
@@ -739,17 +739,15 @@ object Ann {
   /** [[lshNearDup]] without the presentation sort — what internal
     * consumers (cluster propagation) build on.
     *
-    * HOT-BUCKET CAP (same guard and trade as
-    * [[graft.dedup.Dedup.minhashLsh]]): sign-bit buckets larger than
-    * `bucketLimit` vectors are dropped before the self-join — without
-    * it the candidate join is Θ(n²/2^bandBits) pairs (measured 45×
-    * time for 10× vectors on the dense synthetic 10× corpus). Dense
+    * HOT-BUCKET CAP ([[graft.dedup.Dedup.bucketPairs]], the guard and
+    * trade of [[graft.dedup.Dedup.minhashLsh]]): sign-bit buckets larger
+    * than `bucketLimit` vectors are dropped before the self-join —
+    * without it the candidate join is Θ(n²/2^bandBits) pairs (measured
+    * 45× time for 10× vectors on the dense synthetic 10× corpus). Dense
     * clusters still pair through their other bands unless those are
     * hot too; at corpus scale the production knob is
     * bandBits ≈ log2(n/bucketLimit), which keeps buckets near the cap
-    * instead of discarding mass. The bucket count is a window over the
-    * SAME (band_id, band_val) partitioning the self-join shuffles on
-    * (ReuseExchange — one exchange serves count, filter, both sides). */
+    * instead of discarding mass. */
   private def lshPairs(embeddings: DataFrame, nBits: Int, bandBits: Int,
                        threshold: Double, inDims: Int,
                        bucketLimit: Int = 100,
@@ -763,25 +761,26 @@ object Ann {
     // test-scale data) and watch the wide signature run end to end.
     val (nb, bb) = if (bandBits > 0) (nBits, bandBits)
       else adaptiveLshParams(countOverride.getOrElse(PlanStats.rowCount(embeddings)), bucketLimit)
-    val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    val wB = Window.partitionBy(col("band_id"), col("band_val"))
-    val banded = lshBandStore(embeddings.select(col("vec_id"), col("embedding")),
-      nb, bb, inDims)
-      .withColumn("bucket_n", count(lit(1)).over(wB))
-      .filter(col("bucket_n") <= bucketLimit)
-      .select("vec_id", "band_id", "band_val")
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .groupBy(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
+    val cand = graft.dedup.Dedup.bucketPairs(
+      lshBandStore(embeddings.select(col("vec_id"), col("embedding")), nb, bb, inDims),
+      bucketLimit)
+    cosineVerified(cand, embeddings, threshold)
+      .select("vec_a", "vec_b", "n_shared_bands", "cosine")
+  }
+
+  /** The exact-cosine verification of LSH candidate pairs (doc_a, doc_b,
+    * …) against the vectors of `vecs` (vec_id, embedding), fetched by key
+    * for both sides: the pairs at cosine ≥ `threshold`, with doc_a/doc_b
+    * renamed vec_a/vec_b and the r6 cosine appended. */
+  private def cosineVerified(cand: DataFrame, vecs: DataFrame,
+                             threshold: Double): DataFrame = {
+    val v = withNorm(vecs.select(col("vec_id"), col("embedding")))
     cand
-      .join(v.select(col("vec_id").as("vec_a"), col("embedding").as("e1"), col("nrm").as("nrm1")), "vec_a")
-      .join(v.select(col("vec_id").as("vec_b"), col("embedding").as("e2"), col("nrm").as("nrm2")), "vec_b")
+      .join(v.select(col("vec_id").as("doc_a"), col("embedding").as("e1"), col("nrm").as("nrm1")), "doc_a")
+      .join(v.select(col("vec_id").as("doc_b"), col("embedding").as("e2"), col("nrm").as("nrm2")), "doc_b")
       .withColumn("cosine", r6(dot("e1", "e2") / (col("nrm1") * col("nrm2"))))
       .filter(col("cosine") >= threshold)
-      .select("vec_a", "vec_b", "n_shared_bands", "cosine")
+      .withColumnRenamed("doc_a", "vec_a").withColumnRenamed("doc_b", "vec_b")
   }
 
   /** Incremental embedding dedup — the vector twin of
@@ -797,32 +796,14 @@ object Ann {
   def lshIncrement(newVecs: DataFrame, allVecs: DataFrame, storedBands: DataFrame,
                    threshold: Double = 0.35, bucketLimit: Int = 100,
                    nBits: Int = 16, bandBits: Int = 4): DataFrame = {
-    val wB = Window.partitionBy(col("band_id"), col("band_val"))
-    // cap applies to MERGED bucket sizes (store ∪ batch) so the result
-    // equals the full-recompute restriction — the minhashIncrement rule.
     // nBits AND bandBits must match the widths the stored bands were
     // built with (a real store versions both in its metadata) — without
     // the nBits passthrough a store built on adaptiveLshParams' wide
     // rung (nBits = 2·bandBits > 16) could never be incremented.
-    val all = storedBands.withColumn("is_new", lit(false))
+    val cand = graft.dedup.Dedup.bucketPairs(storedBands.withColumn("is_new", lit(false))
       .unionByName(lshBandStore(newVecs, nBits = nBits, bandBits = bandBits)
-        .withColumn("is_new", lit(true)))
-      .withColumn("bucket_n", count(lit(1)).over(wB))
-      .filter(col("bucket_n") <= bucketLimit)
-      .select("vec_id", "band_id", "band_val", "is_new")
-    val cand = all.as("a")
-      .join(all.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id") && (col("a.is_new") || col("b.is_new")))
-      .groupBy(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        (col("a.is_new") && col("b.is_new")).as("both_new"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    val v = withNorm(allVecs.select(col("vec_id"), col("embedding")))
-    cand
-      .join(v.select(col("vec_id").as("vec_a"), col("embedding").as("e1"), col("nrm").as("nrm1")), "vec_a")
-      .join(v.select(col("vec_id").as("vec_b"), col("embedding").as("e2"), col("nrm").as("nrm2")), "vec_b")
-      .withColumn("cosine", r6(dot("e1", "e2") / (col("nrm1") * col("nrm2"))))
-      .filter(col("cosine") >= threshold)
+        .withColumn("is_new", lit(true))), bucketLimit)
+    cosineVerified(cand, allVecs, threshold)
       .select(col("vec_a"), col("vec_b"), col("n_shared_bands"),
         when(col("both_new"), "new_vs_new").otherwise("new_vs_corpus").as("kind"),
         col("cosine"))
@@ -838,20 +819,12 @@ object Ann {
     * blocks, exact cosine verifies, min-label propagation
     * ([[graft.dedup.Dedup.propagate]] — same checkpointed loop) closes
     * the transitive hull, one window sizes clusters. */
-  def embedSurvivors(embeddings: DataFrame, threshold: Double = 0.35): DataFrame = {
-    val pairs = lshPairs(embeddings, 16, 0, threshold, 64)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val labels = graft.dedup.Dedup.propagate(pairs)
-      .select(col("id").as("vec_id"), col("label").as("cluster_id"))
-    val wC = Window.partitionBy(col("cluster_id"))
-    embeddings.select(col("vec_id"), col("label"))
-      .join(labels, Seq("vec_id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("vec_id")))
-      .withColumn("cluster_size", count(lit(1)).over(wC))
-      .select(col("vec_id"), col("label"), col("cluster_id"), col("cluster_size"),
-        (col("vec_id") === col("cluster_id")).as("keep"))
+  def embedSurvivors(embeddings: DataFrame, threshold: Double = 0.35): DataFrame =
+    graft.dedup.Dedup.clusterSurvivors(embeddings.select(col("vec_id"), col("label")),
+        lshPairs(embeddings, 16, 0, threshold, 64)
+          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+      .select("vec_id", "label", "cluster_id", "cluster_size", "keep")
       .orderBy("vec_id")
-  }
 
   /** Per-label centroid cosine matrix — the cluster-separation /
     * corpus-diversity diagnostic (which sources or clusters embed close
@@ -861,7 +834,7 @@ object Ann {
     * rows. All sums are the 2^40 scaled-integer floor device, so means
     * and cosines are engine-exact at any partitioning. */
   def labelCentroids(embeddings: DataFrame): DataFrame = {
-    val S = "1099511627776.0"
+    val S = DotScaled.ScaleSql
     val sums = embeddings
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .groupBy(col("label"), col("dim"))
@@ -1204,8 +1177,7 @@ object Ann {
       .filter(col("cosine") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
-        max(when(col("ccos_a") < col("ccos") ||
-            (col("ccos_a") === col("ccos") && col("vec_a") < col("vec_id")), 1)
+        max(when(dominates(col("ccos_a"), col("vec_a"), col("ccos"), col("vec_id")), 1)
           .otherwise(0)).as("dominated"))
     assign.select(col("vec_id"), col("centroid_id"), col("ccos"))
       .join(dups, Seq("vec_id"), "left")
@@ -1232,13 +1204,7 @@ object Ann {
     * adaptive K, and the assign pass is one broadcast of K centroid
     * rows. Output is fresh-grain. */
   def semanticIncrement(embeddings: DataFrame, threshold: Double = 0.35): DataFrame = {
-    val tagged = embeddings.withColumn("dg", graft.functions.Fns.hexDigit("vec_id", 1))
-    val existing = tagged.filter(col("dg") >= 2)
-    val k = adaptiveCells(PlanStats.rowCount(existing.select(col("vec_id"))))
-    val v = withNorm(tagged.select(col("vec_id"), col("dg"), col("embedding")))
-    val cents = centroids(
-      withNorm(existing.select(col("vec_id"), col("embedding"))), k)
-    val assign = centroidRankedWith(v, cents).filter(col("rn") === 1)
+    val assign = frozenAssign(embeddings)
       .select(col("vec_id"), col("dg"), col("embedding"), col("nrm"),
         col("centroid_id"), col("ccos"))
     val fresh = assign.filter(col("dg") < 2)
@@ -1253,8 +1219,7 @@ object Ann {
       .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
         sum(when(col("dg_a") >= 2, 1L).otherwise(0L)).as("n_stored_dups"),
         max(when(col("dg_a") >= 2 ||
-            col("ccos_a") < col("ccos") ||
-            (col("ccos_a") === col("ccos") && col("vec_a") < col("vec_id")), 1)
+            dominates(col("ccos_a"), col("vec_a"), col("ccos"), col("vec_id")), 1)
           .otherwise(0)).as("dominated"))
     fresh.select(col("vec_id"), col("centroid_id"), col("ccos"))
       .join(dups, Seq("vec_id"), "left")
@@ -1281,15 +1246,8 @@ object Ann {
     * Scale: one broadcast assign pass (n·K exact dots, K ~ √n_existing)
     * and one K-row aggregate; means are DECIMAL sums so the mart is
     * partition-order-exact. */
-  def indexStaleness(embeddings: DataFrame): DataFrame = {
-    val tagged = embeddings.withColumn("dg", graft.functions.Fns.hexDigit("vec_id", 1))
-    val existing = tagged.filter(col("dg") >= 2)
-    val k = adaptiveCells(PlanStats.rowCount(existing.select(col("vec_id"))))
-    val v = withNorm(tagged.select(col("vec_id"), col("dg"), col("embedding")))
-    val cents = centroids(
-      withNorm(existing.select(col("vec_id"), col("embedding"))), k)
-    val assign = centroidRankedWith(v, cents).filter(col("rn") === 1)
-    assign.groupBy(col("centroid_id"))
+  def indexStaleness(embeddings: DataFrame): DataFrame =
+    frozenAssign(embeddings).groupBy(col("centroid_id"))
       .agg(
         sum(when(col("dg") >= 2, 1L).otherwise(0L)).as("n_existing"),
         sum(when(col("dg") < 2, 1L).otherwise(0L)).as("n_fresh"),
@@ -1303,7 +1261,30 @@ object Ann {
         r6(col("se").cast("double") / col("n_existing") -
           col("sf").cast("double") / col("n_fresh")).as("fit_gap"))
       .orderBy("centroid_id")
+
+  /** The frozen-index assignment shared by [[semanticIncrement]] and
+    * [[indexStaleness]]: vectors split by the md5 digit of their id
+    * (`dg` ≥ 2 is the existing corpus, < 2 the arrivals), centroids
+    * trained on the existing side alone ([[adaptiveCells]] of its count),
+    * and every vector assigned to its nearest one: (vec_id, dg,
+    * embedding, nrm, centroid_id, ccos, …). */
+  private def frozenAssign(embeddings: DataFrame): DataFrame = {
+    val tagged = embeddings.withColumn("dg", graft.functions.Fns.hexDigit("vec_id", 1))
+    val existing = tagged.filter(col("dg") >= 2)
+    val k = adaptiveCells(PlanStats.rowCount(existing.select(col("vec_id"))))
+    val v = withNorm(tagged.select(col("vec_id"), col("dg"), col("embedding")))
+    val cents = centroids(
+      withNorm(existing.select(col("vec_id"), col("embedding"))), k)
+    centroidRankedWith(v, cents).filter(col("rn") === 1)
   }
+
+  /** The keep-least-prototypical order of the SemDeDup marts
+    * ([[semanticDedup]], [[semanticIncrement]] and the chunk-grain marts
+    * of [[ChunkRetrieval]]): a duplicate partner (fitB, idB) dominates
+    * (fit, id) when it is the LESS prototypical of the two — the lower
+    * fit — ties going to the smaller id. */
+  private[ann] def dominates(fitB: Column, idB: Column, fit: Column, id: Column): Column =
+    fitB < fit || (fitB === fit && idB < id)
 
   private[ann] def loadEmb(s: SparkSession, d: String): DataFrame = {
     DotScaled.register(s)

@@ -331,13 +331,15 @@ object ChunkRetrieval {
   }
 
   /** Chunk embeddings with their LSH cell and prototypicality fit:
-    * (chunk_id, p, nsq, cell, fit). `fit` is the chunk's cosine to its
+    * (base, cells) — the pinned embed base (chunk_id, p, nsq), which the
+    * survivor serve feeds to its vector arm, and the cell frame built on
+    * it, (chunk_id, p, nsq, cell, fit). `fit` is the chunk's cosine to its
     * CELL CENTROID — computed against the cell's exact integer SUM
     * vector (cosine is scale-invariant, so cos(p, mean) == cos(p, sum)
     * and no division ever happens: both engines stay in exact integer
     * arithmetic until the final rounded double). A cancelled cell sum
     * (snsq = 0) pins fit to 0. */
-  private[graft] def chunkCells(ch: DataFrame): DataFrame = {
+  private[graft] def chunkCells(ch: DataFrame): (DataFrame, DataFrame) = {
     // The embed shuffle below is the ONE corpus-scale stage of the dedup
     // family, and this frame has three consumers (the cell sums, the
     // centroid join, and — via [[chunkDedup]] — a self-join that reads it
@@ -353,7 +355,7 @@ object ChunkRetrieval {
     // cell space to the measured corpus — the PlanStats device, like
     // chunkFactorFor
     val bits = cellBitsFor(base.count())
-    withCellFit(base.withColumn("cell", cellAt("p", 0, bits)))
+    (base, withCellFit(base.withColumn("cell", cellAt("p", 0, bits))))
   }
 
   /** Sign-LSH cell value from `bits` leading signs of array column
@@ -406,25 +408,33 @@ object ChunkRetrieval {
   def chunkDedup(documents: DataFrame, threshold: Double = 0.95): DataFrame = {
     val ww = wordsFrame(documents)
     val factor = factorFrom(ww)
-    chunkDedupFrom(chunksFrom(ww, factor), factor, threshold)
+    val (_, cc) = chunkCells(chunksFrom(ww, factor))
+    chunkVerdicts(cc, cellPairs(cc, threshold), factor)
   }
 
-  /** [[chunkDedup]] over an already-built chunk frame and its factor. */
-  private def chunkDedupFrom(ch: DataFrame, factor: Long,
-                             threshold: Double): DataFrame = {
-    val cc = chunkCells(ch)
+  /** The verified within-cell pairs of a [[chunkCells]] frame, one row
+    * per pair and endpoint: the endpoint's columns, its partner's as
+    * (ca, pa, nsqa, cella, fita), and the pair's cosine, ≥ `threshold`. */
+  private def cellPairs(cc: DataFrame, threshold: Double): DataFrame = {
     val other = cc.select(col("chunk_id").as("ca"), col("p").as("pa"),
       col("nsq").as("nsqa"), col("cell").as("cella"), col("fit").as("fita"))
-    val dups = cc.join(other,
+    cc.join(other,
         col("cell") === col("cella") && col("chunk_id") =!= col("ca"))
       .withColumn("cosine", cosineOf("p", "nsq", "pa", "nsqa"))
       .filter(col("cosine") >= threshold)
-      .groupBy(col("chunk_id"))
+  }
+
+  /** The chunk verdict mart of [[chunkDedup]], [[chunkBandedDedup]] and
+    * [[chunkMpDedup]]: every chunk of `cells` (chunk_id, cell, fit, …)
+    * with its duplicate count and max duplicate cosine over the verified
+    * `pairs` (chunk_id, ca, fit, fita, cosine — one row per pair and
+    * endpoint), kept unless a partner [[Ann.dominates]] it. */
+  private def chunkVerdicts(cells: DataFrame, pairs: DataFrame, factor: Long): DataFrame = {
+    val dups = pairs.groupBy(col("chunk_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
-        max(when(col("fita") < col("fit") ||
-            (col("fita") === col("fit") && col("ca") < col("chunk_id")), 1)
+        max(when(Ann.dominates(col("fita"), col("ca"), col("fit"), col("chunk_id")), 1)
           .otherwise(0)).as("dominated"))
-    cc.select(col("chunk_id"), col("cell"), col("fit"))
+    cells.select(col("chunk_id"), col("cell"), col("fit"))
       .join(dups, Seq("chunk_id"), "left")
       .select(floor(col("chunk_id") / factor).cast("long").as("doc_id"),
         col("chunk_id"), col("cell"), col("fit"),
@@ -436,11 +446,11 @@ object ChunkRetrieval {
   /** Bands of the multi-band LSH variant: 3 independent hyperplane
     * sets, each `bits` wide, drawn from one wide sign projection. The
     * Hamming-1 MULTI-PROBE generator uses [[mpBandCount]] = 6 bands —
-    * at the 14-bit width a 100× corpus derives, 3 bands at Hamming 1
-    * measured 0.885 recall over 235 brute-forced true pairs at 5 bands (0.9106 at the promoted mpBandCount)
-    * and each further band multiplies the miss rate by the measured
-    * per-band miss (0.649): 6 bands clear 0.9 at 6/5 the (still
-    * linear) pair cost; band values are PREFIX-STABLE (row j of the
+    * at the 14-bit width a 100× corpus derives, Hamming-1 multiprobe
+    * measured 0.885 recall over 235 brute-forced true pairs with 5 bands
+    * and 0.9106 with 6 (SCALE.md, round 14; each added band multiplied
+    * the measured miss rate by ~0.65), so 6 bands clear 0.9 at 6/5 the
+    * (still linear) pair cost; band values are PREFIX-STABLE (row j of the
     * sign matrix is independent of the projection width), so the
     * 3-band keys are bit-unchanged by the widening. */
   private[graft] val bandCount = 3
@@ -567,19 +577,7 @@ object ChunkRetrieval {
   private def bandedDedupWith(documents: DataFrame, threshold: Double,
                               hamming: Int, nBands: Int): DataFrame = {
     val (cf, bits, factor, n) = bandFitFrame(documents)
-    val cand = mpVerifiedPairs(cf, bits, threshold, hamming, nBands, n)
-    val dups = cand.groupBy(col("chunk_id"))
-      .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
-        max(when(col("fita") < col("fit") ||
-            (col("fita") === col("fit") && col("ca") < col("chunk_id")), 1)
-          .otherwise(0)).as("dominated"))
-    cf.select(col("chunk_id"), col("cell"), col("fit"))
-      .join(dups, Seq("chunk_id"), "left")
-      .select(floor(col("chunk_id") / factor).cast("long").as("doc_id"),
-        col("chunk_id"), col("cell"), col("fit"),
-        coalesce(col("n_dups"), lit(0L)).as("n_dups"), col("max_dup_cosine"),
-        (coalesce(col("dominated"), lit(0)) === 0).as("keep"))
-      .orderBy("chunk_id")
+    chunkVerdicts(cf, mpVerifiedPairs(cf, bits, threshold, hamming, nBands, n), factor)
   }
 
   /** CONNECTED COMPONENTS of the chunk near-dup graph — the
@@ -622,16 +620,9 @@ object ChunkRetrieval {
         nBands = mpBandCount, nRows = n)
       .filter(col("chunk_id") < col("ca"))
       .select(col("chunk_id").as("doc_a"), col("ca").as("doc_b"))
-    val cl = graft.dedup.Dedup.propagate(pairs)
-      .select(col("id").as("chunk_id"), col("label").as("cl_id"))
-    val wC = Window.partitionBy(col("cluster_id"))
-    cf.select(col("chunk_id"))
-      .join(cl, Seq("chunk_id"), "left")
-      .withColumn("cluster_id", coalesce(col("cl_id"), col("chunk_id")))
-      .withColumn("cluster_size", count(lit(1)).over(wC))
+    graft.dedup.Dedup.clusterSurvivors(cf.select(col("chunk_id")), pairs)
       .select(floor(col("chunk_id") / factor).cast("long").as("doc_id"),
-        col("chunk_id"), col("cluster_id"), col("cluster_size"),
-        (col("chunk_id") === col("cluster_id")).as("keep"))
+        col("chunk_id"), col("cluster_id"), col("cluster_size"), col("keep"))
       .orderBy("chunk_id")
   }
 
@@ -782,23 +773,13 @@ object ChunkRetrieval {
   private def survivorChunksAndCe(ww: DataFrame, factor: Long,
                                   threshold: Double): (DataFrame, DataFrame) = {
     val ch = chunksFrom(ww, factor)
-    // the chunkCells boundary, inlined so the pinned embed base stays
-    // in reach of the serving arms
-    val base = chunkEmbeds(ch).localCheckpoint(false)
-    val bits = cellBitsFor(base.count())
-    val cc = withCellFit(base.withColumn("cell", cellAt("p", 0, bits)))
-    val other = cc.select(col("chunk_id").as("ca"), col("p").as("pa"),
-      col("nsq").as("nsqa"), col("cell").as("cella"), col("fit").as("fita"))
+    val (base, cc) = chunkCells(ch)
     // dominated = EXISTS a same-cell pair at cosine ≥ threshold whose
-    // other side is more prototypical — exactly chunkDedupFrom's
-    // keep = false set (max(dominated flag) > 0 ⇔ at least one
-    // dominating pair), without the n_dups/max_cosine mart columns
-    val dominated = cc.join(other,
-        col("cell") === col("cella") && col("chunk_id") =!= col("ca"))
-      .withColumn("cosine", cosineOf("p", "nsq", "pa", "nsqa"))
-      .filter(col("cosine") >= threshold)
-      .filter(col("fita") < col("fit") ||
-        (col("fita") === col("fit") && col("ca") < col("chunk_id")))
+    // other side dominates — exactly chunkDedup's keep = false set
+    // (max(dominated flag) > 0 ⇔ at least one dominating pair), without
+    // the n_dups/max_cosine mart columns
+    val dominated = cellPairs(cc, threshold)
+      .filter(Ann.dominates(col("fita"), col("ca"), col("fit"), col("chunk_id")))
       .select(col("chunk_id")).distinct()
       .localCheckpoint(false)
     (ch.join(dominated, Seq("chunk_id"), "left_anti"),

@@ -25,7 +25,7 @@ import graft.functions.Fns._
   */
 object Embeddings {
 
-  private val S = "1099511627776.0" // 2^40, DotScaled.Scale
+  private val S = graft.functions.DotScaled.ScaleSql
 
   /** Symmetric per-vector int8 quantization: scale = max|x| / 127,
     * q_i = floor(x_i/scale + 0.5) in [-127, 127]. Emits per-vector

@@ -85,31 +85,13 @@ object Dedup {
     * with at least one new side (the invariant LlmDataSpec asserts).
     * Emits candidate pairs tagged new_vs_corpus / new_vs_new. */
   def minhashIncrement(newDocs: DataFrame, storedBands: DataFrame,
-                       bucketLimit: Int = 100): DataFrame = {
-    val all = storedBands.withColumn("is_new", lit(false))
-      .unionByName(lshBands(newDocs).withColumn("is_new", lit(true)))
-    val wB = Window.partitionBy(col("band_idx"), col("bh"))
-    val kept = all
-      .withColumn("bucket_n", count(lit(1)).over(wB))
-      .filter(col("bucket_n") <= bucketLimit)
-      .select("doc_id", "band_idx", "bh", "is_new")
-    val a = kept.as("a")
-    val b = kept.as("b")
-    a.join(b, col("a.band_idx") === col("b.band_idx") &&
-        col("a.bh") === col("b.bh") && col("a.doc_id") < col("b.doc_id") &&
-        (col("a.is_new") || col("b.is_new")))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        (col("a.is_new") && col("b.is_new")).as("both_new"))
-      // count(*) == countDistinct(band_idx) here BY CONSTRUCTION: bands has
-      // exactly one row per (doc, band_idx) and the join pairs rows only
-      // within one band, so each shared band contributes exactly one joined
-      // row per pair. Plain count hash-aggregates map-side; distinct-count
-      // would pay an Expand + two-phase aggregation for the same number.
-      .agg(count(lit(1)).as("n_shared_bands"))
+                       bucketLimit: Int = 100): DataFrame =
+    bucketPairs(storedBands.withColumn("is_new", lit(false))
+        .unionByName(lshBands(newDocs).withColumn("is_new", lit(true))), bucketLimit)
       .select(col("doc_a"), col("doc_b"), col("n_shared_bands"),
         when(col("both_new"), "new_vs_new").otherwise("new_vs_corpus").as("kind"))
       .orderBy("doc_a", "doc_b")
-  }
+
   /** MinHash+LSH near-dup candidates: 8 string-min hash functions, banded
     * 2-per-band into 4 LSH buckets, candidate pairs = docs sharing a band
     * bucket. Band-bucket join is the only shuffle that grows with corpus
@@ -121,11 +103,8 @@ object Dedup {
     * salted md5s per shingle).
     *
     * Skew guard: LSH buckets larger than `bucketLimit` docs are dropped
-    * before the self-join (the analog of [[ngramJaccard]]'s dfLimit). On a
-    * boilerplate-heavy corpus one hot bucket would otherwise make the
-    * candidate join quadratic; docs dense enough to share a giant bucket
-    * still pair up through their other 3 bands unless those are hot too —
-    * the standard recall-for-boundedness trade. */
+    * before the self-join ([[bucketPairs]], the analog of
+    * [[ngramJaccard]]'s dfLimit). */
   def minhashLsh(documents: DataFrame, bucketLimit: Int = 100): DataFrame =
     minhashPairs(documents, bucketLimit).orderBy("doc_a", "doc_b")
 
@@ -133,31 +112,7 @@ object Dedup {
     * consumers (cluster propagation) build on, where a global orderBy
     * would only add an exchange. */
   private[dedup] def minhashPairs(documents: DataFrame, bucketLimit: Int): DataFrame =
-    minhashPairsFromBands(lshBands(documents), bucketLimit)
-
-  private def minhashPairsFromBands(bands: DataFrame, bucketLimit: Int): DataFrame = {
-    // Bucket sizing as a window count over the SAME (band_idx, bh)
-    // partitioning the self-join shuffles on: one exchange serves the
-    // count, the filter, and both join sides (Catalyst's ReuseExchange
-    // dedupes the identical subtrees), so the shingle+minhash lineage
-    // runs once — no persist, nothing leaks into the session cache.
-    val wB = Window.partitionBy(col("band_idx"), col("bh"))
-    val kept = bands
-      .withColumn("bucket_n", count(lit(1)).over(wB))
-      .filter(col("bucket_n") <= bucketLimit)
-      .select("doc_id", "band_idx", "bh")
-    val a = kept.as("a")
-    val b = kept.as("b")
-    a.join(b, col("a.band_idx") === col("b.band_idx") &&
-        col("a.bh") === col("b.bh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      // count(*) == countDistinct(band_idx) here BY CONSTRUCTION: bands has
-      // exactly one row per (doc, band_idx) and the join pairs rows only
-      // within one band, so each shared band contributes exactly one joined
-      // row per pair. Plain count hash-aggregates map-side; distinct-count
-      // would pay an Expand + two-phase aggregation for the same number.
-      .agg(count(lit(1)).as("n_shared_bands"))
-  }
+    bucketPairs(lshBands(documents), bucketLimit)
 
   /** SimHash 64-bit fingerprint per document, emitted as four 16-bit
     * quarters (the standard blocking keys: hamming distance <= 3 implies
@@ -230,6 +185,50 @@ object Dedup {
         (col("id") =!= col("label")).as("is_duplicate"))
       .orderBy("doc_id")
 
+  /** The bucket-capped band self-join behind every LSH candidate
+    * generator — [[minhashLsh]], [[minhashIncrement]] and the cosine-LSH
+    * pairs of [[graft.ann.Ann.lshNearDup]] / [[graft.ann.Ann.lshIncrement]].
+    * `bands` carries (id, band, bucket) as its first three columns, one
+    * row per (id, band). Buckets holding more than `bucketLimit` rows are
+    * dropped before the self-join; every pair sharing a kept bucket is
+    * counted: (doc_a < doc_b, n_shared_bands). A band frame that also
+    * carries a boolean `is_new` (a persisted store ∪ a new batch) is the
+    * incremental form: the cap counts the merged bucket, only pairs with
+    * at least one new side are emitted, and each carries `both_new` — so
+    * an increment equals a full recompute restricted to pairs touching
+    * the batch.
+    *
+    * Skew guard: on a boilerplate-heavy corpus one hot bucket would
+    * otherwise make the join quadratic; ids dense enough to share a giant
+    * bucket still pair through their other bands unless those are hot
+    * too — the standard recall-for-boundedness trade. The bucket count
+    * is a window over the SAME (band, bucket) partitioning the self-join
+    * shuffles on: one exchange serves the count, the filter, and both
+    * join sides (Catalyst's ReuseExchange dedupes the identical
+    * subtrees), so the band lineage runs once — no persist, nothing
+    * leaks into the session cache. */
+  private[graft] def bucketPairs(bands: DataFrame, bucketLimit: Int): DataFrame = {
+    val Array(id, band, bucket) = bands.columns.take(3)
+    val kept = bands
+      .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(col(band), col(bucket))))
+      .filter(col("bucket_n") <= bucketLimit)
+      .drop("bucket_n")
+    val shared = col(s"a.$band") === col(s"b.$band") &&
+      col(s"a.$bucket") === col(s"b.$bucket") && col(s"a.$id") < col(s"b.$id")
+    val (on, tag) =
+      if (!bands.columns.contains("is_new")) (shared, Nil)
+      else (shared && (col("a.is_new") || col("b.is_new")),
+        Seq((col("a.is_new") && col("b.is_new")).as("both_new")))
+    kept.as("a").join(kept.as("b"), on)
+      .groupBy(Seq(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b")) ++ tag: _*)
+      // count(*) == countDistinct(band) here BY CONSTRUCTION: bands has
+      // exactly one row per (id, band) and the join pairs rows only
+      // within one band, so each shared band contributes exactly one joined
+      // row per pair. Plain count hash-aggregates map-side; distinct-count
+      // would pay an Expand + two-phase aggregation for the same number.
+      .agg(count(lit(1)).as("n_shared_bands"))
+  }
+
   /** Connected components of ANY candidate-pair frame (columns doc_a,
     * doc_b of one integral id type) — the engine behind
     * [[nearDupClusters]], the embedding-cluster survivor mart
@@ -270,6 +269,24 @@ object Dedup {
       ids.zip(labels).toSeq.toDF("id", "label")
         .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
     }
+  }
+
+  /** The transitive survivor step of the survivor marts — [[survivors]],
+    * [[graft.ann.Ann.embedSurvivors]] and
+    * [[graft.ann.ChunkRetrieval.chunkSurvivors]]: every row of `nodes`
+    * (its first column the node id) tagged with its [[propagate]]
+    * component over `pairs` — cluster_id is the component's minimum id,
+    * or the node's own id when it has no pair (the left join brings the
+    * unpaired majority back) — the cluster size, and the keep verdict
+    * (the canonical member survives). One window on cluster_id beyond
+    * the propagation itself. */
+  private[graft] def clusterSurvivors(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+    val id = nodes.columns.head
+    nodes.join(propagate(pairs).select(col("id").as(id), col("label").as("cluster_id")),
+        Seq(id), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col(id)))
+      .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
+      .withColumn("keep", col(id) === col("cluster_id"))
   }
 
   /** Union-find connected components of an edge list on the driver:
@@ -427,7 +444,7 @@ object Dedup {
     // localCheckpoint: candidates are df-capped (≤ bucketLimit²·bands
     // pairs per bucket), a tiny frame relative to the corpus — the same
     // device as the cluster-propagation loop.
-    val cand = minhashPairsFromBands(lshBandsFromSig(sig), bucketLimit)
+    val cand = bucketPairs(lshBandsFromSig(sig), bucketLimit)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     val sa = sig.select(col("doc_id").as("doc_a") +: (0 to 7).map(k => col(s"h$k").as(s"a$k")): _*)
     val sb = sig.select(col("doc_id").as("doc_b") +: (0 to 7).map(k => col(s"h$k").as(s"b$k")): _*)
@@ -578,29 +595,8 @@ object Dedup {
     * Σ\|bucket\|² candidate stream); only the final projection differs:
     * both directional scores, the max, and the dominating direction. */
   def containment(documents: DataFrame, threshold: Double = 0.5,
-                  dfLimit: Int = 100): DataFrame = {
-    val sh = TextPrep.shinglesAll(documents)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
-      .distinct()
-    val wS = Window.partitionBy(col("sh"))
-    // pinned: the df-capped 8-byte-key frame has THREE consumers (the
-    // per-doc sizes and both self-join sides); ReuseExchange only covers
-    // the two identically-partitioned join sides, so the sizes aggregate
-    // re-ran the shingle explode + distinct from raw text
-    val shp = sh
-      .withColumn("df", count(lit(1)).over(wS))
-      .filter(col("df") <= dfLimit)
-      .select("doc_id", "sh")
-      .localCheckpoint(false)
-    val sizes = shp.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = shp.as("a")
-      .join(shp.as("b"), col("a.sh") === col("b.sh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_intersect"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
+                  dfLimit: Int = 100): DataFrame =
+    shingleOverlaps(documents, dfLimit)
       .withColumn("cont_a", r6(col("n_intersect") / col("na")))
       .withColumn("cont_b", r6(col("n_intersect") / col("nb")))
       .withColumn("containment", greatest(col("cont_a"), col("cont_b")))
@@ -610,13 +606,25 @@ object Dedup {
       .select("doc_a", "doc_b", "n_intersect", "na", "nb",
         "cont_a", "cont_b", "containment", "direction")
       .orderBy("doc_a", "doc_b")
-  }
 
   /** Word-3-gram Jaccard near-dup join. Hot shingles (document frequency
     * > dfLimit) are pruned before the pair join — the standard guard that
     * keeps the candidate join linear on skewed corpora. */
   def ngramJaccard(documents: DataFrame, threshold: Double = 0.4,
-                   dfLimit: Int = 100): DataFrame = {
+                   dfLimit: Int = 100): DataFrame =
+    shingleOverlaps(documents, dfLimit)
+      .withColumn("n_union", col("na") + col("nb") - col("n_intersect"))
+      .withColumn("jaccard", r6(col("n_intersect") / col("n_union")))
+      .filter(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "n_intersect", "n_union", "jaccard")
+      .orderBy("doc_a", "doc_b")
+
+  /** The df-capped shingle-overlap stream shared by [[ngramJaccard]] and
+    * [[containment]]: every document pair sharing a 3-gram whose
+    * document frequency is at most `dfLimit`, with the shared count and
+    * both documents' capped set sizes: (doc_a < doc_b, n_intersect, na,
+    * nb). */
+  private def shingleOverlaps(documents: DataFrame, dfLimit: Int): DataFrame = {
     // Hash every 3-gram to int64 BEFORE anything shuffles: the df count,
     // the prune, and the candidate self-join all move 8-byte keys instead
     // of raw shingle text (Jaccard only needs counts, so a collision-free
@@ -641,19 +649,13 @@ object Dedup {
       .select("doc_id", "sh")
       .localCheckpoint(false)
     val sizes = shp.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = shp.as("a")
+    shp.as("a")
       .join(shp.as("b"), col("a.sh") === col("b.sh") &&
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_intersect"))
-    inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-      .withColumn("n_union", col("na") + col("nb") - col("n_intersect"))
-      .withColumn("jaccard", r6(col("n_intersect") / col("n_union")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "n_intersect", "n_union", "jaccard")
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Jaccard THRESHOLD-TUNING histogram — the curve a pipeline reads to
@@ -691,19 +693,12 @@ object Dedup {
     * the left join brings the singleton majority back. One extra
     * shuffle (the cluster-size window on cluster_id) beyond the cluster
     * propagation itself. */
-  def survivors(documents: DataFrame, bucketLimit: Int = 100): DataFrame = {
-    val cl = nearDupClusters(documents, bucketLimit)
-      .select(col("doc_id"), col("cluster_id"))
-    val wC = Window.partitionBy(col("cluster_id"))
-    TextPrep.withWords(documents)
-      .select(col("doc_id"), size(col("words")).cast("long").as("n_tokens"))
-      .join(cl, Seq("doc_id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-      .withColumn("cluster_size", count(lit(1)).over(wC))
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("keep"), col("n_tokens"))
+  def survivors(documents: DataFrame, bucketLimit: Int = 100): DataFrame =
+    clusterSurvivors(TextPrep.withWords(documents)
+        .select(col("doc_id"), size(col("words")).cast("long").as("n_tokens")),
+      minhashPairs(documents, bucketLimit))
+      .select("doc_id", "cluster_id", "cluster_size", "keep", "n_tokens")
       .orderBy("doc_id")
-  }
 
   /** EXACT duplicated-SPAN detection — the "Deduplicating Training Data
     * Makes Language Models Better" device (Lee et al. 2022,

@@ -76,6 +76,10 @@ object DotScaled {
   /** 2^40 — scale factor for the fixed-point terms. */
   val Scale: Double = 1099511627776.0
 
+  /** [[Scale]] as the literal text SQL expressions embed: "1099511627776.0",
+    * a DECIMAL literal; append `D` for a DOUBLE literal. */
+  val ScaleSql: String = s"${Scale.toLong}.0"
+
   /** Arity-checked constructor shared by both registration paths, so a
     * wrong argument count fails with the signature in the message
     * instead of a raw IndexOutOfBoundsException. */

@@ -28,9 +28,10 @@ object DocStream {
     * chunks parsed to int64, min per chunk, re-hexed band digests) but
     * computed with array higher-order functions INSIDE one row — no
     * explode, no groupBy, hence stateless and streamable. Batch-side
-    * lshBands keeps the explode+hash-aggregate form (faster on a full
-    * corpus scan); DocStreamSpec asserts the two produce identical
-    * (doc_id, band_idx, bh) rows. */
+    * lshBands keeps the explode+hash-aggregate form, which computes 2
+    * md5s per shingle where this form computes 8 (one inside each
+    * signature component's `array_min` lambda); DocStreamSpec asserts
+    * the two produce identical (doc_id, band_idx, bh) rows. */
   def bandsRowLocal(documents: DataFrame): DataFrame = {
     val shingles =
       """transform(sequence(0, size(words) - 3),

@@ -51,7 +51,7 @@ object VecStream {
                               m: Int, subDim: Int): DataFrame = {
     graft.functions.DotScaled.register(vecs.sparkSession)
     val S = graft.functions.DotScaled.Scale
-    val Sd = "1099511627776.0D" // 2^40 as a SQL double literal
+    val Sd = s"${graft.functions.DotScaled.ScaleSql}D"
     // -cos in the struct so array_min lands on (cos desc, cid asc) —
     // the exact centroidRankedWith rn=1 tie-break
     val cellExpr =
@@ -137,7 +137,7 @@ object VecStream {
                                subDim: Int): DataFrame = {
     graft.functions.DotScaled.register(probes.sparkSession)
     val S = graft.functions.DotScaled.Scale
-    val Sd = "1099511627776.0D"
+    val Sd = s"${graft.functions.DotScaled.ScaleSql}D"
     val lutCols = (0 until m).map { j =>
       expr(s"""map_from_entries(transform(cb$j, e -> struct(e.code,
            struct(graft_dot(slice(embedding, ${j * subDim} + 1, $subDim), e.cv) AS qd,

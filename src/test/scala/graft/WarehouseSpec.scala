@@ -5,16 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class WarehouseSpec extends AnyFunSuite {
   import TestSession._
 
+  // One pass over the keys: the first collect runs the full plan (a
+  // count() may prune columns), so its row check is at least as strict
+  // as count() > 0, and the second collect checks determinism.
   test("every registered query runs and returns rows on sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned no rows")
-    }
-  }
-
-  test("every query key has deterministic output across two runs") {
-    SparkEntry.queries.foreach { case (name, fn) =>
       val a = fn(spark, sf).collect().map(_.toString).toSeq
+      assert(a.nonEmpty, s"$name returned no rows")
       val b = fn(spark, sf).collect().map(_.toString).toSeq
       assert(a == b, s"$name nondeterministic")
     }
