@@ -5,14 +5,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class WarehouseSpec extends AnyFunSuite {
   import TestSession._
 
-  // One pass over the keys: the first collect runs the full plan (a
-  // count() may prune columns), so its row check is at least as strict
-  // as count() > 0, and the second collect checks determinism.
-  test("every registered query runs and returns rows on sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
+  // One pass over the keys, shared by the two tests below: each key is
+  // collected twice. The first collect runs the full plan (a count() may
+  // prune columns), so its row check is at least as strict as
+  // count() > 0; the second collect checks determinism.
+  private lazy val twoRuns: Seq[(String, Seq[String], Seq[String])] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
       val a = fn(spark, sf).collect().map(_.toString).toSeq
-      assert(a.nonEmpty, s"$name returned no rows")
       val b = fn(spark, sf).collect().map(_.toString).toSeq
+      (name, a, b)
+    }
+
+  test("every registered query runs and returns rows on sf0.001") {
+    twoRuns.foreach { case (name, a, _) =>
+      assert(a.nonEmpty, s"$name returned no rows")
+    }
+  }
+
+  test("every query key has deterministic output across two runs") {
+    twoRuns.foreach { case (name, a, b) =>
       assert(a == b, s"$name nondeterministic")
     }
   }
