@@ -87,6 +87,12 @@ object Ann {
     emb.withColumn("nrm", sqrt(dot("embedding", "embedding")))
   }
 
+  /** The family's exact float cosine: vector columns `a`, `b` over their
+    * norm columns `na`, `nb`, r6-rounded — the one scoring expression of
+    * every search, verify and assignment path here. */
+  private def cosine(a: String, na: String, b: String, nb: String): Column =
+    r6(dot(a, b) / (col(na) * col(nb)))
+
   /** EXACT embedding cosine near-dup pairs within a label block — the
     * family's calibration BASELINE, not its scale path.
     *
@@ -113,7 +119,7 @@ object Ann {
     val b = v.select(col("vec_id").as("vec_b"), col("label").as("label_b"),
       col("embedding").as("e2"), col("nrm").as("nrm2"))
     a.join(b, col("label") === col("label_b") && col("vec_a") < col("vec_b"))
-      .withColumn("cosine", r6(dot("e1", "e2") / (col("nrm1") * col("nrm2"))))
+      .withColumn("cosine", cosine("e1", "nrm1", "e2", "nrm2"))
       .filter(col("cosine") >= threshold)
       .select("vec_a", "vec_b", "label", "cosine")
       .orderBy("vec_a", "vec_b")
@@ -194,16 +200,33 @@ object Ann {
   /** Brute-force cosine top-k: the exact baseline. Probes broadcast;
     * corpus streamed once; per-probe bounded-heap aggregation over the
     * scored pairs. */
-  def bruteForceTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10): DataFrame = {
-    val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    val probes = v.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("nrm").as("pnrm"))
-    val scored = v.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", r6(dot("embedding", "pe") / (col("nrm") * col("pnrm"))))
-    topkPerProbe(scored, k)
+  def bruteForceTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10): DataFrame =
+    topkPerProbe(probeScan(embeddings, Nil, nProbes), k)
+
+  /** The exact broadcast probe scan behind [[bruteForceTopK]] and the
+    * truth of [[filteredEval]]: the probes (vec_id < nProbes) broadcast
+    * against the whole corpus, every pair but a probe with itself scored
+    * by [[cosine]]. Each column of `same` adds one equality: a probe
+    * only meets the vectors that share its value (`Seq("label")` is the
+    * filtered search's predicate). */
+  private def probeScan(embeddings: DataFrame, same: Seq[String], nProbes: Int): DataFrame = {
+    val v = withNorm(embeddings.select((col("vec_id") +: same.map(col)) :+ col("embedding"): _*))
+    val probes = v.filter(col("vec_id") < nProbes).select(probeCols(v): _*)
+    v.crossJoin(broadcast(probes))
+      .filter(sharing(col("vec_id") =!= col("probe_id"), same))
+      .withColumn("cosine", cosine("embedding", "nrm", "pe", "pnrm"))
   }
+
+  /** A probe's columns off a normed frame: probe_id, pe, pnrm, and
+    * p<col> for each column the frame carries beyond those three. */
+  private def probeCols(v: DataFrame): Seq[Column] =
+    Seq(col("vec_id").as("probe_id"), col("embedding").as("pe"), col("nrm").as("pnrm")) ++
+      v.columns.filterNot(Set("vec_id", "embedding", "nrm")).map(c => col(c).as(s"p$c"))
+
+  /** `base`, and per column of `same` the candidate's value equal to the
+    * probe's p<col>. */
+  private def sharing(base: Column, same: Seq[String]): Column =
+    same.foldLeft(base)((c, s) => c && col(s) === col(s"p$s"))
 
   /** Deterministic fixed-K centroid sample: the k vectors with the
     * smallest md5(vec_id) — a uniform hash-ranked pick that is
@@ -222,23 +245,33 @@ object Ann {
     * cell assignment; rn<=nCells are a probe's search cells. */
   private def centroidRankedWith(v: DataFrame, cents: DataFrame): DataFrame = {
     val scored = v.crossJoin(broadcast(cents))
-      .withColumn("ccos", r6(dot("embedding", "ce") / (col("nrm") * col("cnrm"))))
+      .withColumn("ccos", cosine("embedding", "nrm", "ce", "cnrm"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("centroid_id"))
     scored.withColumn("rn", row_number().over(w))
   }
 
-  /** [[centroidRankedWith]] against the default hash-sampled centroids. */
-  private def centroidRanked(v: DataFrame, k: Int): DataFrame =
-    centroidRankedWith(v, centroids(v, k))
+  /** Each vector's nearest centroid: the rn = 1 row of
+    * [[centroidRankedWith]], the cell assignment of every IVF path. */
+  private def nearestCell(v: DataFrame, cents: DataFrame): DataFrame =
+    centroidRankedWith(v, cents).filter(col("rn") === 1)
+
+  /** The IVF probe core over a normed frame `v` and a centroid frame
+    * (centroid_id, ce, cnrm): the cell assignment (vec_id, centroid_id)
+    * and the probe cells — each probe's (vec_id < nProbes) `nCells`
+    * nearest centroids, named by [[probeCols]] with the cell as pcell. */
+  private def probeIndex(v: DataFrame, cents: DataFrame, nProbes: Int,
+                         nCells: Int): (DataFrame, DataFrame) =
+    (nearestCell(v, cents).select(col("vec_id"), col("centroid_id")),
+      centroidRankedWith(v, cents).filter(col("vec_id") < nProbes && col("rn") <= nCells)
+        .select(probeCols(v) :+ col("centroid_id").as("pcell"): _*))
 
   /** IVF cell assignment: every vector is assigned to its nearest of K
     * hash-sampled centroids. The scale path: search only touches the
     * probe's cells instead of the full corpus. */
   def ivfAssign(embeddings: DataFrame, k: Int = 32): DataFrame = {
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    centroidRanked(v, k)
-      .filter(col("rn") === 1)
+    nearestCell(v, centroids(v, k))
       .select(col("vec_id"), col("centroid_id"), col("ccos").as("centroid_cosine"))
       .orderBy("vec_id")
   }
@@ -258,10 +291,8 @@ object Ann {
     * recall lever: pass [[lloydCentroids]] output through
     * [[ivfSearchWith]]. */
   def ivfSearch(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10,
-                kCents: Int = 16, nCells: Int = 5): DataFrame = {
-    val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    ivfSearchWith(embeddings, centroids(v, kCents), nProbes, k, nCells)
-  }
+                kCents: Int = 16, nCells: Int = 5): DataFrame =
+    ivfTopK(embeddings, centroids(_, kCents), Nil, nProbes, k, nCells)
 
   /** [[ivfSearch]] against an explicit centroid frame (centroid_id, ce,
     * cnrm) — the seam that lets the SAME probed-search plan run over
@@ -269,17 +300,22 @@ object Ann {
     * ([[annEval]] with `cents`) compare centroid TRAINING, not two
     * different search codepaths. */
   def ivfSearchWith(embeddings: DataFrame, cents: DataFrame,
-                    nProbes: Int = 10, k: Int = 10, nCells: Int = 5): DataFrame = {
-    val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    val ranked = centroidRankedWith(v, cents)
-    val assign = ranked.filter(col("rn") === 1).select(col("vec_id"), col("centroid_id"))
-    val probeCells = ranked.filter(col("vec_id") < nProbes && col("rn") <= nCells)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("nrm").as("pnrm"), col("centroid_id").as("pcell"))
+                    nProbes: Int = 10, k: Int = 10, nCells: Int = 5): DataFrame =
+    ivfTopK(embeddings, _ => cents, Nil, nProbes, k, nCells)
+
+  /** The one IVF candidate-and-score path behind [[ivfSearch]],
+    * [[ivfSearchWith]] and [[ivfFilteredSearch]]: the corpus joined to its cell and to the
+    * probe cells of [[probeIndex]] (over the centroids `cents` returns
+    * for the normed frame), one more join equality per column of `same`
+    * as in [[probeScan]], exact cosine, bounded-heap top-k. */
+  private def ivfTopK(embeddings: DataFrame, cents: DataFrame => DataFrame,
+                      same: Seq[String], nProbes: Int, k: Int, nCells: Int): DataFrame = {
+    val v = withNorm(embeddings.select((col("vec_id") +: same.map(col)) :+ col("embedding"): _*))
+    val (assign, probeCells) = probeIndex(v, cents(v), nProbes, nCells)
     val scored = v.join(assign, "vec_id")
       .join(broadcast(probeCells),
-        col("centroid_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", r6(dot("embedding", "pe") / (col("nrm") * col("pnrm"))))
+        sharing(col("centroid_id") === col("pcell") && col("vec_id") =!= col("probe_id"), same))
+      .withColumn("cosine", cosine("embedding", "nrm", "pe", "pnrm"))
     topkPerProbe(scored, k)
   }
 
@@ -327,40 +363,26 @@ object Ann {
                           csubOpt: Option[DataFrame] = None): DataFrame = {
     val S = DotScaled.Scale
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    val ranked = centroidRankedWith(v, centroids(v, kCents))
-    val assign = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("centroid_id"))
-    val probeCells = ranked.filter(col("vec_id") < nProbes && col("rn") <= nCells)
-      .select(col("vec_id").as("probe_id"), col("nrm").as("pnrm"),
-        col("centroid_id").as("pcell"))
+    val (assign, probeCells) = probeIndex(v, centroids(v, kCents), nProbes, nCells)
     // subspace codebook: the hash sample by default, or an explicit
     // (Lloyd-refined) frame through the csubOpt seam
     val csubRaw = csubOpt.getOrElse(
       Embeddings.csubOf(Embeddings.pqCodebook(embeddings, kCodes), m, subDim))
-    // stored index: cell + m codes per vector (one co-keyed shuffle)
-    val codeCols = (0 until m).map(j =>
-      max(when(col("m") === j, col("centroid_id"))).as(s"code$j"))
-    val codes = Embeddings.pqAssignWith(
-        Embeddings.subFrame(embeddings, m, subDim), csubRaw)
-      .groupBy(col("vec_id"))
-      .agg(codeCols.head, codeCols.tail: _*)
-    val index = assign.join(codes, "vec_id")
+    // stored index: cell + m codes per vector
+    val index = assign.join(pqIndexCodes(embeddings, csubRaw, m, subDim), "vec_id")
     // broadcast LUT: per (probe, subspace, codebook entry) the exact
     // scaled-integer query-sub-dot qd and codebook self-dot cd
-    val ms = explode(array((0 until m).map(lit): _*)).as("m")
     val csub = csubRaw.select(col("centroid_id").as("code"),
       col("cm").as("m"), col("cv"))
-    val psub = v.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding"), ms)
-      .withColumn("pv", expr(s"slice(embedding, m * $subDim + 1, $subDim)"))
-      .select("probe_id", "m", "pv")
+    val psub = Embeddings.subFrame(v.filter(col("vec_id") < nProbes), m, subDim)
+      .select(col("vec_id").as("probe_id"), col("m"), col("sv").as("pv"))
     val lut = psub.join(csub, "m")
       .withColumn("qd", expr("graft_dot(pv, cv)"))
       .withColumn("cd", expr("graft_dot(cv, cv)"))
       .select("probe_id", "m", "code", "qd", "cd")
     val cand = index.join(broadcast(probeCells),
       col("centroid_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-    val scored = (0 until m).foldLeft(cand) { (df, j) =>
+    (0 until m).foldLeft(cand) { (df, j) =>
       df.join(broadcast(lut.filter(col("m") === j)
           .select(col("probe_id").as(s"lp$j"), col("code").as(s"lc$j"),
             col("qd").as(s"qd$j"), col("cd").as(s"cd$j"))),
@@ -371,7 +393,18 @@ object Ann {
       .withColumn("cosine", r6((col("qdt").cast("double") / lit(S)) /
         (col("pnrm") * sqrt(col("cdt").cast("double") / lit(S)))))
       .select("probe_id", "vec_id", "cosine")
-    scored
+  }
+
+  /** The stored PQ index rows of `vecs` against codebook `csub`: per
+    * vec_id its m subspace codes code0…code(m-1) (one co-keyed shuffle),
+    * plus any `extra` aggregates over the same (vec_id, m) assignment. */
+  private def pqIndexCodes(vecs: DataFrame, csub: DataFrame, m: Int, subDim: Int,
+                           extra: Column*): DataFrame = {
+    val codeCols = (0 until m).map(j =>
+      max(when(col("m") === j, col("centroid_id"))).as(s"code$j")) ++ extra
+    Embeddings.pqAssignWith(Embeddings.subFrame(vecs, m, subDim), csub)
+      .groupBy(col("vec_id"))
+      .agg(codeCols.head, codeCols.tail: _*)
   }
 
   /** IVF-PQ search with exact REFINEMENT — the production retrieval
@@ -393,12 +426,10 @@ object Ann {
         shortlist)
       .select(col("probe_id").as("sp"), col("neighbor_id").as("vec_id"))
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    val probes = v.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("pp"), col("embedding").as("pe"),
-        col("nrm").as("pnrm"))
+    val probes = v.filter(col("vec_id") < nProbes).select(probeCols(v): _*)
     val scored = v.join(broadcast(sl), "vec_id")
-      .join(broadcast(probes), col("sp") === col("pp"))
-      .withColumn("cosine", r6(dot("embedding", "pe") / (col("nrm") * col("pnrm"))))
+      .join(broadcast(probes), col("sp") === col("probe_id"))
+      .withColumn("cosine", cosine("embedding", "nrm", "pe", "pnrm"))
       .select(col("sp").as("probe_id"), col("vec_id"), col("cosine"))
     topkPerProbe(scored, k)
   }
@@ -419,38 +450,16 @@ object Ann {
     * is nCells or a label-partitioned index, and this mart is the
     * number that decides between them). */
   def ivfFilteredSearch(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10,
-                        kCents: Int = 16, nCells: Int = 5): DataFrame = {
-    val v = withNorm(embeddings.select(col("vec_id"), col("label"), col("embedding")))
-    val ranked = centroidRankedWith(v, centroids(v, kCents))
-    val assign = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("centroid_id"))
-    val probeCells = ranked.filter(col("vec_id") < nProbes && col("rn") <= nCells)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("nrm").as("pnrm"), col("label").as("plabel"),
-        col("centroid_id").as("pcell"))
-    val scored = v.join(assign, "vec_id")
-      .join(broadcast(probeCells),
-        col("centroid_id") === col("pcell") && col("vec_id") =!= col("probe_id") &&
-          col("label") === col("plabel"))
-      .withColumn("cosine", r6(dot("embedding", "pe") / (col("nrm") * col("pnrm"))))
-    topkPerProbe(scored, k)
-  }
+                        kCents: Int = 16, nCells: Int = 5): DataFrame =
+    ivfTopK(embeddings, centroids(_, kCents), Seq("label"), nProbes, k, nCells)
 
   /** Recall@k of the filtered IVF search against the filtered
     * brute-force truth (exact cosine over the same-label corpus) —
     * the number that says whether the frozen index still serves the
     * predicate or the predicate needs its own partition/index. */
-  def filteredEval(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10): DataFrame = {
-    val v = withNorm(embeddings.select(col("vec_id"), col("label"), col("embedding")))
-    val probes = v.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("nrm").as("pnrm"), col("label").as("plabel"))
-    val bfScored = v.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id") && col("label") === col("plabel"))
-      .withColumn("cosine", r6(dot("embedding", "pe") / (col("nrm") * col("pnrm"))))
-    recallVsExact(topkPerProbe(bfScored, k),
+  def filteredEval(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10): DataFrame =
+    recallVsExact(topkPerProbe(probeScan(embeddings, Seq("label"), nProbes), k),
       ivfFilteredSearch(embeddings, nProbes, k))
-  }
 
   /** HYBRID retrieval with reciprocal-rank fusion (Cormack, Clarke,
     * Buettcher 2009) — the RAG-serving composition of the engine's two
@@ -579,17 +588,10 @@ object Ann {
     val cents = centroids(vCorpus, kCents)
     val csub = Embeddings.csubOf(Embeddings.pqCodebook(corpus, kCodes), m, subDim)
     val vNew = withNorm(newVecs.select(col("vec_id"), col("embedding")))
-    val cell = centroidRankedWith(vNew, cents).filter(col("rn") === 1)
+    val cell = nearestCell(vNew, cents)
       .select(col("vec_id"), col("centroid_id").as("cell_id"),
         col("ccos").as("cell_cosine"))
-    val codeCols = (0 until m).map(j =>
-      max(when(col("m") === j, col("centroid_id"))).as(s"code$j")) :+
-      sum(col("d2")).as("sumd2")
-    val codes = Embeddings.pqAssignWith(
-        Embeddings.subFrame(newVecs, m, subDim), csub)
-      .groupBy(col("vec_id"))
-      .agg(codeCols.head, codeCols.tail: _*)
-    cell.join(codes, "vec_id")
+    cell.join(pqIndexCodes(newVecs, csub, m, subDim, sum(col("d2")).as("sumd2")), "vec_id")
       .withColumn("recon_l2", r6(sqrt(greatest(col("sumd2"), lit(0d)))))
       .drop("sumd2")
       .orderBy("vec_id")
@@ -626,14 +628,14 @@ object Ann {
   def knnGraph(embeddings: DataFrame, k: Int = 3, kCents: Int = 0): DataFrame = {
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
     val kc = if (kCents > 0) kCents else adaptiveCells(PlanStats.rowCount(embeddings))
-    val assign = centroidRanked(v, kc).filter(col("rn") === 1)
+    val assign = nearestCell(v, centroids(v, kc))
       .select(col("vec_id"), col("centroid_id"))
     val va = v.join(assign, "vec_id")
     val probes = va.select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
       col("nrm").as("pnrm"), col("centroid_id").as("cell"))
     val scored = va
       .join(probes, col("centroid_id") === col("cell") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", r6(dot("embedding", "pe") / (col("nrm") * col("pnrm"))))
+      .withColumn("cosine", cosine("embedding", "nrm", "pe", "pnrm"))
     topkPerProbe(scored, k)
   }
 
@@ -778,7 +780,7 @@ object Ann {
     cand
       .join(v.select(col("vec_id").as("doc_a"), col("embedding").as("e1"), col("nrm").as("nrm1")), "doc_a")
       .join(v.select(col("vec_id").as("doc_b"), col("embedding").as("e2"), col("nrm").as("nrm2")), "doc_b")
-      .withColumn("cosine", r6(dot("e1", "e2") / (col("nrm1") * col("nrm2"))))
+      .withColumn("cosine", cosine("e1", "nrm1", "e2", "nrm2"))
       .filter(col("cosine") >= threshold)
       .withColumnRenamed("doc_a", "vec_a").withColumnRenamed("doc_b", "vec_b")
   }
@@ -902,19 +904,19 @@ object Ann {
       .orderBy(col("gcos").desc,
         (col("coarse_id") === col("centroid_id")).desc, col("coarse_id"))
     val cassign = cents.crossJoin(broadcast(coarse))
-      .withColumn("gcos", r6(dot("ce", "ge") / (col("cnrm") * col("gnrm"))))
+      .withColumn("gcos", cosine("ce", "cnrm", "ge", "gnrm"))
       .withColumn("rn", row_number().over(wc)).filter(col("rn") === 1)
       .select(col("coarse_id"), col("centroid_id"), col("ce"), col("cnrm"))
     val wv = Window.partitionBy(col("vec_id"))
       .orderBy(col("gcos").desc, col("coarse_id"))
     val vcoarse = v.crossJoin(broadcast(coarse))
-      .withColumn("gcos", r6(dot("embedding", "ge") / (col("nrm") * col("gnrm"))))
+      .withColumn("gcos", cosine("embedding", "nrm", "ge", "gnrm"))
       .withColumn("rn", row_number().over(wv)).filter(col("rn") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("coarse_id"))
     val wf = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("centroid_id"))
     vcoarse.join(broadcast(cassign), "coarse_id")
-      .withColumn("ccos", r6(dot("embedding", "ce") / (col("nrm") * col("cnrm"))))
+      .withColumn("ccos", cosine("embedding", "nrm", "ce", "cnrm"))
       .withColumn("rn", row_number().over(wf)).filter(col("rn") === 1)
       .select(col("vec_id"), col("coarse_id"), col("centroid_id"),
         col("ccos").as("centroid_cosine"))
@@ -1030,7 +1032,7 @@ object Ann {
     * on vec_id, then a K-row aggregate. */
   def cellQuality(embeddings: DataFrame, k: Int = 32): DataFrame = {
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
-    val ranked = centroidRanked(v, k)
+    val ranked = centroidRankedWith(v, centroids(v, k))
     val best = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("centroid_id"), col("ccos").as("best"))
     val second = ranked.filter(col("rn") === 2)
@@ -1136,7 +1138,6 @@ object Ann {
     * of [[ivfAssign]] (which assigns to the raw hash sample). */
   def lloydAssign(embeddings: DataFrame, k: Int = 16, iters: Int = 2,
                   dim: Int = 64): DataFrame = {
-    DotScaled.register(embeddings.sparkSession)
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
     assignTo(v, lloydCentroids(embeddings, k, iters, dim))
       .select(col("vec_id"), col("centroid_id"), r6(col("ccos")).as("centroid_cosine"))
@@ -1165,7 +1166,7 @@ object Ann {
                     kCents: Int = 0): DataFrame = {
     val v = withNorm(embeddings.select(col("vec_id"), col("embedding")))
     val k = if (kCents > 0) kCents else adaptiveCells(PlanStats.rowCount(embeddings))
-    val assign = centroidRanked(v, k).filter(col("rn") === 1)
+    val assign = nearestCell(v, centroids(v, k))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("centroid_id"), col("ccos"))
     val other = assign.select(col("vec_id").as("vec_a"),
@@ -1173,7 +1174,7 @@ object Ann {
       col("centroid_id").as("cid_a"), col("ccos").as("ccos_a"))
     val dups = assign.join(other,
         col("centroid_id") === col("cid_a") && col("vec_id") =!= col("vec_a"))
-      .withColumn("cosine", r6(dot("embedding", "e2") / (col("nrm") * col("nrm2"))))
+      .withColumn("cosine", cosine("embedding", "nrm", "e2", "nrm2"))
       .filter(col("cosine") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
@@ -1213,7 +1214,7 @@ object Ann {
       col("centroid_id").as("cid_a"), col("ccos").as("ccos_a"))
     val dups = fresh.join(partners,
         col("centroid_id") === col("cid_a") && col("vec_id") =!= col("vec_a"))
-      .withColumn("cosine", r6(dot("embedding", "e2") / (col("nrm") * col("nrm2"))))
+      .withColumn("cosine", cosine("embedding", "nrm", "e2", "nrm2"))
       .filter(col("cosine") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("cosine")).as("max_dup_cosine"),
@@ -1275,7 +1276,7 @@ object Ann {
     val v = withNorm(tagged.select(col("vec_id"), col("dg"), col("embedding")))
     val cents = centroids(
       withNorm(existing.select(col("vec_id"), col("embedding"))), k)
-    centroidRankedWith(v, cents).filter(col("rn") === 1)
+    nearestCell(v, cents)
   }
 
   /** The keep-least-prototypical order of the SemDeDup marts

@@ -32,16 +32,6 @@ object Fns {
     * never returns NULL), so the window semantics are untouched. */
   def onePart(anchor: Column): Column = pmod(hash(anchor), lit(1))
 
-  /** Deterministic mean: exact decimal sum over count (both engines divide
-    * the same two numbers). Numerator and denominator see the SAME cast
-    * expression, so a value the decimal cast nulls (overflow in non-ANSI
-    * mode) drops out of both instead of skewing the mean; the caller
-    * names the column, like [[decSum]]. */
-  def decAvg(c: Column): Column = {
-    val d = c.cast("decimal(18,4)")
-    sum(d).cast("double") / count(d)
-  }
-
   /** NULL placeholder inside hashed key strings — dbt_utils'
     * generate_surrogate_key device: concat_ws SKIPS a NULL argument
     * (losing its position, so (x, NULL) and (NULL, x) would collide),

@@ -240,7 +240,7 @@ object Marts {
       .crossJoin(lineitem.agg(max(to_date(col("l_shipdate"))).as("mx_ship")))
       .crossJoin(orders.agg(max(to_date(col("o_orderdate"))).as("mx_ord")))
       .select(col("mn"), greatest(col("mx_ship"), col("mx_ord")).as("mx"))
-    val spine = broadcast(bounds)
+    val spine = bounds
       .select(explode(expr("sequence(mn, mx, interval 1 day)")).as("day"))
     // date-spine frame (one row per calendar day — bounded by the date
     // range, not the data); onePart partition spec keeps the logs clean

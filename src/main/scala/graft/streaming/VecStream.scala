@@ -53,7 +53,7 @@ object VecStream {
     val S = graft.functions.DotScaled.Scale
     val Sd = s"${graft.functions.DotScaled.ScaleSql}D"
     // -cos in the struct so array_min lands on (cos desc, cid asc) —
-    // the exact centroidRankedWith rn=1 tie-break
+    // the exact Ann.nearestCell tie-break (centroidRankedWith rn=1)
     val cellExpr =
       s"""array_min(transform(cents, c -> struct(
          |  -(floor(((cast(graft_dot(embedding, c.ce) as double) / $Sd)
@@ -125,7 +125,7 @@ object VecStream {
   /** Row-local IVF-PQ ADC top-k of a (possibly streaming) probe frame
     * against a [[serveArtifacts]] row — the query-side twin of
     * [[codeRows]]: rank cells from the cents array ((-cos, cid)
-    * array_sort — the exact centroidRanked order), build the per-probe
+    * array_sort — the exact centroidRankedWith order), build the per-probe
     * ADC lookup tables from the SAME cb arrays as maps, concatenate the
     * probe's nCells entry shards, score each candidate as m exact
     * BIGINT lookup-adds, and keep top-k by one bounded array_sort —

@@ -144,7 +144,7 @@ class PlanQualitySpec extends AnyFunSuite {
       // corpus slice inside one task
       assert(plan.contains("partial_topkneighbors"),
         s"no partial bounded-heap aggregation in plan:\n$plan")
-      // (centroidRanked's K-rows-per-vector window is fine; the probe-
+      // (centroidRankedWith's K-rows-per-vector window is fine; the probe-
       // partitioned one that sorted a probe's corpus slice must be gone)
       assert(!plan.contains("windowspecdefinition(probe_id"),
         s"per-probe rank window still in plan:\n$plan")
