@@ -20,6 +20,28 @@ object Fns {
   def decSum(c: Column): Column =
     sum(c.cast("decimal(18,4)")).cast("double")
 
+  /** Exact sum of squares, the second moment beside [[decSum]]: each
+    * row's square cast to DECIMAL(30,8), summed exactly, returned as
+    * double. */
+  def decSumSq(c: Column): Column =
+    sum((c * c).cast("decimal(30,8)")).cast("double")
+
+  /** Sample variance from `n` and the exact moments `s1`/`s2`.
+    * try_divide: the column evaluates for every row, and for n = 1 the
+    * n − 1 = 0 divisor THROWS under ANSI; NULL there matches DuckDB's
+    * x/0 and is masked by [[sampleSd]]'s n > 1 guard anyway. */
+  def sampleVar(n: Column, s1: Column, s2: Column): Column =
+    try_divide(s2 - s1 * s1 / n, n - 1)
+
+  /** Sample standard deviation of a [[sampleVar]] column: NULL for
+    * n <= 1 (a CASE without ELSE; add `.otherwise` for another value),
+    * the variance clamped at 0 before sqrt. A constant group's
+    * decimal-exact sums cast to double can leave a fractionally negative
+    * variance, where Spark's sqrt is NaN but DuckDB's RAISES; the clamp
+    * is bit-identical whenever the variance is >= 0. */
+  def sampleSd(n: Column, svar: Column): Column =
+    when(n > 1, sqrt(when(svar < 0, lit(0d)).otherwise(svar)))
+
   /** Constant-0 partition key for windows over frames bounded BY
     * CONSTRUCTION (post-limit top-k, nBins histograms, date spines): it
     * gives WindowExec a partition spec so the "No Partition Defined"

@@ -182,19 +182,30 @@ object Features {
       .orderBy("event_id")
   }
 
-  /** Sessionization: a >30-min gap starts a new session (lag + running sum
-    * of boundary flags — the standard scalable sessionizer, one shuffle on
-    * user_id), then session-grain rollup (fact_customer_behavior, session
-    * grain). */
-  def sessionize(events: DataFrame): DataFrame = {
+  /** The session gap in seconds: a longer silence starts a new session.
+    * The batch sessionizers and the streaming twins in
+    * [[graft.streaming.EventStream]] all read it. */
+  private[graft] val SessionGapS = 1800L
+
+  /** Session numbering (lag + running sum of boundary flags — the
+    * standard scalable sessionizer, one shuffle on user_id): adds ts_s,
+    * prev_s, is_new and the per-user session_seq. The one boundary rule
+    * of [[sessionize]] and [[sessionPaths]]. */
+  private def sessionNumbered(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val flagged = events
+    events
       .withColumn("ts_s", epochS(col("ts")))
       .withColumn("prev_s", lag(col("ts_s"), 1).over(w))
       .withColumn("is_new",
-        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > 1800L, 1L).otherwise(0L))
+        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > SessionGapS, 1L).otherwise(0L))
       .withColumn("session_seq", sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    flagged
+  }
+
+  /** Sessionization: a >30-min gap starts a new session
+    * ([[sessionNumbered]]), then session-grain rollup
+    * (fact_customer_behavior, session grain). */
+  def sessionize(events: DataFrame): DataFrame =
+    sessionNumbered(events)
       .groupBy(col("user_id"), col("session_seq"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -207,7 +218,6 @@ object Features {
       .select("session_id", "user_id", "session_seq", "n_events", "start_s",
         "end_s", "duration_s", "session_value", "n_event_types")
       .orderBy("user_id", "session_seq")
-  }
 
   /** Funnel conversion: signup → engaged (view|click) → purchase, counted
     * over per-user flags (behavior analytics marts). */
@@ -302,18 +312,13 @@ object Features {
       .withColumn("ts_s", epochS(col("ts")))
     val perUser = base.groupBy(col("user_id")).agg(
       count(lit(1)).as("u_n"),
-      sum(col("value").cast("decimal(18,4)")).cast("double").as("u_s1"),
-      sum((col("value") * col("value")).cast("decimal(30,8)")).cast("double").as("u_s2"))
+      decSum(col("value")).as("u_s1"),
+      decSumSq(col("value")).as("u_s2"))
       .withColumn("u_avg", col("u_s1") / col("u_n"))
-      // variance clamped at 0: a user whose values are all identical can
-      // leave a fractionally negative double here (decimal sums cast to
-      // double), where Spark's sqrt is NaN but the oracle's DuckDB sqrt
-      // RAISES; the clamp is bit-identical whenever variance >= 0
-      .withColumn("u_var", try_divide(
-        col("u_s2") - col("u_s1") * col("u_s1") / col("u_n"), col("u_n") - 1))
-      .withColumn("u_std", when(col("u_n") > 1,
-        sqrt(when(col("u_var") < 0, lit(0d)).otherwise(col("u_var"))))
-        .otherwise(lit(0d)))
+      .withColumn("u_var", sampleVar(col("u_n"), col("u_s1"), col("u_s2")))
+      // a one-event user's 0 is the CASE's ELSE, not a coalesce, so an
+      // all-NULL user's NULL sd (u_n > 1) stays NULL
+      .withColumn("u_std", sampleSd(col("u_n"), col("u_var")).otherwise(lit(0d)))
       .select("user_id", "u_n", "u_avg", "u_std")
     val perType = base.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("type_freq"))
@@ -359,8 +364,8 @@ object Features {
     * each 30-minute session's ordered event-type sequence, capped at the
     * first `maxLen` steps (so a pathological session cannot blow up the
     * path key space), counted corpus-wide with visitor reach; top `k`
-    * by session count. Session assignment is [[sessionize]]'s exact
-    * window device, so the two marts can never disagree on boundaries.
+    * by session count. Session assignment is [[sessionNumbered]], shared
+    * with [[sessionize]], so the two marts can never disagree on boundaries.
     *
     * Scale shape: the windows are user-keyed (no global sort); the path
     * string comes from sort_array(collect_list(struct(ts, event_id,
@@ -368,16 +373,8 @@ object Features {
     * collect_list arrival order, and bounded by session length with the
     * slice cap; path counts partial-aggregate and the top-k is
     * TakeOrderedAndProject. */
-  def sessionPaths(events: DataFrame, maxLen: Int = 5, k: Int = 20): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val flagged = events
-      .withColumn("ts_s", epochS(col("ts")))
-      .withColumn("prev_s", lag(col("ts_s"), 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > 1800L, 1L).otherwise(0L))
-      .withColumn("session_seq",
-        sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    flagged.groupBy(col("user_id"), col("session_seq"))
+  def sessionPaths(events: DataFrame, maxLen: Int = 5, k: Int = 20): DataFrame =
+    sessionNumbered(events).groupBy(col("user_id"), col("session_seq"))
       .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
         col("event_type")))).as("evs"))
       .select(col("user_id"),
@@ -386,7 +383,6 @@ object Features {
       .agg(count(lit(1)).as("n_sessions"), countDistinct(col("user_id")).as("n_users"))
       .orderBy(col("n_sessions").desc, col("path"))
       .limit(k)
-  }
 
   /** PSI (population stability index) between the first and second half of
     * the event stream over 10 equi-width bins (_calculate_psi). Two
@@ -400,10 +396,8 @@ object Features {
     val bounds = events.agg(
       min(col("value")).as("mn"), max(col("value")).as("mx"),
       floor(max(col("event_id")) / 2d).cast("long").as("mid"))
-    val eps = 1e-6
     val binned = events.crossJoin(broadcast(bounds))
-      .withColumn("bin",
-        least(floor((col("value") - col("mn")) / ((col("mx") - col("mn")) / 10d)), lit(9d)).cast("int"))
+      .withColumn("bin", eqBin(col("value"), 10))
       .withColumn("is_ref", (col("event_id") <= col("mid")).cast("int"))
     val counts = binned.groupBy(col("bin")).agg(
       sum(col("is_ref")).cast("double").as("n_ref"),
@@ -414,9 +408,9 @@ object Features {
     val terms = spine.join(counts, Seq("bin"), "left")
       .na.fill(0.0, Seq("n_ref", "n_cur"))
       .crossJoin(broadcast(totals))
-      .withColumn("p_ref", greatest(col("n_ref") / col("t_ref"), lit(eps)))
-      .withColumn("p_cur", greatest(col("n_cur") / col("t_cur"), lit(eps)))
-      .withColumn("psi_term", (col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")))
+      .withColumn("p_ref", psiShare(col("n_ref"), col("t_ref")))
+      .withColumn("p_cur", psiShare(col("n_cur"), col("t_cur")))
+      .withColumn("psi_term", psiTerm(col("p_cur"), col("p_ref")))
     terms
       // decimal-routed like driftSweep/driftHistory's identical PSI sum:
       // a raw double window sum reassociates with partition order
@@ -451,29 +445,29 @@ object Features {
       min(col("value")).as("mn"), max(col("value")).as("mx"),
       sum(col("is_a")).as("na"), sum(lit(1L) - col("is_a")).as("nb"))
     val counts = sample.crossJoin(broadcast(bounds))
-      .withColumn("bin",
-        least(floor((col("value") - col("mn")) / ((col("mx") - col("mn")) / nBins)),
-          lit((nBins - 1).toDouble)).cast("int"))
+      .withColumn("bin", eqBin(col("value"), nBins))
       .groupBy(col("bin")).agg(
         sum(col("is_a")).as("ca"), sum(lit(1L) - col("is_a")).as("cb"),
         max(col("na")).as("na"), max(col("nb")).as("nb"))
     // nBins-row frame; onePart silences the partitionless-window
     // warning without changing the (already single-partition) plan
-    val w = Window.partitionBy(onePart(col("bin"))).orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    counts
-      .withColumn("cum_a", sum(col("ca")).over(w))
-      .withColumn("cum_b", sum(col("cb")).over(w))
-      .withColumn("d", abs(col("cum_a") / col("na") - col("cum_b") / col("nb")))
+    ksSteps(counts, onePart(col("bin")), col("na"), col("nb"))
       .agg(r6(max(col("d"))).as("ks_stat"),
         max(col("na")).as("n_sample_a"), max(col("nb")).as("n_sample_b"))
   }
 
+  // The binned-drift core: every drift mart bins, floors, sums PSI terms
+  // and measures KS steps through these, so psiDrift, ksDrift, driftSweep,
+  // Monitoring.driftHistory and Monitoring.windowedDrift cannot diverge.
+
   /** (feature, mn, mx) bounds for a set of numeric columns from ONE
     * narrow columnar agg over the unmelted frame (column-pruned,
     * no explode), unpivoted to rows afterwards — identical values to
-    * aggregating a melted (feature, value) stream at 1/k the row
-    * volume. Shared by the drift family. */
+    * aggregating a [[melt]]ed (feature, v) stream at 1/k the row
+    * volume. The multi-feature marts ([[driftSweep]],
+    * Monitoring.driftHistory) join it to their melt on `feature` and bin
+    * with [[eqBin]]; psiDrift and ksDrift bin one column against their
+    * own one-row bounds. */
   private[ml] def featureBounds(df: DataFrame, feats: Seq[String]): DataFrame = {
     val aggs = feats.zipWithIndex.flatMap { case (f, i) =>
       Seq(min(col(f).cast("double")).as(s"mn_$i"),
@@ -484,6 +478,52 @@ object Features {
         struct(lit(f).as("feature"), col(s"mn_$i").as("mn"), col(s"mx_$i").as("mx"))
       }: _*)).as("s"))
       .select(col("s.feature").as("feature"), col("s.mn").as("mn"), col("s.mx").as("mx"))
+  }
+
+  /** Numeric columns melted to (feature, v) rows in one scan, v as
+    * double, with each `carry` column kept beside them under its name. */
+  private[graft] def melt(df: DataFrame, feats: Seq[String],
+                          carry: (String, Column)*): DataFrame =
+    df.select(explode(array(feats.map(f =>
+        struct(lit(f).as("feature"), col(f).cast("double").as("v"))): _*)).as("s") +:
+        carry.map { case (n, c) => c.as(n) }: _*)
+      .select(Seq(col("s.feature").as("feature"), col("s.v").as("v")) ++
+        carry.map { case (n, _) => col(n) }: _*)
+
+  /** Equi-width bin 0..nBins-1 of `v` over the `mn`/`mx` bound columns;
+    * `mx` falls in the top bin. try_divide: a CONSTANT column (mx = mn)
+    * divides by zero, which THROWS under ANSI; its NULL quotient is
+    * skipped by least, so every value lands in bin nBins-1, which is what
+    * the oracle's LEAST over DuckDB's NULL x/0 computes. */
+  private[ml] def eqBin(v: Column, nBins: Int): Column =
+    least(floor(try_divide(v - col("mn"), (col("mx") - col("mn")) / nBins)),
+      lit((nBins - 1).toDouble)).cast("int")
+
+  /** The PSI proportion floor: an empty bin's share is raised to it so
+    * ln(p_cur / p_ref) stays finite. */
+  private[ml] val PsiFloor = 1e-6
+
+  /** A bin's share c / t, floored at [[PsiFloor]]. An empty side
+    * (t = 0) has a NULL share under try_divide, which greatest skips, so
+    * it floors too, as DuckDB's GREATEST over its NULL 0/0 does. */
+  private[ml] def psiShare(c: Column, t: Column): Column =
+    greatest(try_divide(c, t), lit(PsiFloor))
+
+  /** One PSI term (p_cur − p_ref)·ln(p_cur / p_ref). */
+  private[ml] def psiTerm(pCur: Column, pRef: Column): Column =
+    (pCur - pRef) * log(pCur / pRef)
+
+  /** Binned KS steps over per-bin counts `ca`/`cb`: cumulative counts in
+    * `bin` order within `part`, and the CDF distance d at each bin edge
+    * against the sample sizes `na`/`nb` (NULL, not a throw, when a
+    * sample is empty). */
+  private[ml] def ksSteps(counts: DataFrame, part: Column, na: Column, nb: Column): DataFrame = {
+    val w = Window.partitionBy(part).orderBy(col("bin"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    counts
+      .withColumn("cum_a", sum(col("ca")).over(w))
+      .withColumn("cum_b", sum(col("cb")).over(w))
+      .withColumn("d", abs(try_divide(col("cum_a"), na) - try_divide(col("cum_b"), nb)))
   }
 
   /** Multi-feature drift sweep (detect_data_drift,
@@ -497,14 +537,10 @@ object Features {
     * overall sums route through decimals for partition-order
     * determinism. Reference half = first half of the key space. */
   def driftSweep(lineitem: DataFrame, nPsiBins: Int = 10, nKsBins: Int = 100): DataFrame = {
-    val eps = 1e-6
     val feats = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val bounds0 = lineitem.agg(floor(max(col("l_orderkey")) / 2d).cast("long").as("mid"))
-    val melted = lineitem.crossJoin(broadcast(bounds0))
-      .select(explode(array(feats.map(f =>
-        struct(lit(f).as("feature"), col(f).cast("double").as("v"))): _*)).as("s"),
-        (col("l_orderkey") <= col("mid")).cast("int").as("is_ref"))
-      .select(col("s.feature").as("feature"), col("s.v").as("v"), col("is_ref"))
+    val melted = melt(lineitem.crossJoin(broadcast(bounds0)), feats,
+      "is_ref" -> (col("l_orderkey") <= col("mid")).cast("int"))
     val fb = featureBounds(lineitem, feats)
     // One melted pass: count at the FINE granularity; the coarse PSI bins
     // derive from the fine ones (nKsBins = 10 * nPsiBins shares edges, so
@@ -512,9 +548,7 @@ object Features {
     // re-binning, hence exact oracle parity).
     require(nKsBins == 10 * nPsiBins, "KS bins must be 10x PSI bins to share one pass")
     val fineCounts = melted.join(broadcast(fb), "feature")
-      .withColumn("bin",
-        least(floor((col("v") - col("mn")) / ((col("mx") - col("mn")) / nKsBins)),
-          lit((nKsBins - 1).toDouble)).cast("int"))
+      .withColumn("bin", eqBin(col("v"), nKsBins))
       .groupBy(col("feature"), col("bin")).agg(
         sum(col("is_ref")).as("ca"), sum(lit(1) - col("is_ref")).as("cb"))
     // fineCounts feeds both the PSI and KS branches through the SAME
@@ -531,18 +565,13 @@ object Features {
     val psi = spine.join(psiCounts, Seq("feature", "bin"), "left")
       .na.fill(0.0, Seq("n_ref", "n_cur"))
       .join(broadcast(totals), "feature")
-      .withColumn("p_ref", greatest(col("n_ref") / col("t_ref"), lit(eps)))
-      .withColumn("p_cur", greatest(col("n_cur") / col("t_cur"), lit(eps)))
+      .withColumn("p_ref", psiShare(col("n_ref"), col("t_ref")))
+      .withColumn("p_cur", psiShare(col("n_cur"), col("t_cur")))
       .groupBy(col("feature"))
-      .agg(sum(((col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")))
-        .cast("decimal(20,12)")).cast("double").as("psi0"))
-    val wk = Window.partitionBy(col("feature")).orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val ks = fineCounts
-      .join(broadcast(totals), "feature")
-      .withColumn("cum_a", sum(col("ca")).over(wk))
-      .withColumn("cum_b", sum(col("cb")).over(wk))
-      .withColumn("d", abs(col("cum_a") / col("t_ref") - col("cum_b") / col("t_cur")))
+      .agg(sum(psiTerm(col("p_cur"), col("p_ref")).cast("decimal(20,12)"))
+        .cast("double").as("psi0"))
+    val ks = ksSteps(fineCounts.join(broadcast(totals), "feature"),
+        col("feature"), col("t_ref"), col("t_cur"))
       .groupBy(col("feature")).agg(max(col("d")).as("ks0"))
     val per = psi.join(ks, "feature")
     val overall = per.agg(
@@ -606,8 +635,8 @@ object Features {
     val momGrouped = melted.groupBy("feature").agg(
       count(lit(1)).as("n_rows"),
       count(c).as("n_filled"),
-      sum(c.cast("decimal(18,4)")).cast("double").as("s1"),
-      sum((c * c).cast("decimal(30,8)")).cast("double").as("s2"),
+      decSum(c).as("s1"),
+      decSumSq(c).as("s2"),
       sum((c * c * c).cast("decimal(38,8)")).cast("double").as("s3"),
       sum((c * c * c * c).cast("decimal(38,8)")).cast("double").as("s4"),
       min(c).as("min_v"), max(c).as("max_v"))

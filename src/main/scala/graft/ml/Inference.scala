@@ -204,16 +204,16 @@ object Inference {
       expr("weekday(o_orderdate)").cast("int").as("dow"))
     val ent = base.groupBy(col("o_custkey")).agg(
       count(lit(1)).as("n_orders"),
-      sum(col("amt").cast("decimal(18,4)")).cast("double").as("s1"),
-      sum((col("amt") * col("amt")).cast("decimal(30,8)")).cast("double").as("s2"),
+      decSum(col("amt")).as("s1"),
+      decSumSq(col("amt")).as("s2"),
       expr("percentile(amt, 0.5)").as("med0"),
       expr("percentile(amt, 0.95)").as("p95_0"),
       min(col("age_days")).as("recency_days"),
       max(col("age_days")).as("tenure_days"),
       // exact least-squares slope of amount over days-before-cutoff
       // (trend per day TOWARD the cutoff, so the sign is negated below)
-      sum(col("age_days").cast("decimal(18,4)")).cast("double").as("sx"),
-      sum((col("age_days") * col("age_days")).cast("decimal(30,8)")).cast("double").as("sxx"),
+      decSum(col("age_days")).as("sx"),
+      decSumSq(col("age_days")).as("sxx"),
       sum((col("age_days") * col("amt")).cast("decimal(38,8)")).cast("double").as("sxy"))
     val dow = base.groupBy(col("o_custkey"), col("dow"))
       .agg(count(lit(1)).as("c"))
@@ -223,16 +223,8 @@ object Inference {
     val slopeDen = n * col("sxx") - col("sx") * col("sx")
     val joined = ent.join(dow, "o_custkey")
       .withColumn("amount_mean", col("s1") / n)
-      // sample variance clamped at 0 (constant spend: fractionally
-      // negative under decimal->double; DuckDB's sqrt would raise)
-      // try_divide: the hoisted column evaluates for EVERY row (the
-      // n>1 guard below no longer short-circuits it), and a single-order
-      // customer's n-1 = 0 divisor THROWS under ANSI; NULL here matches
-      // DuckDB's x/0 and is masked by the guard anyway
-      .withColumn("svar",
-        try_divide(col("s2") - col("s1") * col("s1") / n, n - 1d))
-      .withColumn("amount_std",
-        when(n > 1d, sqrt(when(col("svar") < 0, lit(0d)).otherwise(col("svar")))))
+      .withColumn("svar", sampleVar(n, col("s1"), col("s2")))
+      .withColumn("amount_std", sampleSd(n, col("svar")))
       .withColumn("amount_trend",
         when(slopeDen > 0d, -(n * col("sxy") - col("sx") * col("s1")) / slopeDen)
           .otherwise(lit(0d)))
@@ -305,18 +297,14 @@ object Inference {
     val n = col("n_orders").cast("double")
     val ent = base.groupBy(col("o_custkey")).agg(
       count(lit(1)).as("n_orders"),
-      sum(col("amt").cast("decimal(18,4)")).cast("double").as("s1"),
-      sum((col("amt") * col("amt")).cast("decimal(30,8)")).cast("double").as("s2"),
+      decSum(col("amt")).as("s1"),
+      decSumSq(col("amt")).as("s2"),
       min(col("age_days")).as("recency_days"),
       max(col("age_days")).as("tenure_days"),
       countDistinct(col("wk")).as("active_weeks"))
       .withColumn("amount_mean", col("s1") / n)
-      // same clamped-sample-variance device as aggFeatureStore (see the
-      // try_divide note there: n−1 = 0 throws under ANSI without it)
-      .withColumn("svar",
-        try_divide(col("s2") - col("s1") * col("s1") / n, n - 1d))
-      .withColumn("amount_std",
-        when(n > 1d, sqrt(when(col("svar") < 0, lit(0d)).otherwise(col("svar")))))
+      .withColumn("svar", sampleVar(n, col("s1"), col("s2")))
+      .withColumn("amount_std", sampleSd(n, col("svar")))
       .withColumn("clv",
         r4(col("s1") / greatest(col("tenure_days") / lit(365.25d), lit(0.1d))))
       .withColumn("ofreq", n / greatest(col("tenure_days") / lit(30d), lit(1d)))

@@ -135,28 +135,22 @@ object Monitoring {
     * features × slices × bins regardless of data size; everything after
     * is arithmetic over that aggregate. */
   def driftHistory(lineitem: DataFrame, nSlices: Int = 8, nBins: Int = 10): DataFrame = {
-    val eps = 1e-6
     val feats = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val nChecks = nSlices - 1
     val bounds0 = lineitem.agg(max(col("l_orderkey")).cast("double").as("mxk"))
-    val melted = lineitem.crossJoin(broadcast(bounds0))
-      .select(explode(array(feats.map(f =>
-        struct(lit(f).as("feature"), col(f).cast("double").as("v"))): _*)).as("s"),
-        least(greatest(floor((col("l_orderkey") - 1) * nSlices / col("mxk")), lit(0d)),
-          lit((nSlices - 1).toDouble)).cast("int").as("slice"))
-      .select(col("s.feature").as("feature"), col("s.v").as("v"), col("slice"))
+    val melted = Features.melt(lineitem.crossJoin(broadcast(bounds0)), feats,
+      "slice" -> least(greatest(floor((col("l_orderkey") - 1) * nSlices / col("mxk")), lit(0d)),
+        lit((nSlices - 1).toDouble)).cast("int"))
     // Bounds from one narrow columnar agg over the unmelted scan — the
     // 4-way explode then runs once, for the slice/bin counts only.
     val fb = Features.featureBounds(lineitem, feats)
     val counts = melted.join(broadcast(fb), "feature")
-      .withColumn("bin",
-        least(floor((col("v") - col("mn")) / ((col("mx") - col("mn")) / nBins)),
-          lit((nBins - 1).toDouble)).cast("int"))
+      .withColumn("bin", Features.eqBin(col("v"), nBins))
       .groupBy(col("feature"), col("slice"), col("bin"))
       .agg(count(lit(1)).cast("double").as("c"))
     val totals = counts.groupBy(col("feature"), col("slice")).agg(sum(col("c")).as("t"))
     // spine over feature × check-slice × bin so empty bins contribute
-    // their eps floor exactly as the reference's replace(0, 1e-4)-style
+    // their PsiFloor exactly as the reference's replace(0, 1e-4)-style
     // guard does
     val spark = lineitem.sparkSession
     val spine = fb.select(col("feature"))
@@ -171,11 +165,11 @@ object Monitoring {
       .join(refCounts, Seq("feature", "bin"), "left").na.fill(0.0, Seq("c_ref"))
       .join(broadcast(totals), Seq("feature", "slice"))
       .join(broadcast(refTotals), Seq("feature"))
-      .withColumn("p_cur", greatest(col("c") / col("t"), lit(eps)))
-      .withColumn("p_ref", greatest(col("c_ref") / col("t_ref"), lit(eps)))
+      .withColumn("p_cur", Features.psiShare(col("c"), col("t")))
+      .withColumn("p_ref", Features.psiShare(col("c_ref"), col("t_ref")))
       .groupBy(col("feature"), col("slice"))
-      .agg(sum(((col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")))
-        .cast("decimal(20,12)")).cast("double").as("psi"))
+      .agg(sum(Features.psiTerm(col("p_cur"), col("p_ref")).cast("decimal(20,12)"))
+        .cast("double").as("psi"))
     // closed-form least-squares slope over x = slice index 1..nChecks:
     // slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²), all sums exact
     val sx = (nChecks * (nChecks + 1) / 2).toDouble
@@ -299,7 +293,6 @@ object Monitoring {
                     windowLength: String = "1 day",
                     psiAlert: Double = 0.1): DataFrame = {
     val nBins = refProps.size
-    val eps = 1e-6
     val binned = events.withColumn("bin", valueBin(col("value"), nBins))
     val counters = (0 until nBins).map(b =>
       sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"c$b"))
@@ -307,9 +300,8 @@ object Monitoring {
       .agg(counters.head, counters.tail: _*)
     val total = (0 until nBins).map(b => col(s"c$b")).reduce(_ + _)
     val psi = (0 until nBins).map { b =>
-      val pCur = greatest(col(s"c$b") / total.cast("double"), lit(eps))
-      val pRef = lit(math.max(refProps(b), eps))
-      (pCur - pRef) * log(pCur / pRef)
+      Features.psiTerm(Features.psiShare(col(s"c$b"), total.cast("double")),
+        lit(math.max(refProps(b), Features.PsiFloor)))
     }.reduce(_ + _)
     agged.select(unix_timestamp(col("window.start")).as("window_start_s"),
         total.as("n_events"), r6(psi).as("psi"))
@@ -478,24 +470,10 @@ object Monitoring {
     * Scale shape: one broadcast stats pass + one scan filtered to the
     * alert tail; output is bounded by sources × severities. */
   def alertSummary(events: DataFrame, hours: Int = 168): DataFrame = {
-    val stats = events.groupBy(col("event_type").as("et"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("s1"),
-        sum((col("value") * col("value")).cast("decimal(30,8)")).cast("double").as("s2"))
-      .withColumn("mean", col("s1") / col("n"))
-      // degenerate groups (single event: n-1 = 0; constant value: sd = 0)
-      // must drop out IDENTICALLY in both engines — both Spark's
-      // try_divide and DuckDB's `/` yield NULL on x/0, and the explicit
-      // n>1 / sd>0 guards keep that parity independent of either
-      // engine's division semantics
-      // ... and a constant group's variance, computed from decimal-exact
-      // sums cast to double, can be fractionally NEGATIVE — Spark's sqrt
-      // is NaN where DuckDB's raises, so the clamp too is on both sides
-      .withColumn("svar", try_divide(
-        col("s2") - col("s1") * col("s1") / col("n"), col("n") - 1))
-      .withColumn("sd", when(col("n") > 1,
-        sqrt(when(col("svar") < 0, lit(0d)).otherwise(col("svar")))))
+    // degenerate groups (single event: n-1 = 0; constant value: sd = 0)
+    // drop out IDENTICALLY in both engines: momentStats' sd is NULL for
+    // n<=1 and clamped at 0, and the sd>0 guard below skips both
+    val stats = graft.operators.Analytics.momentStats(events, Seq("et" -> col("event_type")))
     val zAlerts = events.join(broadcast(stats), col("event_type") === col("et"))
       .withColumn("az", when(col("sd") > 0,
         abs(r4((col("value") - col("mean")) / col("sd")))))

@@ -87,29 +87,21 @@ object Analytics {
       .orderBy("user_id")
   }
 
-  /** Z-score anomaly flagging over events.value per event_type
-    * (README "Anomaly Detection: Statistical outlier identification").
-    * Mean/variance derived from exact decimal sums so the flags are
-    * deterministic under any partitioning. */
-  /** The ONE exact-decimal moment/sd frame both anomaly marts score
-    * against: count/s1/s2 per group, sample variance via try_divide
-    * (NULL for n<=1 in both engines), clamped at 0 before sqrt (a
-    * constant group's decimal-exact sums cast to double can leave a
-    * fractionally negative variance; Spark's sqrt yields NaN where
-    * DuckDB's RAISES). A single definition so a fix to the
-    * degenerate-cell contract can never reach one mart and not the
-    * other. */
-  private def momentStats(events: DataFrame, keys: Seq[(String, Column)]): DataFrame =
+  /** The exact-decimal moment/sd frame of events.value that the z-score
+    * marts score against ([[anomalyZscore]], [[anomalySeasonal]] and
+    * [[graft.ml.Monitoring.alertSummary]]): count/s1/s2 per group, then
+    * [[sampleVar]] and [[sampleSd]] (NULL for n<=1 in both engines,
+    * clamped at 0 before sqrt). One frame, so a fix to the
+    * degenerate-cell contract reaches every z-score mart at once. */
+  private[graft] def momentStats(events: DataFrame, keys: Seq[(String, Column)]): DataFrame =
     events.groupBy(keys.map { case (n, c) => c.as(n) }: _*)
       .agg(
         count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("s1"),
-        sum((col("value") * col("value")).cast("decimal(30,8)")).cast("double").as("s2"))
+        decSum(col("value")).as("s1"),
+        decSumSq(col("value")).as("s2"))
       .withColumn("mean", col("s1") / col("n"))
-      .withColumn("svar", try_divide(
-        col("s2") - col("s1") * col("s1") / col("n"), col("n") - 1))
-      .withColumn("sd", when(col("n") > 1,
-        sqrt(when(col("svar") < 0, lit(0d)).otherwise(col("svar")))))
+      .withColumn("svar", sampleVar(col("n"), col("s1"), col("s2")))
+      .withColumn("sd", sampleSd(col("n"), col("svar")))
 
   /** The shared scored projection: z (NULL when the cell is degenerate)
     * and the |z|>2 flag, identical CASEs on both engines. */
@@ -120,6 +112,10 @@ object Analytics {
       abs(r4((col("value") - col("mean")) / col("sd"))) > 2.0)
       .otherwise(lit(false)).as("is_outlier"))
 
+  /** Z-score anomaly flagging over events.value per event_type
+    * (README "Anomaly Detection: Statistical outlier identification").
+    * Mean/variance derived from exact decimal sums so the flags are
+    * deterministic under any partitioning. */
   def anomalyZscore(events: DataFrame): DataFrame = {
     val stats = momentStats(events, Seq("et" -> col("event_type")))
     events.join(broadcast(stats), col("event_type") === col("et"))

@@ -111,9 +111,7 @@ object Diagnostics {
     * backed parallel sorts, never an in-memory map, and still exact. */
   def columnStats(lineitem: DataFrame): DataFrame = {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    val melted = lineitem.select(explode(array(cols.map(c =>
-        struct(lit(c).as("feature"), col(c).cast("double").as("v"))): _*)).as("s"))
-      .select(col("s.feature").as("feature"), col("s.v").as("v"))
+    val melted = graft.ml.Features.melt(lineitem, cols)
     // Distinct-value frame pinned by an eager localCheckpoint: its
     // lineage is the 4-way melt + shuffle over the full table, and it
     // feeds THREE consumers (the totals aggregate, the prefix-sum NDV

@@ -184,7 +184,7 @@ object EventStream {
     import spark.implicits._
     val fn = (userId: Long, rows: Iterator[SessEvent],
               state: GroupState[SessState]) => {
-      val (st, out) = foldSessions(userId, rows, state.getOption, 1800L)
+      val (st, out) = foldSessions(userId, rows, state.getOption, graft.ml.Features.SessionGapS)
       st.foreach(state.update)
       out.iterator
     }
@@ -216,7 +216,7 @@ object EventStream {
     * disorder bound (each open session then lingers in state at most
     * gap + delay past its last event). */
   def sessionizedTimeoutStream(events: org.apache.spark.sql.Dataset[SessEvent],
-                               gapS: Long = 1800L,
+                               gapS: Long = graft.ml.Features.SessionGapS,
                                watermarkDelayS: Long = 0L)
       : org.apache.spark.sql.Dataset[SessionOut] = {
     import events.sparkSession.implicits._

@@ -59,6 +59,35 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(corr.filter(isnan(col("pearson_r"))).count() == 0)
   }
 
+  test("binned drift operators are well-defined on CONSTANT columns") {
+    // mx = mn makes the equi-width bin width 0, and an empty reference or
+    // sample side makes a share's total 0: under ANSI both divisions
+    // used to THROW. Contract: no throw; a constant feature lands in the
+    // top bin on both sides, so PSI and KS read exactly 0, and an empty
+    // side floors (PSI) or leaves the KS statistic NULL
+    val events = Tables.events(spark, sf)
+    val constEvents = events.withColumn("value", lit(0.1))
+    val psi = ml.Features.psiDrift(constEvents).collect()
+    assert(psi.length == 10)
+    assert(psi.forall(_.getAs[Double]("psi_total") == 0.0))
+    val ks = ml.Features.ksDrift(constEvents).collect().head
+    assert(ks.getAs[Double]("ks_stat") == 0.0)
+    val clicks = ml.Features.ksDrift(events.filter(col("event_type") === "click"))
+      .collect().head
+    assert(clicks.getAs[Long]("n_sample_a") == 0L)
+    assert(clicks.isNullAt(clicks.fieldIndex("ks_stat")))
+    assert(ml.Features.psiDrift(events.orderBy("event_id").limit(1)).count() == 10)
+    val constLineitem = Tables.lineitem(spark, sf).withColumn("l_discount", lit(0.05))
+    val sweep = ml.Features.driftSweep(constLineitem)
+      .filter(col("feature") === "l_discount").collect().head
+    assert(sweep.getAs[Double]("psi") == 0.0 && sweep.getAs[Double]("ks_stat") == 0.0)
+    assert(!sweep.getAs[Boolean]("drift_detected"))
+    val hist = ml.Monitoring.driftHistory(constLineitem)
+      .filter(col("feature") === "l_discount").collect().head
+    assert(hist.getAs[Double]("max_psi") == 0.0 && hist.getAs[Double]("avg_psi") == 0.0)
+    assert(hist.getAs[Long]("drift_count") == 0L)
+  }
+
   test("label propagation closes a LONG chain exactly (pointer jumping)") {
     // A 400-hop chain of pairwise near-dups: one-hop-per-round
     // propagation would need ~200 double-step rounds and used to exit

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, max}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.Features
 
@@ -128,6 +129,14 @@ class FeaturesSpec extends AnyFunSuite {
     }
   }
 
+  test("sessionPaths with k above the path count covers every sessionize session") {
+    val events = Tables.events(spark, sf)
+    val nSessions = Features.sessionize(events).count()
+    val paths = Features.sessionPaths(events, k = nSessions.toInt + 1).collect()
+    assert(paths.length <= nSessions)
+    assert(paths.map(_.getAs[Long]("n_sessions")).sum == nSessions)
+  }
+
   test("funnel is monotone decreasing") {
     val f = Features.funnel(Tables.events(spark, sf)).orderBy("stage")
       .select("n_users").collect().map(_.getLong(0))
@@ -139,6 +148,18 @@ class FeaturesSpec extends AnyFunSuite {
     assert(p.length == 10)
     val refSum = p.map(_.getAs[Double]("ref_pct")).sum
     assert(math.abs(refSum - 1.0) < 0.01)
+  }
+
+  test("psiDrift of a stream against its own shifted copy is exactly 0") {
+    // reference half = the original events, current half = the same
+    // values under event ids above them: every bin share is equal, so
+    // every term is 0·ln(1)
+    val events = Tables.events(spark, sf)
+    val shift = events.agg(max(col("event_id"))).head.getLong(0) + 1
+    val twice = events.unionByName(events.withColumn("event_id", col("event_id") + shift))
+    val p = Features.psiDrift(twice).collect()
+    assert(p.length == 10)
+    assert(p.forall(r => r.getAs[Double]("psi_term") == 0.0 && r.getAs[Double]("psi_total") == 0.0))
   }
 
   test("ks stat is in [0, 1]") {

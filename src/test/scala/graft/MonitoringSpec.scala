@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, max, min}
+import graft.functions.Fns.epochS
 import graft.ml.Monitoring
 
 class MonitoringSpec extends AnyFunSuite {
@@ -100,6 +102,19 @@ class MonitoringSpec extends AnyFunSuite {
     val mx = rows.map(_.getAs[Long]("most_recent_s")).max
     rows.foreach(r =>
       assert(mx - r.getAs[Long]("most_recent_s") < 168L * 3600, "stale cell leaked in"))
+  }
+
+  test("alertSummary over the whole stream counts exactly anomalyZscore's outliers") {
+    val events = Tables.events(spark, sf)
+    val span = events.agg(epochS(max(col("ts"))) - epochS(min(col("ts")))).head.getLong(0)
+    val hours = (span / 3600).toInt + 1
+    val zAlerts = Monitoring.alertSummary(events, hours)
+      .filter(col("source") === "anomaly_zscore").collect()
+      .map(_.getAs[Long]("n_alerts")).sum
+    val outliers = graft.operators.Analytics.anomalyZscore(events)
+      .filter(col("is_outlier")).count()
+    assert(outliers > 0)
+    assert(zAlerts == outliers)
   }
 
   test("streaming performance monitor equals the batch windowed aggregate") {
